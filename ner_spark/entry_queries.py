@@ -1484,21 +1484,49 @@ def _golden(name: str) -> str:
     return os.path.join(FIXTURES_SQL_ROOT, name)
 
 
-_MENTIONS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_SESSION_TABLES: dict[tuple[str, object], object] = {}
 
 
-def _mentions(spark: SparkSession, fx: str) -> DataFrame:
-    """Full tag+extract over the fixture transcripts, cached per session
-    (several kg_* queries reuse it). Keyed on applicationId — id(spark)
-    can be reused by a NEW session after the old one is collected,
-    serving DataFrames bound to a dead SparkContext."""
-    from ner_spark.pipeline import build_mentions
+def session_table(spark: SparkSession, key, build):
+    """``build()`` once per (session, key): the session's shared inputs
+    (the KG stage graph, the alias-pair, LPA and LM-score tables) are
+    built on first use and read by every later consumer. Keyed on
+    applicationId — id(spark) can be reused by a NEW session after the
+    old one is collected — and an insert drops every other
+    applicationId's entries, whose frames are bound to a stopped
+    SparkContext."""
+    app = spark.sparkContext.applicationId
+    if (app, key) not in _SESSION_TABLES:
+        value = build()
+        for stale in [k for k in _SESSION_TABLES if k[0] != app]:
+            del _SESSION_TABLES[stale]
+        _SESSION_TABLES[(app, key)] = value
+    return _SESSION_TABLES[(app, key)]
 
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _MENTIONS_CACHE:
-        t = spark.read.parquet(os.path.join(fx, "transcripts.parquet"))
-        _MENTIONS_CACHE[key] = build_mentions(t).cache()
-    return _MENTIONS_CACHE[key]
+
+def _checkpoint(name: str, compute) -> DataFrame:
+    """``pipeline.kg_stages`` materializer: an eager localCheckpoint,
+    which also truncates the plan so consumers don't replicate the
+    extraction lineage."""
+    return compute().localCheckpoint(eager=True)
+
+
+def _kg(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The KG stage graph (``pipeline.kg_stages``) over the fixture
+    transcripts, every stage checkpointed once per session — the session
+    mirror of a published run, read by the kg_* queries and the graph
+    analytics instead of re-running tagging, linking and CC per query."""
+    from ner_spark.pipeline import kg_stages
+
+    fx = _fx(sf_dir)
+    return session_table(
+        spark,
+        ("kg", fx),
+        lambda: kg_stages(
+            spark.read.parquet(os.path.join(fx, "transcripts.parquet")),
+            _checkpoint,
+        ),
+    )
 
 
 @query(
@@ -1511,7 +1539,7 @@ def _mentions(spark: SparkSession, fx: str) -> DataFrame:
 def q_kg_tags(spark, sf_dir):
     """X3/X6 decode parity: the mapInPandas forward+Viterbi tagger vs the
     row-wise plain-Python oracle decode (joined to one string per turn)."""
-    m = _mentions(spark, _fx(sf_dir))
+    m = _kg(spark, sf_dir)["mentions"]
     return m.select(
         "conv_id", "turn_idx", F.array_join("tags", " ").alias("tags_str")
     )
@@ -1526,7 +1554,7 @@ def q_kg_tags(spark, sf_dir):
 )
 def q_kg_mentions(spark, sf_dir):
     """X1 extraction with spans (pre-dedup) vs the oracle scan."""
-    m = _mentions(spark, _fx(sf_dir))
+    m = _kg(spark, sf_dir)["mentions"]
     return m.select(
         "conv_id", "turn_idx", F.explode("mentions").alias("m")
     ).select(
@@ -1549,10 +1577,7 @@ def q_kg_mentions(spark, sf_dir):
 def q_kg_triples(spark, sf_dir):
     """The flagship M1 slice: per-turn deduped (pred, obj) pairs anchored
     as triples — the P/R≥0.95 gate surface (exact parity ⇒ P=R=1)."""
-    from ner_spark.operators.extraction import mentions_to_triples
-
-    m = _mentions(spark, _fx(sf_dir))
-    return mentions_to_triples(m)
+    return _kg(spark, sf_dir)["triples"]
 
 
 @query(
@@ -1564,10 +1589,7 @@ def q_kg_triples(spark, sf_dir):
 )
 def q_kg_relations(spark, sf_dir):
     """M2 open relation extraction vs the kg.relate_mentions oracle."""
-    from ner_spark.operators.relate import extract_relations
-
-    m = _mentions(spark, _fx(sf_dir))
-    return extract_relations(m).distinct()
+    return _kg(spark, sf_dir)["relations"].distinct()
 
 
 @query(
@@ -1580,12 +1602,7 @@ def q_kg_relations(spark, sf_dir):
 def q_kg_link_edges(spark, sf_dir):
     """M3 MinHash-LSH blocking + Jaccard link scorer vs the oracle's
     banded union-find input edges."""
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions
-
-    m = _mentions(spark, _fx(sf_dir))
-    _nodes, edges = link_edges(explode_mentions(m))
-    return edges.select(
+    return _kg(spark, sf_dir)["link_edges"].select(
         F.col("node_a").alias("src"), F.col("node_b").alias("dst")
     )
 
@@ -1599,16 +1616,7 @@ def q_kg_link_edges(spark, sf_dir):
 )
 def q_kg_canonical_map(spark, sf_dir):
     """M4 large-star/small-star connected components vs union-find."""
-    from ner_spark.operators.components import connected_components
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions
-
-    m = _mentions(spark, _fx(sf_dir))
-    nodes, edges = link_edges(explode_mentions(m))
-    a = connected_components(
-        nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-    )
-    return a.select(
+    return _kg(spark, sf_dir)["assignment"].select(
         F.col("node_id").alias("node"), F.col("component").alias("canonical")
     )
 
@@ -1621,10 +1629,9 @@ def q_kg_canonical_map(spark, sf_dir):
     """,
 )
 def q_kg_graph_nodes(spark, sf_dir):
-    """Materialized canonical entity table vs oracle (built through the
-    session-checkpointed _kg_nodes, the same frame every node consumer
-    reads)."""
-    return _kg_nodes(spark, sf_dir)
+    """Materialized canonical entity table vs oracle (the session's
+    ``nodes`` stage, the same frame every node consumer reads)."""
+    return _kg(spark, sf_dir)["nodes"]
 
 
 @query(
@@ -1635,10 +1642,10 @@ def q_kg_graph_nodes(spark, sf_dir):
     """,
 )
 def q_kg_graph_edges(spark, sf_dir):
-    """Materialized canonical edge table vs oracle (built through the
-    session-checkpointed _kg_edges, the same frame every graph-
-    analytics consumer reads)."""
-    return _kg_edges(spark, sf_dir)
+    """Materialized canonical edge table vs oracle (the session's
+    ``edges`` stage, the same frame every graph-analytics consumer
+    reads)."""
+    return _kg(spark, sf_dir)["edges"]
 
 
 @query(
@@ -1659,28 +1666,31 @@ def q_kg_incremental_edges(spark, sf_dir):
     incremental build is bit-identical to the from-scratch batch build,
     which is what lets a 10^12-turn deployment absorb a day's
     conversations without re-tagging a year of history."""
-    from ner_spark.operators.components import connected_components
     from ner_spark.operators.incremental import incremental_update
-    from ner_spark.operators.linking import link_edges
     from ner_spark.operators.relate import explode_mentions, extract_relations
+    from ner_spark.pipeline import kg_stages, kg_tail
 
-    m = _mentions(spark, _fx(sf_dir))
-    half_a = m.where(F.crc32("conv_id") % 2 == 0)
-    half_b = m.where(F.crc32("conv_id") % 2 == 1)
-
-    ex_a = explode_mentions(half_a)
-    nodes_a, edges_a = link_edges(ex_a)
-    assign_a = connected_components(
-        nodes_a, edges_a, id_col="node_id", src_col="node_a", dst_col="node_b"
+    fx = _fx(sf_dir)
+    t = spark.read.parquet(os.path.join(fx, "transcripts.parquet"))
+    base = session_table(
+        spark,
+        ("kg_history", fx),
+        lambda: kg_stages(t.where(F.crc32("conv_id") % 2 == 0), _checkpoint),
     )
+    delta = _kg(spark, sf_dir)["mentions"].where(F.crc32("conv_id") % 2 == 1)
     state = incremental_update(
-        nodes_a,
-        assign_a,
-        extract_relations(half_a).distinct(),
-        explode_mentions(half_b),
-        extract_relations(half_b).distinct(),
+        base["surface_nodes"],
+        base["assignment"],
+        base["relations"],
+        explode_mentions(delta),
+        extract_relations(delta),
     )
-    return state["edges"]
+    return kg_tail(
+        state["surfaces"],
+        state["assignment"],
+        state["relations"],
+        lambda name, compute: compute(),
+    )["edges"]
 
 
 @query(
@@ -1694,7 +1704,7 @@ def q_kg_canonical_triples(spark, sf_dir):
     """North-rule final rewrite: mention-level relations with both
     endpoints replaced by their canonical entity ids (components.py:
     canonicalize_triples) vs the union-find oracle's rewrite."""
-    return _canonical_triples(spark, sf_dir)
+    return _kg(spark, sf_dir)["canonical_triples"]
 
 
 @query(
@@ -1718,7 +1728,7 @@ def q_kg_edge_temporal(spark, sf_dir):
     from ner_spark.operators.graph import edge_temporal_profile
 
     t = spark.read.parquet(os.path.join(_fx(sf_dir), "transcripts.parquet"))
-    return edge_temporal_profile(_canonical_triples(spark, sf_dir), t)
+    return edge_temporal_profile(_kg(spark, sf_dir)["canonical_triples"], t)
 
 
 @query(
@@ -1753,7 +1763,7 @@ def q_kg_entity_pmi(spark, sf_dir):
     that a hub entity's raw co-occurrence counts can't fake."""
     from ner_spark.operators.graph import entity_cooccurrence_pmi
 
-    return entity_cooccurrence_pmi(_canonical_triples(spark, sf_dir))
+    return entity_cooccurrence_pmi(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -1800,7 +1810,7 @@ def q_kg_negative_samples(spark, sf_dir):
     from ner_spark.functions.datasets import kg_negative_samples
 
     return kg_negative_samples(
-        _kg_edges(spark, sf_dir), _kg_nodes(spark, sf_dir), k=3
+        _kg(spark, sf_dir)["edges"], _kg(spark, sf_dir)["nodes"], k=3
     )
 
 
@@ -1854,7 +1864,7 @@ def q_kg_kcore(spark, sf_dir):
     peel in DuckDB."""
     from ner_spark.operators.graph import k_core
 
-    return k_core(_kg_edges(spark, sf_dir), k=2)
+    return k_core(_kg(spark, sf_dir)["edges"], k=2)
 
 
 @query(
@@ -1887,7 +1897,7 @@ def q_kg_pred_profile(spark, sf_dir):
     objects."""
     from ner_spark.operators.graph import pred_cardinality_profile
 
-    return pred_cardinality_profile(_kg_edges(spark, sf_dir))
+    return pred_cardinality_profile(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -1921,7 +1931,7 @@ def q_kg_functional_violations(spark, sf_dir):
     cross the driver hash gate)."""
     from ner_spark.operators.graph import functional_violations
 
-    return functional_violations(_kg_edges(spark, sf_dir))
+    return functional_violations(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -1965,7 +1975,7 @@ def q_kg_current_facts(spark, sf_dir):
     from ner_spark.operators.graph import current_facts
 
     t = spark.read.parquet(os.path.join(_fx(sf_dir), "transcripts.parquet"))
-    return current_facts(_canonical_triples(spark, sf_dir), t)
+    return current_facts(_kg(spark, sf_dir)["canonical_triples"], t)
 
 
 @query(
@@ -1993,7 +2003,7 @@ def q_kg_paths_2hop(spark, sf_dir):
     inherits a quadratic bucket."""
     from ner_spark.operators.graph import paths_2hop
 
-    return paths_2hop(_kg_edges(spark, sf_dir))
+    return paths_2hop(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -2060,7 +2070,7 @@ def q_kg_mention_contexts(spark, sf_dir):
     text — no join, no Python."""
     from ner_spark.functions.datasets import mention_contexts
 
-    m = _mentions(spark, _fx(sf_dir))
+    m = _kg(spark, sf_dir)["mentions"]
     exploded = m.select(
         "conv_id", "turn_idx", "text",
         F.posexplode("mentions").alias("mention_idx", "mn"),
@@ -2094,7 +2104,7 @@ def q_kg_pred_signatures(spark, sf_dir):
     queue."""
     from ner_spark.operators.graph import pred_type_signatures
 
-    return pred_type_signatures(_kg_edges(spark, sf_dir))
+    return pred_type_signatures(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -2129,7 +2139,7 @@ def q_kg_bfs_hops(spark, sf_dir):
 
     # the edge frame feeds the node census AND the BFS loop — persist
     # so the tag→link→CC lineage executes once (same device as PMI)
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = register_persist(_kg(spark, sf_dir)["edges"])
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -2180,7 +2190,7 @@ def q_kg_adamic_adar(spark, sf_dir):
     engines."""
     from ner_spark.operators.graph import adamic_adar
 
-    return adamic_adar(_kg_edges(spark, sf_dir))
+    return adamic_adar(_kg(spark, sf_dir)["edges"])
 
 
 def _kg_walks_oracle(
@@ -2329,7 +2339,7 @@ def q_kg_community_profiles(spark, sf_dir):
     from ner_spark.operators.graph import community_profiles
 
     return community_profiles(
-        _kg_edges(spark, sf_dir),
+        _kg(spark, sf_dir)["edges"],
         labels=_kg_lpa_labels(spark, sf_dir),
     )
 
@@ -2614,7 +2624,7 @@ def q_kg_ego_edges(spark, sf_dir):
     from ner_spark.operators.graph import ego_edges
     from ner_spark.operators.linking import md5_hash60_col
 
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = register_persist(_kg(spark, sf_dir)["edges"])
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -2647,7 +2657,7 @@ def q_kg_pred_cooccurrence(spark, sf_dir):
     pair fan-out bounded by the predicate vocabulary."""
     from ner_spark.operators.graph import pred_cooccurrence
 
-    return pred_cooccurrence(_kg_edges(spark, sf_dir))
+    return pred_cooccurrence(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -2860,7 +2870,7 @@ def q_kg_bottleneck_paths(spark, sf_dir):
     from ner_spark.operators.graph import bottleneck_paths
     from ner_spark.operators.linking import md5_hash60_col
 
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = register_persist(_kg(spark, sf_dir)["edges"])
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -2956,14 +2966,13 @@ def q_kg_conv_cards(spark, sf_dir):
     the oracle aggregates the plain-Python reference goldens — a
     cross-implementation check of the whole tag→extract slice folded
     into the profile view."""
-    from ner_spark.operators.extraction import mentions_to_triples
     from ner_spark.operators.segments import conv_cards
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     t = spark.read.parquet(
         os.path.join(_fx(sf_dir), "transcripts.parquet")
     )
-    return conv_cards(t, mentions_to_triples(_mentions(spark, _fx(sf_dir))))
+    return conv_cards(t, _kg(spark, sf_dir)["triples"])
 
 
 def _curation_decisions_oracle() -> str:
@@ -3069,24 +3078,21 @@ def q_turn_latency(spark, sf_dir):
     return turn_latency(t)
 
 
-_ALIAS_PAIRS_CACHE: dict = {}
-
-
 def _kg_alias_pairs_mat(spark, sf_dir):
     """PassJoin alias-pair table (operators/alias.py:alias_pairs over
     the canonical nodes), materialized ONCE per session via an eager
-    localCheckpoint — the same production mirror as _kg_edges: the
-    curation review queue is a materialized table that both the pair
-    view and the cluster closure read, not a candidate join re-run per
-    consumer. Keyed on applicationId like the other session caches."""
+    localCheckpoint: the curation review queue is a materialized table
+    that both the pair view and the cluster closure read, not a
+    candidate join re-run per consumer."""
     from ner_spark.operators.alias import alias_pairs
 
-    key = (spark.sparkContext.applicationId, _fx(sf_dir))
-    if key not in _ALIAS_PAIRS_CACHE:
-        _ALIAS_PAIRS_CACHE[key] = alias_pairs(
-            _kg_nodes(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _ALIAS_PAIRS_CACHE[key]
+    return session_table(
+        spark,
+        ("alias_pairs", _fx(sf_dir)),
+        lambda: alias_pairs(
+            _kg(spark, sf_dir)["nodes"]
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _kg_alias_clusters_oracle() -> str:
@@ -3127,7 +3133,7 @@ def q_kg_alias_clusters(spark, sf_dir):
     from ner_spark.operators.alias import alias_clusters
 
     return alias_clusters(
-        _kg_nodes(spark, sf_dir),
+        _kg(spark, sf_dir)["nodes"],
         pairs=_kg_alias_pairs_mat(spark, sf_dir),
     )
 
@@ -3191,7 +3197,7 @@ def q_kg_entity_cards(spark, sf_dir):
     collect (bounded buffer)."""
     from ner_spark.operators.graph import entity_cards
 
-    return entity_cards(_kg_nodes(spark, sf_dir), _kg_edges(spark, sf_dir))
+    return entity_cards(_kg(spark, sf_dir)["nodes"], _kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -3230,7 +3236,7 @@ def q_kg_edge_split(spark, sf_dir):
     walks / skip-gram pairs / negative samples."""
     from ner_spark.operators.graph import edge_holdout_split
 
-    return edge_holdout_split(_kg_edges(spark, sf_dir))
+    return edge_holdout_split(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -3272,7 +3278,7 @@ def q_kg_skipgram_pairs(spark, sf_dir):
     from ner_spark.operators.graph import random_walks, walk_skipgram_pairs
 
     return walk_skipgram_pairs(
-        random_walks(_kg_edges(spark, sf_dir), as_array=True)
+        random_walks(_kg(spark, sf_dir)["edges"], as_array=True)
     )
 
 
@@ -3285,7 +3291,7 @@ def q_kg_random_walks(spark, sf_dir):
     unrolled-CTE restatement sharing only the h60 hash spec."""
     from ner_spark.operators.graph import random_walks
 
-    return random_walks(_kg_edges(spark, sf_dir))
+    return random_walks(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -3370,7 +3376,7 @@ def q_kg_edge_provenance(spark, sf_dir):
     no aggregation buffer scales with edge heat."""
     from ner_spark.operators.graph import edge_provenance
 
-    return edge_provenance(_canonical_triples(spark, sf_dir))
+    return edge_provenance(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -3539,8 +3545,7 @@ def q_kg_prf(spark, sf_dir):
     )
 
     fx = _fx(sf_dir)
-    m = _mentions(spark, fx)
-    gold = mentions_to_triples(m).select("conv_id", "turn_idx", "pred", "obj")
+    gold = _kg(spark, sf_dir)["triples"].select("conv_id", "turn_idx", "pred", "obj")
     t = spark.read.parquet(os.path.join(fx, "transcripts.parquet")).select(
         "conv_id", "turn_idx", F.split("text", " ").alias("tokens")
     )
@@ -3944,9 +3949,6 @@ def q_unigram_logprob(spark, sf_dir):
     return unigram_logprob(_t(spark, sf_dir, "documents"))
 
 
-_BIGRAM_CACHE: dict = {}
-
-
 def _bigram_scores_mat(spark, sf_dir):
     """Per-document interpolated-bigram LM scores (functions/corpus.py:
     bigram_logprob over the documents table), materialized ONCE per
@@ -3955,12 +3957,13 @@ def _bigram_scores_mat(spark, sf_dir):
     instead of re-deriving the corpus count tables per consumer."""
     from ner_spark.functions.corpus import bigram_logprob
 
-    key = (spark.sparkContext.applicationId, _fx(sf_dir))
-    if key not in _BIGRAM_CACHE:
-        _BIGRAM_CACHE[key] = bigram_logprob(
+    return session_table(
+        spark,
+        ("bigram_scores", _fx(sf_dir)),
+        lambda: bigram_logprob(
             _t(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-    return _BIGRAM_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )
 
 
 @query(
@@ -4365,7 +4368,7 @@ def q_kg_edge_decay(spark, sf_dir):
     from ner_spark.operators.graph import edge_decay_weights
 
     t = spark.read.parquet(os.path.join(_fx(sf_dir), "transcripts.parquet"))
-    return edge_decay_weights(_canonical_triples(spark, sf_dir), t, halflife_days=7)
+    return edge_decay_weights(_kg(spark, sf_dir)["canonical_triples"], t, halflife_days=7)
 
 
 def _linkpred_oracle(probe_mod: int | None = None) -> str:
@@ -4464,7 +4467,7 @@ def q_kg_linkpred_eval(spark, sf_dir):
     coverage honestly."""
     from ner_spark.operators.graph import linkpred_eval
 
-    return linkpred_eval(_kg_edges(spark, sf_dir), k=10)
+    return linkpred_eval(_kg(spark, sf_dir)["edges"], k=10)
 
 
 @query("kg_linkpred_probe", _linkpred_oracle(probe_mod=8))
@@ -4484,7 +4487,7 @@ def q_kg_linkpred_probe(spark, sf_dir):
     the test CTE."""
     from ner_spark.operators.graph import linkpred_eval
 
-    return linkpred_eval(_kg_edges(spark, sf_dir), k=10, probe_mod=8)
+    return linkpred_eval(_kg(spark, sf_dir)["edges"], k=10, probe_mod=8)
 
 
 @query("hybrid_rrf_topk", _rrf_oracle())
@@ -4698,7 +4701,7 @@ def q_kg_verbalize(spark, sf_dir):
     the training mix."""
     from ner_spark.operators.graph import verbalize_entities
 
-    return verbalize_entities(_canonical_triples(spark, sf_dir), max_facts=32)
+    return verbalize_entities(_kg(spark, sf_dir)["canonical_triples"], max_facts=32)
 
 
 @query(
@@ -4827,7 +4830,7 @@ def q_kg_cloze_questions(spark, sf_dir):
     One map-side fact aggregate + a row-local template render."""
     from ner_spark.operators.graph import cloze_questions
 
-    return cloze_questions(_canonical_triples(spark, sf_dir))
+    return cloze_questions(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -5054,68 +5057,6 @@ def q_pii_redact(spark, sf_dir):
 # ===========================================================================
 
 
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _kg_edges(spark, sf_dir) -> DataFrame:
-    """Canonical KG edge table (same chain as q_kg_graph_edges),
-    materialized ONCE per session via an eager localCheckpoint and
-    reused by the ~20 graph-analytics queries — the session-scale
-    mirror of production, where analytics read the materialized edge
-    table rather than re-running linking + connected components per
-    query (PLANS.md asserts those operators over materialized edges
-    for the same reason). The checkpoint also truncates the logical
-    plan, so windowed/self-joining consumers don't replicate the
-    extraction lineage through their plans. Keyed on applicationId
-    like _MENTIONS_CACHE (id(spark) can be reused by a new session)."""
-    from ner_spark.operators.components import connected_components
-    from ner_spark.operators.graph import materialize_edges
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions, extract_relations
-
-    fx = _fx(sf_dir)
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _EDGES_CACHE:
-        m = _mentions(spark, fx)
-        nodes, edges = link_edges(explode_mentions(m))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        _EDGES_CACHE[key] = materialize_edges(
-            extract_relations(m).distinct(), a
-        ).localCheckpoint(eager=True)
-    return _EDGES_CACHE[key]
-
-
-_NODES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _kg_nodes(spark, sf_dir) -> DataFrame:
-    """Canonical KG node table (same chain as q_kg_graph_nodes),
-    materialized once per session — the companion of _kg_edges for the
-    alias / entity-card / negative-sampling consumers."""
-    from ner_spark.operators.components import connected_components
-    from ner_spark.operators.graph import materialize_nodes
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions
-
-    fx = _fx(sf_dir)
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _NODES_CACHE:
-        m = _mentions(spark, fx)
-        nodes, edges = link_edges(explode_mentions(m))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        _NODES_CACHE[key] = materialize_nodes(nodes, a).localCheckpoint(
-            eager=True
-        )
-    return _NODES_CACHE[key]
-
-
-_LPA_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _kg_lpa_labels(spark, sf_dir) -> DataFrame:
     """3-round label-propagation community assignment over the
     canonical edges, materialized ONCE per session via an eager
@@ -5124,41 +5065,13 @@ def _kg_lpa_labels(spark, sf_dir) -> DataFrame:
     instead of re-running the iterative rounds per consumer."""
     from ner_spark.operators.graph import label_propagation
 
-    key = (spark.sparkContext.applicationId, _fx(sf_dir))
-    if key not in _LPA_CACHE:
-        _LPA_CACHE[key] = label_propagation(
-            _kg_edges(spark, sf_dir), iters=3
-        ).localCheckpoint(eager=True)
-    return _LPA_CACHE[key]
-
-
-_CT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _canonical_triples(spark, sf_dir) -> DataFrame:
-    """Canonical (conv_id, turn_idx, subj, pred, obj) triples (same
-    chain as q_kg_canonical_triples), materialized once per session —
-    the shared input of the verbalization / provenance / temporal /
-    decay consumers."""
-    from ner_spark.operators.components import (
-        canonicalize_triples,
-        connected_components,
+    return session_table(
+        spark,
+        ("lpa_labels", _fx(sf_dir)),
+        lambda: label_propagation(
+            _kg(spark, sf_dir)["edges"], iters=3
+        ).localCheckpoint(eager=True),
     )
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions, extract_relations
-
-    fx = _fx(sf_dir)
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _CT_CACHE:
-        m = _mentions(spark, fx)
-        nodes, edges = link_edges(explode_mentions(m))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        _CT_CACHE[key] = canonicalize_triples(
-            extract_relations(m), a, nodes
-        ).localCheckpoint(eager=True)
-    return _CT_CACHE[key]
 
 
 @query(
@@ -5191,7 +5104,7 @@ def q_kg_degree_stats(spark, sf_dir):
     golden edge table."""
     from ner_spark.operators.graph import degree_stats
 
-    return degree_stats(_kg_edges(spark, sf_dir))
+    return degree_stats(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -5216,7 +5129,7 @@ def q_kg_triangles(spark, sf_dir):
     behavior — the plan difference IS the point."""
     from ner_spark.operators.graph import triangle_count
 
-    return triangle_count(_kg_edges(spark, sf_dir))
+    return triangle_count(_kg(spark, sf_dir)["edges"])
 
 
 def _kg_pagerank_oracle(iters: int = 5, damping: float = 0.85) -> str:
@@ -5274,7 +5187,7 @@ def q_kg_pagerank(spark, sf_dir):
     unrolled pure-SQL restatement in DuckDB."""
     from ner_spark.operators.graph import pagerank
 
-    return pagerank(_kg_edges(spark, sf_dir))
+    return pagerank(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -5414,7 +5327,7 @@ def q_kg_supergraph(spark, sf_dir):
     from ner_spark.operators.graph import supergraph
 
     return supergraph(
-        _kg_edges(spark, sf_dir),
+        _kg(spark, sf_dir)["edges"],
         iters=3,
         labels=_kg_lpa_labels(spark, sf_dir),
     )
@@ -5465,7 +5378,7 @@ def q_kg_node_features(spark, sf_dir):
     join back to the node table."""
     from ner_spark.operators.graph import node_features
 
-    return node_features(_kg_nodes(spark, sf_dir), _kg_edges(spark, sf_dir))
+    return node_features(_kg(spark, sf_dir)["nodes"], _kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -5592,7 +5505,7 @@ def q_kg_entity_salience(spark, sf_dir):
     window."""
     from ner_spark.operators.graph import entity_salience
 
-    return entity_salience(_canonical_triples(spark, sf_dir))
+    return entity_salience(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -5656,7 +5569,7 @@ def q_kg_motif_census(spark, sf_dir):
     quadratic but exact at fixture scale."""
     from ner_spark.operators.graph import motif_census
 
-    e = _kg_edges(spark, sf_dir)
+    e = _kg(spark, sf_dir)["edges"]
     rev = e.where(
         F.substring(
             F.md5(F.concat_ws(">", "src_entity", "dst_entity")), 1, 1
@@ -5699,7 +5612,7 @@ def q_kg_fact_confidence(spark, sf_dir):
     no second corpus pass, no window."""
     from ner_spark.operators.graph import fact_confidence
 
-    return fact_confidence(_canonical_triples(spark, sf_dir))
+    return fact_confidence(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -5781,7 +5694,7 @@ def q_kg_entity_bursts(spark, sf_dir):
     t = spark.read.parquet(
         os.path.join(_fx(sf_dir), "transcripts.parquet")
     )
-    return entity_bursts(_canonical_triples(spark, sf_dir), t)
+    return entity_bursts(_kg(spark, sf_dir)["canonical_triples"], t)
 
 
 def _lm_oracle(terms: list[str], k: int = 10, mu: float = 2000.0) -> str:
@@ -6278,7 +6191,7 @@ def q_kg_transitive_closure(spark, sf_dir):
     from ner_spark.operators.graph import transitive_closure
 
     return transitive_closure(
-        _kg_edges(spark, sf_dir),
+        _kg(spark, sf_dir)["edges"],
         preds=("affiliated_with", "based_in", "located_in"),
         max_hops=10,
     )
@@ -6437,7 +6350,7 @@ def q_kg_subject_completeness(spark, sf_dir):
     from ner_spark.operators.graph import subject_completeness
 
     return subject_completeness(
-        _kg_nodes(spark, sf_dir), _kg_edges(spark, sf_dir), min_share_pct=50
+        _kg(spark, sf_dir)["nodes"], _kg(spark, sf_dir)["edges"], min_share_pct=50
     )
 
 
@@ -7079,7 +6992,7 @@ def q_kg_pred_algebra(spark, sf_dir):
     schema-bounded (|preds-on-pair|²), never entity-degree-bounded."""
     from ner_spark.operators.graph import pred_algebra
 
-    return pred_algebra(_canonical_triples(spark, sf_dir))
+    return pred_algebra(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -7122,7 +7035,7 @@ def q_kg_rule_confidence(spark, sf_dir):
     concentrates a quadratic task."""
     from ner_spark.operators.graph import rule_confidence
 
-    return rule_confidence(_canonical_triples(spark, sf_dir))
+    return rule_confidence(_kg(spark, sf_dir)["canonical_triples"])
 
 
 @query(
@@ -7168,7 +7081,7 @@ def q_kg_fact_history(spark, sf_dir):
     from ner_spark.operators.graph import fact_history
 
     t = spark.read.parquet(os.path.join(_fx(sf_dir), "transcripts.parquet"))
-    return fact_history(_canonical_triples(spark, sf_dir), t)
+    return fact_history(_kg(spark, sf_dir)["canonical_triples"], t)
 
 
 @query(
@@ -8247,7 +8160,7 @@ def q_kg_ppr(spark, sf_dir):
     from ner_spark.operators.graph import personalized_pagerank
     from ner_spark.operators.linking import md5_hash60_col
 
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = register_persist(_kg(spark, sf_dir)["edges"])
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -8319,7 +8232,7 @@ def q_kg_hits(spark, sf_dir):
     hits_scores) vs an unrolled pure-SQL restatement."""
     from ner_spark.operators.graph import hits_scores
 
-    return hits_scores(_kg_edges(spark, sf_dir))
+    return hits_scores(_kg(spark, sf_dir)["edges"])
 
 
 @query(
@@ -8356,7 +8269,7 @@ def q_kg_neighbor_jaccard(spark, sf_dir):
     the wedge join is the salted skew-split self-join."""
     from ner_spark.operators.graph import neighbor_jaccard
 
-    return neighbor_jaccard(_kg_edges(spark, sf_dir))
+    return neighbor_jaccard(_kg(spark, sf_dir)["edges"])
 
 
 @query(

@@ -650,9 +650,14 @@ def perplexity_buckets(
     """
     # a caller holding the materialized per-doc LM scores (the LM score
     # table is a published artifact in a curation stack) passes it via
-    # ``scores``; otherwise derive in-line. When ``scores`` is passed,
-    # ``lam_micro``/``text_col`` are ignored — the scores are whatever
-    # the published table was built with.
+    # ``scores``; otherwise derive in-line. The scores are whatever the
+    # published table was built with, so the LM parameters must stay at
+    # their defaults.
+    if scores is not None and (lam_micro, text_col) != (800_000, "text"):
+        raise ValueError(
+            "perplexity_buckets: scores= is a materialized score table; "
+            "lam_micro/text_col would be ignored"
+        )
     if scores is None:
         scores = bigram_logprob(
             df, lam_micro=lam_micro, id_col=id_col, text_col=text_col

@@ -1140,6 +1140,24 @@ def random_walks(
     return cur.select("walk_id", F.array_join("path", "->").alias("path"))
 
 
+def _lpa_labels(
+    edges: DataFrame, iters: int, labels: DataFrame | None, caller: str
+) -> DataFrame:
+    """``labels`` when the caller holds the materialized community
+    assignment (``iters`` must then stay at its default, 3: the
+    assignment is whatever the published table holds), else a persisted
+    in-line ``label_propagation``."""
+    from ner_spark.functions.dedup import register_persist
+
+    if labels is None:
+        return register_persist(label_propagation(edges, iters=iters))
+    if iters != 3:
+        raise ValueError(
+            f"{caller}: labels= is a materialized assignment; iters would be ignored"
+        )
+    return labels
+
+
 def community_profiles(
     edges: DataFrame,
     iters: int = 3,
@@ -1170,10 +1188,7 @@ def community_profiles(
     # a caller holding the materialized community assignment (the
     # production shape — LPA labels are a published table the profile
     # job reads) passes it via ``labels``; otherwise derive in-line.
-    # When ``labels`` is passed, ``iters`` is ignored — the assignment
-    # is whatever the published table holds.
-    if labels is None:
-        labels = register_persist(label_propagation(edges, iters=iters))
+    labels = _lpa_labels(edges, iters, labels, "community_profiles")
     # und feeds only the e_lab derivation (itself persisted): no persist,
     # it would burn an LRU slot without a second consumer
     und = undirected_edges(edges)
@@ -1880,12 +1895,9 @@ def supergraph(
     over anything unbounded; self-loop node edges are dropped up front
     exactly as ``label_propagation`` itself drops them.
     """
-    from ner_spark.functions.dedup import register_persist
-
     # same published-table contract as community_profiles: pass the
     # materialized assignment when one exists
-    if labels is None:
-        labels = register_persist(label_propagation(edges, iters=iters))
+    labels = _lpa_labels(edges, iters, labels, "supergraph")
     ls = labels.select(
         F.col("entity_id").alias("src_entity"),
         F.col("community").alias("src_community"),

@@ -68,7 +68,6 @@ from pyspark.sql import functions as F
 
 from ner_spark.kg import JACCARD_THRESHOLD
 from ner_spark.operators.components import connected_components
-from ner_spark.operators.graph import materialize_edges, materialize_nodes
 from ner_spark.operators.linking import (
     jaccard_col,
     mention_nodes,
@@ -187,18 +186,16 @@ def incremental_update(
     threshold: float = JACCARD_THRESHOLD,
     max_band_bucket: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Merge one delta into the KG state; returns the new state plus the
-    re-materialized canonical tables.
+    """Merge one delta into the KG state; returns the new state.
 
     Delta invariant (the production contract): delta conversations are
     disjoint from history — transcripts are append-only, so
     ``delta_relations`` shares no (conv_id, turn_idx) with
     ``old_relations``.
 
-    Returns ``{surfaces, assignment, relations, nodes, edges}`` — the
-    first three are next run's state; ``nodes``/``edges`` are the
-    publishable canonical tables, bit-identical to a batch build over
-    history ∪ delta.
+    Returns ``{surfaces, assignment, relations}`` — the next run's
+    state. The canonical tables over it (``pipeline.kg_tail``) are
+    bit-identical to a batch build over history ∪ delta.
     """
     delta_surfaces = mention_nodes(delta_mentions_exploded)
     surfaces = merge_surfaces(old_surfaces, delta_surfaces).localCheckpoint(
@@ -215,10 +212,4 @@ def incremental_update(
     # per-turn list semantics; consumers (materialize_edges,
     # canonicalize_triples) dedup internally where their spec requires it
     relations = old_relations.unionByName(delta_relations)
-    return {
-        "surfaces": surfaces,
-        "assignment": assignment,
-        "relations": relations,
-        "nodes": materialize_nodes(surfaces, assignment),
-        "edges": materialize_edges(relations, assignment),
-    }
+    return {"surfaces": surfaces, "assignment": assignment, "relations": relations}

@@ -8,8 +8,16 @@ transcripts → [ingest] repartitionByRange(conv_id, turn_idx)
            → [link]    normalize + MinHash-LSH + Jaccard scorer (M3)
            → [cc]      large-star/small-star canonical ids (M4)
            → [graph]   nodes / edges / canonical triples materialized
-with every stage published through the manifest protocol (M5) so a rerun
-resumes from the last complete stage.
+
+``kg_stages`` is the only place this stage graph is written. It takes a
+materializer ``stage(name, compute) -> DataFrame``: ``compute()`` builds
+stage ``name`` lazily from the frames earlier ``stage`` calls returned,
+and ``stage`` returns the frame the later stages read — it may skip
+``compute`` when the stage is already materialized. ``run_pipeline``
+passes the manifest protocol (M5), which publishes every stage so a
+rerun resumes from the last complete stage; the entry queries pass an
+eager ``localCheckpoint``. ``run_incremental`` merges a delta into a
+published run and shares the graph's tail (``kg_tail``).
 
 Skew story (north_star): the hot conv_id (fixture: ~30% of all turns) is
 split across range partitions because the range key includes turn_idx —
@@ -23,18 +31,23 @@ check in tests.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import functools
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ner_spark.operators.components import canonicalize_triples, connected_components
-from ner_spark.operators.extraction import extract_mentions_bio, mentions_to_triples
+from ner_spark.operators.extraction import mentions_to_triples
 from ner_spark.operators.graph import materialize_edges, materialize_nodes
 from ner_spark.operators.linking import link_edges
 from ner_spark.operators.manifest import run_stage
 from ner_spark.operators.relate import explode_mentions, extract_relations
-from ner_spark.operators.tagging import tag_and_extract, tag_turns, with_tokens
+from ner_spark.operators.tagging import tag_and_extract
+
+# stage(name, compute) -> the materialized frame of stage ``name``
+Stage = Callable[[str, Callable[[], DataFrame]], DataFrame]
 
 
 @dataclass
@@ -42,10 +55,6 @@ class PipelineConfig:
     out_dir: str
     run_id: str = "run-0"
     resume: bool = True
-    link_threshold: float = 0.55
-    max_band_bucket: int | None = None
-    range_partitions: int | None = None
-    extra: dict = field(default_factory=dict)
 
 
 STAGES = (
@@ -101,16 +110,70 @@ def build_mentions(transcripts: DataFrame) -> DataFrame:
     )
 
 
+def kg_stages(transcripts: DataFrame, stage: Stage) -> dict[str, DataFrame]:
+    """The batch KG stage graph over ``transcripts``: the nine ``STAGES``
+    in order, each materialized by ``stage(name, compute)``. Returns the
+    materialized frames keyed by stage name."""
+    out: dict[str, DataFrame] = {}
+    mentions = out["mentions"] = stage(
+        "mentions", lambda: build_mentions(transcripts)
+    )
+    out["triples"] = stage("triples", lambda: mentions_to_triples(mentions))
+    relations = out["relations"] = stage(
+        "relations", lambda: extract_relations(mentions)
+    )
+    # link_edges() eagerly localCheckpoints the node dimension, so run it
+    # on the first compute only: a materializer that skips both linking
+    # stages (a resumed run) never pays the linking job.
+    links = functools.cache(lambda: link_edges(explode_mentions(mentions)))
+    surfaces = out["surface_nodes"] = stage("surface_nodes", lambda: links()[0])
+    edges = out["link_edges"] = stage("link_edges", lambda: links()[1])
+    assignment = out["assignment"] = stage(
+        "assignment",
+        lambda: connected_components(
+            surfaces, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
+        ),
+    )
+    out.update(kg_tail(surfaces, assignment, relations, stage))
+    return out
+
+
+def kg_tail(
+    surfaces: DataFrame, assignment: DataFrame, relations: DataFrame, stage: Stage
+) -> dict[str, DataFrame]:
+    """The ``nodes``, ``edges`` and ``canonical_triples`` stages over a
+    surface dimension, its canonical assignment and the relations fact
+    table — shared by the batch graph and the incremental merge."""
+    return {
+        "nodes": stage("nodes", lambda: materialize_nodes(surfaces, assignment)),
+        "edges": stage("edges", lambda: materialize_edges(relations, assignment)),
+        "canonical_triples": stage(
+            "canonical_triples",
+            lambda: canonicalize_triples(relations, assignment, surfaces),
+        ),
+    }
+
+
+def _manifest_stage(
+    spark: SparkSession, cfg: PipelineConfig, fingerprint: str
+) -> Stage:
+    """The manifest materializer: publish each stage under ``cfg.run_id``,
+    resuming a stage whose manifest row is complete under ``fingerprint``."""
+    return lambda name, compute: run_stage(
+        spark, cfg.out_dir, cfg.run_id, name, compute,
+        resume=cfg.resume, fingerprint=fingerprint,
+    )
+
+
 def run_pipeline(
     spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig
 ) -> dict[str, DataFrame]:
-    """Run all stages under the manifest/resume protocol; returns the
+    """Run ``kg_stages`` under the manifest/resume protocol; returns the
     published DataFrames keyed by stage name. Every stage's manifest row
     is fingerprinted with the active weights-artifact version, so a
     model upgrade (new artifact) invalidates resumes of the whole run."""
     from ner_spark.model.artifact import verify_executor_weights
 
-    out: dict[str, DataFrame] = {}
     # one trivial probe job proves the executor workers resolve the SAME
     # weights version the manifest is about to be stamped with. Runs
     # unconditionally: the mismatch can point either way (driver sees an
@@ -118,63 +181,7 @@ def run_pipeline(
     # at an artifact the driver never resolved — both would publish data
     # under the wrong fingerprint).
     fp = verify_executor_weights(spark)
-
-    def _stage(name, compute):
-        return run_stage(
-            spark, cfg.out_dir, cfg.run_id, name, compute,
-            resume=cfg.resume, fingerprint=fp,
-        )
-
-    mentions = _stage("mentions", lambda: build_mentions(transcripts))
-    out["mentions"] = mentions
-
-    out["triples"] = _stage("triples", lambda: mentions_to_triples(mentions))
-
-    relations = _stage("relations", lambda: extract_relations(mentions))
-    out["relations"] = relations
-
-    # -- linking: surface nodes + scored link edges ------------------------
-    # link_edges() eagerly materializes the node dimension
-    # (localCheckpoint), so construct it LAZILY on first actual compute:
-    # run_stage stays the single authority on whether a stage recomputes,
-    # and a fully-resumed run never pays the linking job it skips.
-    _link_memo: dict = {}
-
-    def _links():
-        if "v" not in _link_memo:
-            _link_memo["v"] = link_edges(
-                explode_mentions(mentions),
-                threshold=cfg.link_threshold,
-                max_band_bucket=cfg.max_band_bucket,
-            )
-        return _link_memo["v"]
-
-    surface_nodes = _stage("surface_nodes", lambda: _links()[0])
-    links = _stage("link_edges", lambda: _links()[1])
-    out["surface_nodes"], out["link_edges"] = surface_nodes, links
-
-    # -- canonicalization --------------------------------------------------
-    assignment = _stage(
-        "assignment",
-        lambda: connected_components(
-            surface_nodes, links,
-            id_col="node_id", src_col="node_a", dst_col="node_b",
-        ),
-    )
-    out["assignment"] = assignment
-
-    # -- graph materialization ---------------------------------------------
-    out["nodes"] = _stage(
-        "nodes", lambda: materialize_nodes(surface_nodes, assignment)
-    )
-    out["edges"] = _stage(
-        "edges", lambda: materialize_edges(relations, assignment)
-    )
-    out["canonical_triples"] = _stage(
-        "canonical_triples",
-        lambda: canonicalize_triples(relations, assignment, surface_nodes),
-    )
-    return out
+    return kg_stages(transcripts, _manifest_stage(spark, cfg, fp))
 
 
 def run_incremental(
@@ -187,10 +194,7 @@ def run_incremental(
     KG state, producing a full new run (same stage layout as
     ``run_pipeline``) that the next delta chains from — without
     re-tagging history (operators/incremental.py has the exactness
-    argument; tests prove bit-identity with a batch rebuild under the
-    default ``max_band_bucket=None`` — with a stop-band cap the chain
-    is deliberately monotone where a rebuild would drop an over-cap
-    bucket's old links, see the scope note in operators/incremental.py).
+    argument; tests prove bit-identity with a batch rebuild).
 
     Carried state is read from ``base_run_id``'s published
     ``surface_nodes`` / ``assignment`` / ``relations`` stages, and the
@@ -217,72 +221,45 @@ def run_incremental(
 
     fp = verify_executor_weights(spark)
 
-    def _base(stage: str) -> DataFrame:
+    def _base(name: str) -> DataFrame:
         if not stage_complete(
-            spark, cfg.out_dir, base_run_id, stage, fingerprint=fp
+            spark, cfg.out_dir, base_run_id, name, fingerprint=fp
         ):
             raise RuntimeError(
-                f"base run '{base_run_id}' stage '{stage}' is not complete "
+                f"base run '{base_run_id}' stage '{name}' is not complete "
                 f"under weights fingerprint '{fp}' — the base must be a "
                 "finished run of the SAME model artifact (re-run it after "
                 "a model upgrade; incremental merge across model versions "
                 "would mix extractions)"
             )
         return spark.read.parquet(
-            stage_data_path(cfg.out_dir, base_run_id, stage)
+            stage_data_path(cfg.out_dir, base_run_id, name)
         )
 
     old_surfaces = _base("surface_nodes")
     old_assignment = _base("assignment")
     old_relations = _base("relations")
 
+    stage = _manifest_stage(spark, cfg, fp)
     out: dict[str, DataFrame] = {}
-
-    def _stage(name, compute):
-        return run_stage(
-            spark, cfg.out_dir, cfg.run_id, name, compute,
-            resume=cfg.resume, fingerprint=fp,
-        )
-
-    mentions_d = _stage("mentions", lambda: build_mentions(delta_transcripts))
-    out["mentions"] = mentions_d
-    out["triples"] = _stage("triples", lambda: mentions_to_triples(mentions_d))
-
+    mentions = out["mentions"] = stage(
+        "mentions", lambda: build_mentions(delta_transcripts)
+    )
+    out["triples"] = stage("triples", lambda: mentions_to_triples(mentions))
     # incremental_update eagerly localCheckpoints the merged surface
-    # dimension, so construct it LAZILY on first actual compute (same
-    # memo device as run_pipeline's linking pair): run_stage stays the
-    # single authority on whether a stage recomputes, and a fully-
-    # resumed incremental re-run never pays the merge job it skips.
-    _inc_memo: dict = {}
-
-    def _inc():
-        if "v" not in _inc_memo:
-            _inc_memo["v"] = incremental_update(
-                old_surfaces,
-                old_assignment,
-                old_relations,
-                explode_mentions(mentions_d),
-                extract_relations(mentions_d),
-                threshold=cfg.link_threshold,
-                max_band_bucket=cfg.max_band_bucket,
-            )
-        return _inc_memo["v"]
-
-    relations = _stage("relations", lambda: _inc()["relations"])
-    out["relations"] = relations
-    surfaces = _stage("surface_nodes", lambda: _inc()["surfaces"])
-    out["surface_nodes"] = surfaces
-    assignment = _stage("assignment", lambda: _inc()["assignment"])
-    out["assignment"] = assignment
-
-    out["nodes"] = _stage(
-        "nodes", lambda: materialize_nodes(surfaces, assignment)
+    # dimension: run it on the first compute only, as kg_stages does
+    # with linking.
+    inc = functools.cache(
+        lambda: incremental_update(
+            old_surfaces,
+            old_assignment,
+            old_relations,
+            explode_mentions(mentions),
+            extract_relations(mentions),
+        )
     )
-    out["edges"] = _stage(
-        "edges", lambda: materialize_edges(relations, assignment)
-    )
-    out["canonical_triples"] = _stage(
-        "canonical_triples",
-        lambda: canonicalize_triples(relations, assignment, surfaces),
-    )
+    relations = out["relations"] = stage("relations", lambda: inc()["relations"])
+    surfaces = out["surface_nodes"] = stage("surface_nodes", lambda: inc()["surfaces"])
+    assignment = out["assignment"] = stage("assignment", lambda: inc()["assignment"])
+    out.update(kg_tail(surfaces, assignment, relations, stage))
     return out

@@ -59,6 +59,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
     for k, v in (extra_conf or {}).items():

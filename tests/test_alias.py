@@ -146,3 +146,13 @@ def test_alias_clusters_transitive_chain(spark):
         "e2": ("e1", 3),
         "e3": ("e1", 3),
     }
+    # a materialized pair table gives the same clusters; with a
+    # non-default pair parameter it would be silently ignored, so raise
+    mat = alias_pairs(names)
+    assert {
+        r.entity_id: (r.cluster_id, r.n_members)
+        for r in alias_clusters(names, pairs=mat).collect()
+    } == got
+    for bad in ({"name_col": "entity_id"}, {"block_col": None}, {"max_dist": 1}):
+        with pytest.raises(ValueError, match="ignored"):
+            alias_clusters(names, pairs=mat, **bad)

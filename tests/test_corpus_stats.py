@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -280,6 +281,16 @@ def test_perplexity_buckets_rank_partition(spark):
         for r in perplexity_buckets(docs, bucket_size=3).collect()
     }
     assert small == {(r.doc_id, r.decile, r.band) for r in out}
+    # a materialized score table gives the same buckets; with a
+    # non-default LM parameter it would be silently ignored, so raise
+    scores = bigram_logprob(docs)
+    assert {
+        (r.doc_id, r.decile, r.band)
+        for r in perplexity_buckets(docs, scores=scores).collect()
+    } == small
+    for bad in ({"lam_micro": 500_000}, {"text_col": "body"}):
+        with pytest.raises(ValueError, match="ignored"):
+            perplexity_buckets(docs, scores=scores, **bad)
 
 
 def test_novelty_scores_prefix_order(spark):

@@ -754,6 +754,16 @@ def test_community_profiles_consistent_with_lpa(spark):
         exp[c] = (n, internal[c], boundary[c], top, dens)
     assert got == exp
     assert sum(v[0] for v in got.values()) == len(labels)
+    # a materialized assignment gives the same profiles; with a
+    # non-default iters it would be silently ignored, so raise
+    lpa = label_propagation(edges, iters=3)
+    assert {
+        r.community: (r.n_nodes, r.n_internal, r.n_boundary, r.top_pred,
+                      r.density_micro)
+        for r in community_profiles(edges, labels=lpa).collect()
+    } == got
+    with pytest.raises(ValueError, match="iters"):
+        community_profiles(edges, iters=2, labels=lpa)
     # degenerate: empty graph -> no profiles
     schema = "src_entity string, pred string, dst_entity string, n_turns bigint"
     assert community_profiles(spark.createDataFrame([], schema)).count() == 0
@@ -1255,6 +1265,9 @@ def test_supergraph_contraction(spark):
         (cb, cb): (3, 15, "makes"),
         (ca, cb): (1, 1, "bridge"),
     }
+    # labels= with a non-default iters would silently ignore iters
+    with pytest.raises(ValueError, match="iters"):
+        supergraph(edges, iters=5, labels=label_propagation(edges, iters=3))
 
 
 def test_node_features_assembly(spark):

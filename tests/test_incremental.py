@@ -6,33 +6,38 @@ from pyspark.sql import functions as F
 
 from ner_spark.fixtures.build import build_fixtures
 from ner_spark.operators.components import connected_components
-from ner_spark.operators.graph import materialize_edges, materialize_nodes
 from ner_spark.operators.incremental import incremental_update
 from ner_spark.operators.linking import link_edges, mention_nodes
 from ner_spark.operators.relate import explode_mentions, extract_relations
-from ner_spark.pipeline import build_mentions
+from ner_spark.pipeline import build_mentions, kg_tail
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _with_tail(state):
+    """Carried state plus the canonical tables the pipeline derives from
+    it (``pipeline.kg_tail``, unmaterialized)."""
+    tail = kg_tail(
+        state["surfaces"],
+        state["assignment"],
+        state["relations"],
+        lambda name, compute: compute(),
+    )
+    return {**state, **tail}
+
+
 def _batch_state(m):
     """Batch-build the carried state + canonical tables from a mention
-    frame — the exact chain of q_kg_graph_nodes/q_kg_graph_edges."""
+    frame — the chain of ``pipeline.kg_stages`` after tagging."""
     ex = explode_mentions(m)
     nodes, edges = link_edges(ex)
     a = connected_components(
         nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
     )
     rel = extract_relations(m).distinct()
-    return {
-        "surfaces": nodes,
-        "assignment": a,
-        "relations": rel,
-        "nodes": materialize_nodes(nodes, a),
-        "edges": materialize_edges(rel, a),
-    }
+    return _with_tail({"surfaces": nodes, "assignment": a, "relations": rel})
 
 
 def test_incremental_matches_batch(spark):
@@ -45,13 +50,13 @@ def test_incremental_matches_batch(spark):
     assert half_a.count() > 0 and half_b.count() > 0
 
     state = _batch_state(half_a)
-    inc = incremental_update(
+    inc = _with_tail(incremental_update(
         state["surfaces"],
         state["assignment"],
         state["relations"],
         explode_mentions(half_b),
         extract_relations(half_b).distinct(),
-    )
+    ))
     full = _batch_state(m)
 
     assert _rows(inc["assignment"]) == _rows(full["assignment"])
@@ -78,13 +83,13 @@ def test_incremental_empty_delta_is_identity(spark):
     m = build_mentions(t).where(F.crc32("conv_id") % 4 == 0).cache()
     state = _batch_state(m)
     empty = m.where(F.lit(False))
-    inc = incremental_update(
+    inc = _with_tail(incremental_update(
         state["surfaces"],
         state["assignment"],
         state["relations"],
         explode_mentions(empty),
         extract_relations(empty).distinct(),
-    )
+    ))
     assert _rows(inc["nodes"]) == _rows(state["nodes"])
     assert _rows(inc["edges"]) == _rows(state["edges"])
     assert _rows(inc["assignment"]) == _rows(state["assignment"])
@@ -136,13 +141,13 @@ def test_delta_merging_two_old_entities(spark):
         .count()
         == 2
     )
-    inc = incremental_update(
+    inc = _with_tail(incremental_update(
         state["surfaces"],
         state["assignment"],
         state["relations"],
         explode_mentions(delta),
         extract_relations(delta).distinct(),
-    )
+    ))
     full = _batch_state(mk([r for df in (hist, delta) for r in df.collect()]))
     assert _rows(inc["assignment"]) == _rows(full["assignment"])
     assert _rows(inc["edges"]) == _rows(full["edges"])

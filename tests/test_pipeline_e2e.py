@@ -119,10 +119,13 @@ def test_hot_conv_salting_bounds_groups(spark, fixtures_small):
 
 def test_full_pipeline_canonical_triples_stage(spark, fixtures_small, tmp_path_factory):
     """run_pipeline materializes the canonical_triples stage and it
-    matches the union-find oracle golden."""
+    matches the union-find oracle golden; the same stage graph under the
+    entry queries' localCheckpoint materializer gives the published
+    rows of every link/CC/graph stage."""
     import os
 
-    from ner_spark.pipeline import PipelineConfig, run_pipeline
+    from ner_spark.entry_queries import _checkpoint
+    from ner_spark.pipeline import PipelineConfig, kg_stages, run_pipeline
 
     out_dir = str(tmp_path_factory.mktemp("kgout"))
     t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
@@ -142,6 +145,13 @@ def test_full_pipeline_canonical_triples_stage(spark, fixtures_small, tmp_path_f
         .collect()
     }
     assert got == want and len(got) > 0
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    checkpointed = kg_stages(t, _checkpoint)
+    for stage in ("link_edges", "assignment", "nodes", "edges", "canonical_triples"):
+        assert rows(checkpointed[stage]) == rows(res[stage]), stage
 
 
 def test_spark_submit_py_files_zip_channel(tmp_path, fixtures_small):
