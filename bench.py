@@ -121,7 +121,7 @@ def _kg_triples_count(spark, fx_dir: str) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     sf_num = float(sf_name[2:]) if sf_name.startswith("sf") else 0.1
 

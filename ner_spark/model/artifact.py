@@ -175,7 +175,8 @@ def verify_executor_weights(spark) -> str:
     forgotten), or ``spark.executorEnv`` points executors at an artifact
     the driver never resolved — both would publish data under the wrong
     manifest fingerprint. Called unconditionally by ``run_pipeline``;
-    costs one trivial job.
+    costs two small jobs (the probe's round-robin shuffle, then the
+    collect).
 
     Coverage is a SAMPLE of the worker pool (4 probe rows per core —
     round-robin repartitioning doesn't guarantee one row per worker, let

@@ -1,33 +1,42 @@
 """M5 — per-partition lineage manifest + idempotent stage resume.
 
-The reference's only lineage is an append-only run log
-(/root/reference/train_lstm_crf.py:13-24, ckpt/run.log) plus TF
-checkpoints for restart (train_lstm_crf.py:198-200). The north_star
-upgrades that to a **manifest table**: one row per (run, stage,
-partition) with input/output row counts and a status, so any stage of
-the pipeline resumes idempotently (FIXTURES.md F8).
+The manifest is an append-only table with one row per (run, stage,
+partition): output row counts, a status and the fingerprint the stage
+ran under, so any stage of the pipeline resumes idempotently
+(FIXTURES.md F8).
 
 Protocol (write-audit-publish, Iceberg-style without requiring an
 Iceberg catalog in the sandbox — plain parquet dirs stand in):
 
-1. a stage computes its output DataFrame and writes it to
-   ``<out>/<stage>/data`` with ``mode=overwrite`` (atomic publish per
-   stage directory);
-2. per-partition metrics are collected from the *written* data
-   (``spark_partition_id()`` groupBy — this is the lineage evidence, not
-   an estimate) and appended to the manifest with status ``complete``;
-3. on resume, a stage whose manifest shows ``complete`` for this run and
-   whose data dir exists is **skipped** and its output re-read — making
-   re-runs idempotent and partial failures re-entrant: an interrupted
-   stage has no ``complete`` row, so it recomputes and its overwrite
-   replaces any torn output.
+1. a publish first appends a ``superseded`` marker, then writes the
+   stage's output to ``<out>/<run_id>/<stage>/data`` with
+   ``mode=overwrite`` (atomic publish per stage directory);
+2. it then reads the row count of every written data file from the
+   file's parquet footer — lineage evidence from the *written* data,
+   not an estimate, and no Spark job — and appends one ``complete`` row
+   per file (``partition_id`` = the file's ordinal in sorted path order)
+   plus a ``-1`` sentinel with 0 rows. Both appends are one-partition,
+   JVM-local frames: one job and one manifest file each;
+3. on resume, a stage is **skipped** and its output re-read when its
+   latest ``complete`` row under the current fingerprint is newer than
+   its latest ``superseded`` marker and its data dir exists. A pipeline
+   run decides this for every stage from ONE snapshot of its manifest
+   rows, collected before its first stage (``manifest_rows``; no Spark
+   job when no manifest exists yet). An interrupted stage has no
+   ``complete`` row newer than its marker, so it recomputes and its
+   overwrite replaces any torn output.
+
+The snapshot is exact for one writer per run_id, which the protocol
+assumes throughout (concurrent publishers of one run would interleave
+their markers): a run visits each stage once, and publishing one stage
+cannot change another stage's completeness.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,10 +67,21 @@ def manifest_path(out_dir: str) -> str:
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     path = manifest_path(out_dir)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    if not _dir_exists(spark, path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+
+
+def manifest_rows(spark: SparkSession, out_dir: str, run_ids) -> list[Row]:
+    """The manifest rows of ``run_ids``, in one collect — the snapshot a
+    run decides resume from. No Spark job when no manifest exists yet."""
+    if not _dir_exists(spark, manifest_path(out_dir)):
+        return []
+    return (
+        read_manifest(spark, out_dir)
+        .where(F.col("run_id").isin(list(run_ids)))
+        .collect()
+    )
 
 
 def _dir_exists(spark: SparkSession, path: str) -> bool:
@@ -75,40 +95,58 @@ def _dir_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def stage_complete_in(
+    spark: SparkSession, manifest: list[Row], out_dir: str, run_id: str,
+    stage: str, fingerprint: str = "",
+) -> bool:
+    """``stage_complete`` decided from ``manifest``, a snapshot of
+    manifest rows (``manifest_rows``): the latest ``complete`` row under
+    ``fingerprint`` is newer than the latest ``superseded`` marker, and
+    the data dir exists."""
+    last_ok = last_marker = None
+    for r in manifest:
+        if r.run_id != run_id or r.stage != stage:
+            continue
+        if r.status == "complete" and (r.fingerprint or "") == fingerprint:
+            last_ok = max(last_ok or r.updated_at, r.updated_at)
+        elif r.status == "superseded":
+            last_marker = max(last_marker or r.updated_at, r.updated_at)
+    if last_ok is None or (last_marker is not None and last_marker >= last_ok):
+        return False
+    return _dir_exists(spark, stage_data_path(out_dir, run_id, stage))
+
+
 def stage_complete(
     spark: SparkSession, out_dir: str, run_id: str, stage: str,
     fingerprint: str = "",
 ) -> bool:
     """A stage is complete iff its LATEST manifest activity is a
-    ``complete`` publish under the SAME fingerprint. The manifest is
-    append-only, so a re-publish under a different fingerprint cannot
-    retract the old rows — instead every publish first appends a
-    ``superseded`` marker (see ``publish_stage``), and completeness
-    requires the matching complete rows to be NEWER than any marker:
-    a rollback to an earlier fingerprint after a re-publish correctly
-    recomputes instead of serving the newer fingerprint's data, and a
-    crash between the marker and the new complete rows leaves the stage
-    incomplete rather than pointing old rows at torn new data."""
-    m = read_manifest(spark, out_dir).where(
-        (F.col("run_id") == run_id) & (F.col("stage") == stage)
-    )
-    row = m.agg(
-        F.max(
-            F.when(
-                (F.col("status") == "complete")
-                & (F.coalesce(F.col("fingerprint"), F.lit("")) == fingerprint),
-                F.col("updated_at"),
-            )
-        ).alias("last_ok"),
-        F.max(
-            F.when(F.col("status") == "superseded", F.col("updated_at"))
-        ).alias("last_marker"),
-    ).collect()[0]
-    if row["last_ok"] is None:
-        return False
-    if row["last_marker"] is not None and row["last_marker"] >= row["last_ok"]:
-        return False
-    return _dir_exists(spark, stage_data_path(out_dir, run_id, stage))
+    ``complete`` publish under the SAME fingerprint, read fresh from the
+    manifest. The manifest is append-only, so a re-publish under a
+    different fingerprint cannot retract the old rows — instead every
+    publish first appends a ``superseded`` marker (see
+    ``publish_stage``), and completeness requires the matching complete
+    rows to be NEWER than any marker: a rollback to an earlier
+    fingerprint after a re-publish correctly recomputes instead of
+    serving the newer fingerprint's data, and a crash between the marker
+    and the new complete rows leaves the stage incomplete rather than
+    pointing old rows at torn new data."""
+    rows = manifest_rows(spark, out_dir, [run_id])
+    return stage_complete_in(spark, rows, out_dir, run_id, stage, fingerprint)
+
+
+def stage_row_counts(rows: list[Row], run_id: str) -> dict[str, int]:
+    """Rows per stage of ``run_id``, as its latest ``complete`` publish
+    recorded them (the rows of one append share one ``updated_at``)."""
+    done = [r for r in rows if r.run_id == run_id and r.status == "complete"]
+    latest: dict[str, object] = {}
+    for r in done:
+        latest[r.stage] = max(latest.get(r.stage, r.updated_at), r.updated_at)
+    counts = dict.fromkeys(latest, 0)
+    for r in done:
+        if r.updated_at == latest[r.stage]:
+            counts[r.stage] += r.rows
+    return counts
 
 
 def stage_data_path(out_dir: str, run_id: str, stage: str) -> str:
@@ -118,57 +156,80 @@ def stage_data_path(out_dir: str, run_id: str, stage: str) -> str:
     return os.path.join(out_dir, run_id, stage, "data")
 
 
-def _partition_metrics(df: DataFrame) -> DataFrame:
-    return df.groupBy(
-        F.spark_partition_id().alias("partition_id")
-    ).agg(F.count(F.lit(1)).alias("rows"))
+def _file_row_counts(spark: SparkSession, files: list[str]) -> list[int]:
+    """Row count of each parquet file, from its footer, through the same
+    Hadoop FileSystem route as ``_dir_exists`` — no Spark job."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    counts = []
+    for f in files:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+        )
+        try:
+            counts.append(int(reader.getRecordCount()))
+        finally:
+            reader.close()
+    return counts
+
+
+def _append_manifest(
+    spark: SparkSession, out_dir: str, run_id: str, stage: str, status: str,
+    fingerprint: str, partition_rows: list[tuple[int, int]],
+) -> None:
+    """Append ``(partition_id, rows)`` manifest rows with one job: a
+    one-partition JVM-local frame of literal structs, one file."""
+    rows = F.array(
+        *(
+            F.struct(
+                F.lit(p).cast("int").alias("partition_id"),
+                F.lit(n).cast("long").alias("rows"),
+            )
+            for p, n in partition_rows
+        )
+    )
+    spark.range(1, numPartitions=1).select(F.inline(rows)).select(
+        F.lit(run_id).alias("run_id"),
+        F.lit(stage).alias("stage"),
+        "partition_id",
+        "rows",
+        F.lit(status).alias("status"),
+        F.current_timestamp().alias("updated_at"),
+        F.lit(fingerprint).alias("fingerprint"),
+    ).write.mode("append").parquet(manifest_path(out_dir))
 
 
 def publish_stage(
     df: DataFrame, out_dir: str, run_id: str, stage: str,
     fingerprint: str = "",
 ) -> DataFrame:
-    """Write a stage's output + its per-partition manifest rows; return
-    the re-read (published) DataFrame so downstream stages consume the
-    materialized data, truncating lineage between stages. An EMPTY stage
-    still publishes one sentinel row (partition -1, 0 rows) — without it
-    a legitimately-empty stage is indistinguishable from an interrupted
+    """Write a stage's output + its manifest rows in three jobs — the
+    ``superseded`` marker, the data, the ``complete`` rows — and return
+    the re-read (published) DataFrame, so downstream stages consume the
+    materialized data, truncating lineage between stages. The complete
+    rows carry each written file's row count from its parquet footer,
+    plus one sentinel row (partition -1, 0 rows): without it a
+    legitimately-empty stage is indistinguishable from an interrupted
     one and would recompute on every resume."""
     spark = df.sparkSession
     path = stage_data_path(out_dir, run_id, stage)
     # write-audit-publish step 0: retract any prior completeness BEFORE
     # touching the data dir. The manifest is append-only, so this is a
-    # 'superseded' marker row; stage_complete requires complete rows to
+    # 'superseded' marker row; completeness requires complete rows to
     # be newer than the latest marker, which (a) invalidates an older
     # fingerprint's rows the moment a re-publish starts and (b) leaves
     # the stage incomplete if we crash mid-overwrite.
-    spark.createDataFrame(
-        [(run_id, stage, -1, 0, "superseded", fingerprint)],
-        "run_id string, stage string, partition_id int, rows long, "
-        "status string, fingerprint string",
-    ).withColumn("updated_at", F.current_timestamp()).select(
-        [f.name for f in MANIFEST_SCHEMA.fields]
-    ).write.mode("append").parquet(manifest_path(out_dir))
+    _append_manifest(spark, out_dir, run_id, stage, "superseded", fingerprint, [(-1, 0)])
     df.write.mode("overwrite").parquet(path)
-    published = spark.read.parquet(path)
-    metrics = (
-        _partition_metrics(published)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("status", F.lit("complete"))
-        .withColumn("updated_at", F.current_timestamp())
-        .withColumn("fingerprint", F.lit(fingerprint))
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
-    )
-    sentinel = spark.createDataFrame(
-        [(run_id, stage, -1, 0, "complete", fingerprint)],
-        "run_id string, stage string, partition_id int, rows long, "
-        "status string, fingerprint string",
-    ).withColumn("updated_at", F.current_timestamp()).select(
-        [f.name for f in MANIFEST_SCHEMA.fields]
-    )
-    metrics.unionByName(sentinel).write.mode("append").parquet(
-        manifest_path(out_dir)
+    # the written schema, given back: file sources read every column as
+    # nullable either way, and parquet schema inference costs a job
+    published = spark.read.schema(df.schema).parquet(path)
+    counts = _file_row_counts(spark, sorted(published.inputFiles()))
+    _append_manifest(
+        spark, out_dir, run_id, stage, "complete", fingerprint,
+        [(-1, 0), *enumerate(counts)],
     )
     return published
 
@@ -181,11 +242,17 @@ def run_stage(
     compute,
     resume: bool = True,
     fingerprint: str = "",
+    manifest: list[Row] | None = None,
 ) -> DataFrame:
     """Execute ``compute() -> DataFrame`` under the resume protocol. A
     stage only resumes when its manifest row carries the SAME
     ``fingerprint`` (e.g. the active weights-artifact version) — a
-    version bump forces recompute of every stage in the run."""
-    if resume and stage_complete(spark, out_dir, run_id, stage, fingerprint):
-        return spark.read.parquet(stage_data_path(out_dir, run_id, stage))
+    version bump forces recompute of every stage in the run.
+    ``manifest`` is the run's snapshot (``manifest_rows``) to decide
+    from; ``None`` reads the manifest afresh."""
+    if resume:
+        if manifest is None:
+            manifest = manifest_rows(spark, out_dir, [run_id])
+        if stage_complete_in(spark, manifest, out_dir, run_id, stage, fingerprint):
+            return spark.read.parquet(stage_data_path(out_dir, run_id, stage))
     return publish_stage(compute(), out_dir, run_id, stage, fingerprint)

@@ -42,7 +42,7 @@ from ner_spark.operators.components import canonicalize_triples, connected_compo
 from ner_spark.operators.extraction import mentions_to_triples
 from ner_spark.operators.graph import materialize_edges, materialize_nodes
 from ner_spark.operators.linking import link_edges
-from ner_spark.operators.manifest import run_stage
+from ner_spark.operators.manifest import manifest_rows, run_stage
 from ner_spark.operators.relate import explode_mentions, extract_relations
 from ner_spark.operators.tagging import tag_and_extract
 
@@ -155,13 +155,14 @@ def kg_tail(
 
 
 def _manifest_stage(
-    spark: SparkSession, cfg: PipelineConfig, fingerprint: str
+    spark: SparkSession, cfg: PipelineConfig, fingerprint: str, manifest: list
 ) -> Stage:
     """The manifest materializer: publish each stage under ``cfg.run_id``,
-    resuming a stage whose manifest row is complete under ``fingerprint``."""
+    resuming a stage whose row in the run's ``manifest`` snapshot is
+    complete under ``fingerprint``."""
     return lambda name, compute: run_stage(
         spark, cfg.out_dir, cfg.run_id, name, compute,
-        resume=cfg.resume, fingerprint=fingerprint,
+        resume=cfg.resume, fingerprint=fingerprint, manifest=manifest,
     )
 
 
@@ -174,14 +175,17 @@ def run_pipeline(
     model upgrade (new artifact) invalidates resumes of the whole run."""
     from ner_spark.model.artifact import verify_executor_weights
 
-    # one trivial probe job proves the executor workers resolve the SAME
+    # one small probe proves the executor workers resolve the SAME
     # weights version the manifest is about to be stamped with. Runs
     # unconditionally: the mismatch can point either way (driver sees an
     # artifact the executors lack, OR spark.executorEnv points executors
     # at an artifact the driver never resolved — both would publish data
     # under the wrong fingerprint).
     fp = verify_executor_weights(spark)
-    return kg_stages(transcripts, _manifest_stage(spark, cfg, fp))
+    # one manifest snapshot decides every stage's resume (single writer
+    # per run_id: publishing one stage leaves the others' rows alone)
+    manifest = manifest_rows(spark, cfg.out_dir, [cfg.run_id]) if cfg.resume else []
+    return kg_stages(transcripts, _manifest_stage(spark, cfg, fp, manifest))
 
 
 def run_incremental(
@@ -217,14 +221,14 @@ def run_incremental(
     """
     from ner_spark.model.artifact import verify_executor_weights
     from ner_spark.operators.incremental import incremental_update
-    from ner_spark.operators.manifest import stage_complete, stage_data_path
+    from ner_spark.operators.manifest import stage_complete_in, stage_data_path
 
     fp = verify_executor_weights(spark)
+    # one snapshot for the base's checks and this run's resume
+    manifest = manifest_rows(spark, cfg.out_dir, {base_run_id, cfg.run_id})
 
     def _base(name: str) -> DataFrame:
-        if not stage_complete(
-            spark, cfg.out_dir, base_run_id, name, fingerprint=fp
-        ):
+        if not stage_complete_in(spark, manifest, cfg.out_dir, base_run_id, name, fp):
             raise RuntimeError(
                 f"base run '{base_run_id}' stage '{name}' is not complete "
                 f"under weights fingerprint '{fp}' — the base must be a "
@@ -240,7 +244,7 @@ def run_incremental(
     old_assignment = _base("assignment")
     old_relations = _base("relations")
 
-    stage = _manifest_stage(spark, cfg, fp)
+    stage = _manifest_stage(spark, cfg, fp, manifest)
     out: dict[str, DataFrame] = {}
     mentions = out["mentions"] = stage(
         "mentions", lambda: build_mentions(delta_transcripts)

@@ -28,7 +28,7 @@ def get_spark(
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # first integer inside the brackets; tolerates local[N,maxFailures]

@@ -62,7 +62,11 @@ def main() -> None:
         cfg = PipelineConfig(
             out_dir=args.output, run_id=args.run_id, resume=not args.no_resume
         )
-        from ner_spark.operators.manifest import stage_data_path
+        from ner_spark.operators.manifest import (
+            manifest_rows,
+            stage_data_path,
+            stage_row_counts,
+        )
 
         if args.stages == "incremental":
             if not args.base_run_id:
@@ -70,12 +74,16 @@ def main() -> None:
             out = run_incremental(spark, t, cfg, base_run_id=args.base_run_id)
         else:
             out = run_pipeline(spark, t, cfg)
-        for stage, df in out.items():
+        # the rows each stage's publish recorded, in one manifest read
+        rows = stage_row_counts(
+            manifest_rows(spark, args.output, [args.run_id]), args.run_id
+        )
+        for stage in out:
             print(
                 json.dumps(
                     {
                         "stage": stage,
-                        "rows": df.count(),
+                        "rows": rows[stage],
                         "output": stage_data_path(args.output, args.run_id, stage),
                     }
                 )

@@ -2,6 +2,7 @@
 relations, MinHash-LSH link edges, connected components, graph tables,
 and the manifest resume protocol."""
 
+import os
 import shutil
 
 import pandas as pd
@@ -160,6 +161,18 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
     for stage in ["triples", "relations"]:
         total = int(man.loc[man["stage"] == stage, "rows"].sum())
         assert total == len(res1[stage])
+        # one row per written file, its count from the file's footer
+        per_file = (
+            spark.read.parquet(mf.stage_data_path(out_dir, "r1", stage))
+            .groupBy(F.input_file_name())
+            .count()
+            .toPandas()["count"]
+        )
+        got = man.loc[(man["stage"] == stage) & (man["rows"] > 0), "rows"]
+        assert sorted(got) == sorted(per_file)
+    # each stage's publish appends two manifest files: marker, complete rows
+    man_files = [f for f in os.listdir(mf.manifest_path(out_dir)) if f.endswith(".parquet")]
+    assert len(man_files) == 2 * len(res1) == 18
 
     # resume: full rerun must not change any output
     def canon(df, cols):
@@ -167,7 +180,17 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
         s = df[cols].astype(str)
         return s.sort_values(cols).reset_index(drop=True)
 
-    res2 = {k: v.toPandas() for k, v in run_pipeline(spark, t, cfg).items()}
+    # the resumed run decides every stage from one manifest snapshot: the
+    # verify probe (2 jobs), the snapshot and one re-read per stage
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-r1", "resume-r1")
+    try:
+        out2 = run_pipeline(spark, t, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("resume-r1")) <= 13
+    res2 = {k: v.toPandas() for k, v in out2.items()}
     for k in res1:
         cols = list(res1[k].columns)
         assert canon(res1[k], cols).equals(canon(res2[k], cols)), k

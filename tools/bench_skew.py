@@ -160,7 +160,7 @@ def main() -> None:
         default=0,
         help="also run with the salt count FORCED to this value (max_salts=n_salts=K) to compare fixed vs adaptive salting",
     )
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)))
     args = ap.parse_args()
     skip = set(args.skip.split(",")) if args.skip else set()
 
