@@ -604,7 +604,7 @@ def main() -> None:
         "ann_recall_at_5_clustered": ann_recall_clustered,
     }
 
-    # -- scaling evidence: same job, local[8] vs local[32] ----------------
+    # -- scaling evidence: same job, local[N] vs local[4N] (SPARK_GRAFT_SCALE_NS, default 4,16)
     if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
         import tempfile
 

@@ -44,12 +44,6 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def drop_exact_dups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Survivor rows only (min id per identical content)."""
-    w = exact_dup_groups(df, id_col, text_col).select("keep_id")
-    return df.join(w, df[id_col] == w["keep_id"], "left_semi")
-
-
 # --------------------------------------------------------------------------
 # MinHash + LSH over word shingles
 # --------------------------------------------------------------------------

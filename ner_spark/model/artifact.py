@@ -18,6 +18,9 @@ active version into every manifest row as the stage fingerprint —
 publishing weights ``w2`` invalidates a manifest written under ``w1``,
 so a resume after a model upgrade recomputes instead of silently
 serving stale triples (the model analogue of the fixture-version rule).
+Every tagging task checks that its worker resolves the same version the
+driver stamps (``require_weights``), so a mismatch fails the job before
+any data is published under the wrong fingerprint.
 """
 
 from __future__ import annotations
@@ -166,45 +169,29 @@ def active_weights_version() -> str:
     return maybe_install_from_runtime()
 
 
-def verify_executor_weights(spark) -> str:
-    """Assert the executor workers resolve the SAME weights version as
-    the driver, via a tiny mapInPandas probe, and return that version.
+def require_weights(expected: str) -> None:
+    """Install the runtime artifact (memoized) and raise unless this
+    process resolves weights version ``expected``. The tagging tasks call
+    it once per task with the version the driver resolved when it built
+    the plan, so every task that tags a row checks its own worker.
 
     The failure this guards (either direction): the driver resolves an
     artifact the executors lack (env var set post-launch, ``--files``
     forgotten), or ``spark.executorEnv`` points executors at an artifact
     the driver never resolved — both would publish data under the wrong
-    manifest fingerprint. Called unconditionally by ``run_pipeline``;
-    costs two small jobs (the probe's round-robin shuffle, then the
-    collect).
-
-    Coverage is a SAMPLE of the worker pool (4 probe rows per core —
-    round-robin repartitioning doesn't guarantee one row per worker, let
-    alone per node), which reliably catches the homogeneous failure
-    modes above; a per-node divergence (node-local artifact path missing
-    on some hosts) needs the artifact shipped via ``--files``, which
-    cannot diverge per node."""
-    import pandas as pd
-
-    driver_v = active_weights_version()
-    n = spark.sparkContext.defaultParallelism * 4
-
-    def probe(batches):
-        from ner_spark.model.artifact import maybe_install_from_runtime
-
-        v = maybe_install_from_runtime()
-        for pdf in batches:
-            yield pd.DataFrame({"v": [v] * len(pdf)})
-
-    seen = {
-        r["v"]
-        for r in spark.range(n).repartition(n).mapInPandas(probe, "v string").collect()
-    }
-    if seen != {driver_v}:
+    manifest fingerprint."""
+    v = maybe_install_from_runtime()
+    if v != expected:
         raise RuntimeError(
-            f"weights-version mismatch: driver resolved {driver_v!r} but "
-            f"executor workers resolved {sorted(seen)!r} — ship the "
-            f"artifact with --files/--archives (or spark.executorEnv) so "
-            f"every worker loads the same model"
+            f"weights-version mismatch: driver resolved {expected!r} but "
+            f"this executor worker resolved {v!r}; ship the artifact "
+            f"with --files/--archives (or spark.executorEnv) so every "
+            f"worker loads the same model"
         )
-    return driver_v
+
+
+def verify_executor_weights(spark) -> str:
+    """The driver's weights version; runs no Spark job. The executor side
+    of the check is ``require_weights`` inside every tagging task, which
+    covers every worker that tags a row rather than a sample of them."""
+    return active_weights_version()

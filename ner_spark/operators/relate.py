@@ -113,16 +113,3 @@ def extract_relations(mentions_df: DataFrame, mentions_col: str = "mentions") ->
         )
     )
 
-
-def relations_to_triples(relations_df: DataFrame) -> DataFrame:
-    """Mention-level relations as (subj, pred, obj) triple rows (distinct
-    per turn, mirroring the reference's per-sentence pair-set dedup)."""
-    return relations_df.select(
-        "conv_id",
-        "turn_idx",
-        "subj",
-        "pred",
-        "obj",
-        "subj_type",
-        "obj_type",
-    ).distinct()

@@ -15,6 +15,11 @@ all rows in parallel) decodes tag ids.
 Padding is per Arrow batch (dynamic batch max, exactly the reference's
 pad-to-batch-max trade — /root/reference/utils.py:103-108), sized by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+
+Every tagging task checks, before its first batch, that its worker
+resolves the weights version the driver resolved when it built the plan
+(``model.artifact.require_weights``): a worker on another model fails the
+job instead of tagging under the wrong manifest fingerprint.
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ner_spark.model.artifact import active_weights_version
 
 TAGS_FIELD = T.StructField("tags", T.ArrayType(T.StringType()), False)
 
@@ -38,15 +45,17 @@ def tag_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     out_schema = T.StructType(df.schema.fields + [TAGS_FIELD])
     cols = [f.name for f in df.schema.fields]
+    expected = active_weights_version()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # heavy import inside the worker: weights + memo live per executor
-        from ner_spark.model.artifact import maybe_install_from_runtime
+        from ner_spark.model.artifact import require_weights
         from ner_spark.model.tagger import tag_tokens_batch
 
         # artifact weights (--files/--archives/SparkFiles) install once
-        # per worker process; memoized dict lookup afterwards
-        maybe_install_from_runtime()
+        # per worker process and must match the driver's version;
+        # memoized dict lookup afterwards
+        require_weights(expected)
         for pdf in batches:
             token_lists = [t.split(" ") if t else [] for t in pdf[text_col]]
             pdf = pdf[cols].copy()
@@ -85,13 +94,14 @@ def tag_and_extract(df: DataFrame, text_col: str = "text") -> DataFrame:
         df.schema.fields + [TAGS_FIELD, _mentions_field()]
     )
     cols = [f.name for f in df.schema.fields]
+    expected = active_weights_version()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ner_spark.model.artifact import maybe_install_from_runtime
+        from ner_spark.model.artifact import require_weights
         from ner_spark.model.tagger import tag_tokens_batch
         from ner_spark.operators.extraction import mention_dicts
 
-        maybe_install_from_runtime()
+        require_weights(expected)
         for pdf in batches:
             token_lists = [t.split(" ") if t else [] for t in pdf[text_col]]
             tags_col = tag_tokens_batch(token_lists)

@@ -173,15 +173,14 @@ def run_pipeline(
     published DataFrames keyed by stage name. Every stage's manifest row
     is fingerprinted with the active weights-artifact version, so a
     model upgrade (new artifact) invalidates resumes of the whole run."""
-    from ner_spark.model.artifact import verify_executor_weights
+    from ner_spark.model.artifact import active_weights_version
 
-    # one small probe proves the executor workers resolve the SAME
-    # weights version the manifest is about to be stamped with. Runs
-    # unconditionally: the mismatch can point either way (driver sees an
-    # artifact the executors lack, OR spark.executorEnv points executors
-    # at an artifact the driver never resolved — both would publish data
-    # under the wrong fingerprint).
-    fp = verify_executor_weights(spark)
+    # every tagging task checks that its worker resolves this same
+    # version (either way round: driver sees an artifact the executors
+    # lack, OR spark.executorEnv points executors at an artifact the
+    # driver never resolved), so the mentions stage fails before any
+    # data is published under the wrong fingerprint
+    fp = active_weights_version()
     # one manifest snapshot decides every stage's resume (single writer
     # per run_id: publishing one stage leaves the others' rows alone)
     manifest = manifest_rows(spark, cfg.out_dir, [cfg.run_id]) if cfg.resume else []
@@ -206,7 +205,8 @@ def run_incremental(
     this session resolves: a model upgrade between base and delta would
     otherwise silently merge two models' extractions into one KG — the
     fingerprint gate turns that into a loud error (re-run the base with
-    the new artifact instead).
+    the new artifact instead). Every tagging task of the delta checks
+    that its worker resolves that same version.
 
     Stage semantics under the new ``cfg.run_id``: ``mentions`` and
     ``triples`` are DELTA-scoped (this run's expensive tagging output;
@@ -219,11 +219,11 @@ def run_incremental(
     no corpus-cumulative link-edge table to publish — connectivity lives
     in ``assignment``.
     """
-    from ner_spark.model.artifact import verify_executor_weights
+    from ner_spark.model.artifact import active_weights_version
     from ner_spark.operators.incremental import incremental_update
     from ner_spark.operators.manifest import stage_complete_in, stage_data_path
 
-    fp = verify_executor_weights(spark)
+    fp = active_weights_version()
     # one snapshot for the base's checks and this run's resume
     manifest = manifest_rows(spark, cfg.out_dir, {base_run_id, cfg.run_id})
 

@@ -3,13 +3,13 @@
 The reference reads row-oriented parallel text files, TSVs, nested JSON
 and vocab files (S1-S4); the Spark-native equivalents are declarative
 ``spark.read`` sources whose scans Catalyst prunes and pushes predicates
-into. The driver testdata is parquet; vocab/TSV/JSON readers mirror the
-reference's alternative encodings for fixture use.
+into. The driver testdata is parquet; the vocab reader lives here, and
+the TSV/JSON corpus scans that mirror the reference's alternative
+encodings are read inline by ``entry_queries.q_tsv_corpus_scan`` and
+``q_json_corpus_scan``.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,13 +31,6 @@ TESTDATA_TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan; filters/column selection applied by callers reach
-    the scan (PushedFilters/ReadSchema) because nothing here forces
-    materialization."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def load_vocabulary(spark: SparkSession, path: str) -> DataFrame:
     """S1 (/root/reference/utils.py:9-20): text file → (id, token) where
     the line number IS the id. Distributed restatement: a deterministic
@@ -50,40 +43,6 @@ def load_vocabulary(spark: SparkSession, path: str) -> DataFrame:
         (F.row_number().over(w) - 1).alias("id"),
         F.col("value").alias("token"),
     )
-
-
-def read_tsv_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """S3 (/root/reference/torch_version/data_tools.py:23-44): one line =
-    ``text-tokens \\t label-tokens``."""
-    schema = T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("labels", T.StringType()),
-        ]
-    )
-    return spark.read.csv(path, sep="\t", schema=schema)
-
-
-def read_json_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """S4 (/root/reference/data_process.ipynb cell-3): nested resume-zh
-    shape {sentence: [chars], ner: [{index: [int], type: str}]}."""
-    schema = T.StructType(
-        [
-            T.StructField("sentence", T.ArrayType(T.StringType())),
-            T.StructField(
-                "ner",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("index", T.ArrayType(T.IntegerType())),
-                            T.StructField("type", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    return spark.read.json(path, schema=schema)
 
 
 MAP_LITERAL_MAX_VOCAB = 8192

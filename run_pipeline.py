@@ -94,13 +94,11 @@ def main() -> None:
         spark.stop()
         return
 
-    from ner_spark.model.artifact import verify_executor_weights
     from ner_spark.operators.extraction import mentions_to_triples
     from ner_spark.pipeline import build_mentions
 
-    # unconditional: a driver/executor weights mismatch can point either
-    # way, and this slice writes the triples a user consumes
-    verify_executor_weights(spark)
+    # every tagging task checks that its worker resolves the driver's
+    # weights version, so a mismatch either way fails this write
     triples = mentions_to_triples(build_mentions(t))
     out = os.path.join(args.output, "triples")
     triples.write.mode("overwrite").parquet(out)

@@ -181,7 +181,8 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
         return s.sort_values(cols).reset_index(drop=True)
 
     # the resumed run decides every stage from one manifest snapshot: the
-    # verify probe (2 jobs), the snapshot and one re-read per stage
+    # snapshot and one re-read per stage; the weights check runs inside
+    # the tagging tasks, so a run that tags nothing issues no job for it
     sc = spark.sparkContext
     sc.setJobGroup("resume-r1", "resume-r1")
     try:
@@ -189,7 +190,7 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("resume-r1")) <= 13
+    assert len(sc.statusTracker().getJobIdsForGroup("resume-r1")) <= 11
     res2 = {k: v.toPandas() for k, v in out2.items()}
     for k in res1:
         cols = list(res1[k].columns)

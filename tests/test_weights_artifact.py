@@ -105,6 +105,94 @@ def test_spark_files_distribution_end_to_end(tmp_path, fixtures_small, builtin_w
     assert json.loads(line)["triples"] == 0  # muted model ⇒ no mentions at all
 
 
+def test_spark_submit_executor_env_mismatch_fails(tmp_path, fixtures_small, builtin_weights):
+    """The CLI surface of the per-task weights check: executors pointed at
+    another artifact via ``spark.executorEnv`` while the driver resolves
+    the builtin must fail the run loudly, not publish triples."""
+    from ner_spark.model.artifact import ENV_VAR, save_weights
+
+    p = save_weights(str(tmp_path / "w-other.npz"), version="w-other")
+    r = subprocess.run(
+        [
+            "spark-submit", "--master", "local[2]",
+            "--conf", f"spark.executorEnv.{ENV_VAR}={p}",
+            os.path.join(REPO, "run_pipeline.py"),
+            "--input", f"{fixtures_small}/transcripts.parquet",
+            "--output", str(tmp_path / "out"), "--show", "0",
+        ],
+        capture_output=True, text=True, timeout=420, cwd=REPO,
+    )
+    assert r.returncode != 0
+    assert "weights-version mismatch" in r.stderr
+
+
+def test_weights_mismatch_fails_tagging_tasks(spark, tmp_path, fixtures_small, builtin_weights):
+    """Every tagging task checks its worker's weights version against the
+    driver's, either way round: executors pointed at another artifact
+    (``spark.executorEnv``), or a driver that resolves an artifact the
+    running executors never saw. The build fails at the mentions stage
+    with nothing published as complete, a rerun of the same run id after
+    the fix publishes every stage, and the extract slice fails too."""
+    import contextlib
+
+    import pandas as pd
+
+    from ner_spark.model import artifact
+    from ner_spark.operators import manifest as mf
+    from ner_spark.operators.extraction import mentions_to_triples
+    from ner_spark.pipeline import PipelineConfig, build_mentions, run_pipeline
+
+    other = artifact.save_weights(str(tmp_path / "w-other.npz"), version="w-other")
+    t = spark.read.parquet(f"{fixtures_small}/transcripts.parquet")
+    key = ["conv_id", "turn_idx", "subj", "pred", "obj"]
+    # the golden triples are the oracle of a clean run
+    want = pd.read_parquet(f"{fixtures_small}/reference_triples.parquet")
+    want = want[key].sort_values(key).reset_index(drop=True)
+
+    @contextlib.contextmanager
+    def executor_side():
+        # pyspark keeps spark.executorEnv.* here; UDF workers inherit it
+        env = spark.sparkContext.environment
+        env[artifact.ENV_VAR] = other
+        try:
+            yield
+        finally:
+            del env[artifact.ENV_VAR]
+
+    @contextlib.contextmanager
+    def driver_side():
+        os.environ[artifact.ENV_VAR] = other
+        artifact.reset_builtin()
+        try:
+            yield
+        finally:
+            del os.environ[artifact.ENV_VAR]
+            artifact.reset_builtin()
+
+    for name, mismatch in (("executor", executor_side), ("driver", driver_side)):
+        out = str(tmp_path / name)
+        cfg = PipelineConfig(out_dir=out, run_id="r")
+        with mismatch():
+            with pytest.raises(Exception, match="weights-version mismatch"):
+                run_pipeline(spark, t, cfg)
+        man = mf.read_manifest(spark, out).where("stage = 'mentions'").toPandas()
+        assert "superseded" in set(man["status"]), name
+        assert "complete" not in set(man["status"]), name
+
+        res = run_pipeline(spark, t, cfg)
+        assert len(res) == 9
+        done = mf.read_manifest(spark, out).where("status = 'complete'").toPandas()
+        assert set(done["stage"]) == set(res), name
+        got = res["triples"].toPandas()[key].sort_values(key).reset_index(drop=True)
+        assert got.equals(want.astype(got.dtypes.to_dict())), name
+
+        with mismatch():
+            with pytest.raises(Exception, match="weights-version mismatch"):
+                mentions_to_triples(build_mentions(t)).write.mode(
+                    "overwrite"
+                ).parquet(str(tmp_path / f"{name}-extract"))
+
+
 def test_inspect_weights_tool(tmp_path, builtin_weights):
     """tools/inspect_weights.py — the reference check_ckpt.py analogue:
     describes an artifact's tensors and the builtin fallback."""
