@@ -28,6 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -169,8 +170,10 @@ def _solve_local(nodes: DataFrame, edge_rows, id_col: str) -> DataFrame:
             comp_min[root] = n
     rows = [(n, comp_min[uf.find(n)]) for n in sorted(touched)]
     id_type = dict(nodes.dtypes)[id_col]
+    # a pandas frame takes the Arrow path: no Python worker pickles rows
     amap = spark.createDataFrame(
-        rows, f"node_id {id_type}, component {id_type}"
+        pd.DataFrame(rows, columns=["node_id", "component"]),
+        f"node_id {id_type}, component {id_type}",
     )
     return (
         nodes.select(F.col(id_col).alias("node_id"))

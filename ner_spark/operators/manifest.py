@@ -15,8 +15,7 @@ Iceberg catalog in the sandbox — plain parquet dirs stand in):
    file's parquet footer — lineage evidence from the *written* data,
    not an estimate, and no Spark job — and appends one ``complete`` row
    per file (``partition_id`` = the file's ordinal in sorted path order)
-   plus a ``-1`` sentinel with 0 rows. Both appends are one-partition,
-   JVM-local frames: one job and one manifest file each;
+   plus a ``-1`` sentinel with 0 rows;
 3. on resume, a stage is **skipped** and its output re-read when its
    latest ``complete`` row under the current fingerprint is newer than
    its latest ``superseded`` marker and its data dir exists. A pipeline
@@ -25,6 +24,14 @@ Iceberg catalog in the sandbox — plain parquet dirs stand in):
    job when no manifest exists yet). An interrupted stage has no
    ``complete`` row newer than its marker, so it recomputes and its
    overwrite replaces any torn output.
+
+Every append is one parquet file written by the driver through the
+Hadoop FileSystem, in the physical layout Spark writes ``MANIFEST_SCHEMA``
+in (every field required, ``updated_at`` INT96), with no Spark job. The
+file is written under a dot-prefixed temp name, which Spark's file index
+and pyarrow both skip, and then renamed into place: a reader sees all of
+an append or none of it. So a publish runs no Spark job beyond those of
+its data write.
 
 The snapshot is exact for one writer per run_id, which the protocol
 assumes throughout (concurrent publishers of one run would interleave
@@ -35,7 +42,11 @@ cannot change another stage's completeness.
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,6 +65,22 @@ MANIFEST_SCHEMA = T.StructType(
         # weights invalidates manifests written under the old ones.
         # Nullable: manifests from before this column read as null ≡ "".
         T.StructField("fingerprint", T.StringType(), True),
+    ]
+)
+
+# MANIFEST_SCHEMA in the physical layout Spark-written manifest files
+# have (they were written from non-null literals): every field required,
+# ``updated_at`` as INT96 (``use_deprecated_int96_timestamps``), Spark's
+# default timestamp output type. Files of both kinds mix in one manifest.
+_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("run_id", pa.string(), False),
+        pa.field("stage", pa.string(), False),
+        pa.field("partition_id", pa.int32(), False),
+        pa.field("rows", pa.int64(), False),
+        pa.field("status", pa.string(), False),
+        pa.field("updated_at", pa.timestamp("us", tz="UTC"), False),
+        pa.field("fingerprint", pa.string(), False),
     ]
 )
 
@@ -84,15 +111,34 @@ def manifest_rows(spark: SparkSession, out_dir: str, run_ids) -> list[Row]:
     )
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``path`` as a Hadoop ``Path`` with its ``FileSystem`` — correct for
+    hdfs:// / s3a:// / file:// alike, where driver-local ``os`` calls
+    only see the driver's own disk."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API — correct for
-    hdfs:// / s3a:// / file:// alike. A driver-local ``os.path.isdir``
-    would silently report False for every distributed path, turning
-    resume into full recomputation on a real cluster."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Existence check through the Hadoop FileSystem API. A driver-local
+    ``os.path.isdir`` would silently report False for every distributed
+    path, turning resume into full recomputation on a real cluster."""
+    fs, p = hadoop_path(spark, path)
     return bool(fs.exists(p))
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
+    """Move the finished directory ``src`` to ``dst``, deleting what
+    ``dst`` held: a write that fails before this leaves ``dst``'s last
+    good contents in place."""
+    fs, d = hadoop_path(spark, dst)
+    fs.delete(d, True)
+    _rename(fs, hadoop_path(spark, src)[1], d)
 
 
 def stage_complete_in(
@@ -179,36 +225,48 @@ def _append_manifest(
     spark: SparkSession, out_dir: str, run_id: str, stage: str, status: str,
     fingerprint: str, partition_rows: list[tuple[int, int]],
 ) -> None:
-    """Append ``(partition_id, rows)`` manifest rows with one job: a
-    one-partition JVM-local frame of literal structs, one file."""
-    rows = F.array(
-        *(
-            F.struct(
-                F.lit(p).cast("int").alias("partition_id"),
-                F.lit(n).cast("long").alias("rows"),
-            )
-            for p, n in partition_rows
-        )
+    """Append ``(partition_id, rows)`` manifest rows, all stamped with one
+    driver timestamp, as one parquet file written by the driver — no
+    Spark job. The file becomes visible by a rename from a dot-prefixed
+    temp name, so an append interrupted before the rename leaves
+    nothing a reader sees."""
+    parts, counts = zip(*partition_rows)
+    n = len(parts)
+    table = pa.table(
+        {
+            "run_id": [run_id] * n,
+            "stage": [stage] * n,
+            "partition_id": parts,
+            "rows": counts,
+            "status": [status] * n,
+            "updated_at": [time.time_ns() // 1000] * n,
+            "fingerprint": [fingerprint] * n,
+        },
+        schema=_ARROW_SCHEMA,
     )
-    spark.range(1, numPartitions=1).select(F.inline(rows)).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        "partition_id",
-        "rows",
-        F.lit(status).alias("status"),
-        F.current_timestamp().alias("updated_at"),
-        F.lit(fingerprint).alias("fingerprint"),
-    ).write.mode("append").parquet(manifest_path(out_dir))
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, use_deprecated_int96_timestamps=True)
+    d = manifest_path(out_dir)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    fs, tmp = hadoop_path(spark, os.path.join(d, f".{name}.tmp"))
+    stream = fs.create(tmp, False)
+    try:
+        stream.write(sink.getvalue().to_pybytes())
+    finally:
+        stream.close()
+    _rename(fs, tmp, hadoop_path(spark, os.path.join(d, name))[1])
 
 
 def publish_stage(
     df: DataFrame, out_dir: str, run_id: str, stage: str,
     fingerprint: str = "",
 ) -> DataFrame:
-    """Write a stage's output + its manifest rows in three jobs — the
-    ``superseded`` marker, the data, the ``complete`` rows — and return
+    """Write a stage's output + its manifest rows — the ``superseded``
+    marker, the data, the ``complete`` rows, in that order — and return
     the re-read (published) DataFrame, so downstream stages consume the
-    materialized data, truncating lineage between stages. The complete
+    materialized data, truncating lineage between stages. The two
+    manifest appends are driver-written files (``_append_manifest``), so
+    the data write's jobs are the publish's only Spark jobs. The complete
     rows carry each written file's row count from its parquet footer,
     plus one sentinel row (partition -1, 0 rows): without it a
     legitimately-empty stage is indistinguishable from an interrupted

@@ -94,14 +94,25 @@ def main() -> None:
         spark.stop()
         return
 
+    import uuid
+
     from ner_spark.operators.extraction import mentions_to_triples
+    from ner_spark.operators.manifest import hadoop_path, replace_dir
     from ner_spark.pipeline import build_mentions
 
     # every tagging task checks that its worker resolves the driver's
-    # weights version, so a mismatch either way fails this write
+    # weights version, so a mismatch either way fails this write. The
+    # write goes to a hidden sibling that replaces <output>/triples only
+    # once it has succeeded: a failed run keeps the last good triples.
     triples = mentions_to_triples(build_mentions(t))
     out = os.path.join(args.output, "triples")
-    triples.write.mode("overwrite").parquet(out)
+    tmp = os.path.join(args.output, f".triples-{uuid.uuid4().hex}")
+    try:
+        triples.write.parquet(tmp)
+        replace_dir(spark, tmp, out)
+    finally:
+        fs, p = hadoop_path(spark, tmp)
+        fs.delete(p, True)
 
     back = spark.read.parquet(out)
     n = back.count()

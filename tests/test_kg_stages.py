@@ -150,7 +150,22 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("kgout"))
     t = spark.read.parquet(f"{fixtures_small}/transcripts.parquet")
     cfg = PipelineConfig(out_dir=out_dir, run_id="r1")
-    res1 = {k: v.toPandas() for k, v in run_pipeline(spark, t, cfg).items()}
+    sc = spark.sparkContext
+
+    def run_counting_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            out = run_pipeline(spark, t, cfg)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a fresh run's jobs are its stages' computations and data writes:
+    # the manifest appends are driver-written files, no Spark job
+    out1, fresh_jobs = run_counting_jobs("fresh-r1")
+    assert fresh_jobs <= 33
+    res1 = {k: v.toPandas() for k, v in out1.items()}
 
     man = mf.read_manifest(spark, out_dir).toPandas()
     assert set(man["stage"]) >= {"mentions", "triples", "relations", "assignment", "nodes", "edges"}
@@ -183,14 +198,8 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
     # the resumed run decides every stage from one manifest snapshot: the
     # snapshot and one re-read per stage; the weights check runs inside
     # the tagging tasks, so a run that tags nothing issues no job for it
-    sc = spark.sparkContext
-    sc.setJobGroup("resume-r1", "resume-r1")
-    try:
-        out2 = run_pipeline(spark, t, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("resume-r1")) <= 11
+    out2, resume_jobs = run_counting_jobs("resume-r1")
+    assert resume_jobs <= 11
     res2 = {k: v.toPandas() for k, v in out2.items()}
     for k in res1:
         cols = list(res1[k].columns)

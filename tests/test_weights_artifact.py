@@ -108,22 +108,36 @@ def test_spark_files_distribution_end_to_end(tmp_path, fixtures_small, builtin_w
 def test_spark_submit_executor_env_mismatch_fails(tmp_path, fixtures_small, builtin_weights):
     """The CLI surface of the per-task weights check: executors pointed at
     another artifact via ``spark.executorEnv`` while the driver resolves
-    the builtin must fail the run loudly, not publish triples."""
+    the builtin must fail the run loudly, not publish triples — and the
+    failed run must leave the last good triples in ``--output`` as they
+    were."""
+    import pyarrow.parquet as pq
+
     from ner_spark.model.artifact import ENV_VAR, save_weights
 
+    def extract(*conf):
+        return subprocess.run(
+            [
+                "spark-submit", "--master", "local[2]", *conf,
+                os.path.join(REPO, "run_pipeline.py"),
+                "--input", f"{fixtures_small}/transcripts.parquet",
+                "--output", str(tmp_path / "out"), "--show", "0",
+            ],
+            capture_output=True, text=True, timeout=420, cwd=REPO,
+        )
+
+    r = extract()
+    assert r.returncode == 0, r.stderr[-3000:]
+    golden = pq.read_table(f"{fixtures_small}/reference_triples.parquet").num_rows
+    assert pq.read_table(tmp_path / "out" / "triples").num_rows == golden
+
     p = save_weights(str(tmp_path / "w-other.npz"), version="w-other")
-    r = subprocess.run(
-        [
-            "spark-submit", "--master", "local[2]",
-            "--conf", f"spark.executorEnv.{ENV_VAR}={p}",
-            os.path.join(REPO, "run_pipeline.py"),
-            "--input", f"{fixtures_small}/transcripts.parquet",
-            "--output", str(tmp_path / "out"), "--show", "0",
-        ],
-        capture_output=True, text=True, timeout=420, cwd=REPO,
-    )
+    r = extract("--conf", f"spark.executorEnv.{ENV_VAR}={p}")
     assert r.returncode != 0
     assert "weights-version mismatch" in r.stderr
+    assert pq.read_table(tmp_path / "out" / "triples").num_rows == golden
+    # the failed write's hidden sibling is cleaned up
+    assert os.listdir(tmp_path / "out") == ["triples"]
 
 
 def test_weights_mismatch_fails_tagging_tasks(spark, tmp_path, fixtures_small, builtin_weights):
