@@ -45,20 +45,9 @@ Why each piece of the merge is exact:
 
 Scale notes: every join here keys on node_id / norm-key
 (high-cardinality); star edges add ≤1 row per non-canonical node; the
-delta band join inherits the score-then-dedup slim-exchange ordering of
-``linking.scored_candidate_pairs``.
-
-Scope of the bit-identity guarantee: it holds for
-``max_band_bucket=None`` (the exact-linking configuration the tests and
-the driver oracle run). With a stop-band cap, the two builds are
-intentionally NOT identical when a delta grows a band bucket past the
-cap: a batch rebuild drops the whole bucket (losing old-old links that
-were legitimately scored when the bucket was small), while the
-incremental path keeps them — old connectivity rides in via the
-assignment's star edges and is never re-scored. The incremental
-behavior is the monotone one (established links don't vanish because a
-stop-surface got noisier); treat a capped batch rebuild as a fresh
-start, not as a reference the incremental chain must match.
+delta band join is the batch one (``linking.scored_candidate_pairs``)
+with only the new nodes marked ``new``, so it keeps the batch path's
+score-then-dedup slim-exchange ordering.
 """
 
 from __future__ import annotations
@@ -66,11 +55,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ner_spark.kg import JACCARD_THRESHOLD
 from ner_spark.operators.components import connected_components
 from ner_spark.operators.linking import (
-    jaccard_col,
     mention_nodes,
+    scored_candidate_pairs,
     with_signatures,
 )
 
@@ -99,60 +87,25 @@ def merge_surfaces(old: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def delta_link_edges(
-    merged_surfaces: DataFrame,
-    old_assignment: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_band_bucket: int | None = None,
+    merged_surfaces: DataFrame, old_assignment: DataFrame
 ) -> DataFrame:
     """Link edges that can change connectivity: pairs where at least one
-    endpoint is NEW (absent from ``old_assignment``).
-
-    One band join of (new nodes) × (all nodes): the new side is the
-    delta's surface dimension (tiny vs the corpus), the all side streams
-    per band. Scores compute inside the join; the dedup exchange carries
-    slim (node_a, node_b, score) rows — never shingle arrays.
+    endpoint is NEW (absent from ``old_assignment``) — the batch band
+    join with only those nodes marked ``new``, so the new side is the
+    delta's surface dimension (tiny vs the corpus) and the all side
+    streams per band.
     """
-    from ner_spark.functions.dedup import register_persist
-
-    sigs = with_signatures(merged_surfaces)
     is_new = (
         merged_surfaces.select("node_id")
         .join(old_assignment.select("node_id"), "node_id", "left_anti")
         .withColumn("new", F.lit(True))
     )
-    b = register_persist(
-        sigs.join(is_new, "node_id", "left")
-        .select(
-            "node_id",
-            "shingles",
-            F.coalesce("new", F.lit(False)).alias("new"),
-            F.explode_outer("bands").alias("band"),
-        )
+    sigs = (
+        with_signatures(merged_surfaces)
+        .join(is_new, "node_id", "left")
+        .withColumn("new", F.coalesce("new", F.lit(False)))
     )
-    if max_band_bucket is not None:
-        sizes = b.groupBy("band").count().where(F.col("count") <= max_band_bucket)
-        b = b.join(F.broadcast(sizes.select("band")), "band")
-    left = b.where(F.col("new")).select(
-        F.col("band"),
-        F.col("node_id").alias("id_l"),
-        F.col("shingles").alias("shingles_l"),
-    )
-    right = b.select(
-        F.col("band"),
-        F.col("node_id").alias("id_r"),
-        F.col("shingles").alias("shingles_r"),
-    )
-    matched = left.join(right, "band").where(F.col("id_l") != F.col("id_r"))
-    score = jaccard_col(F.col("shingles_l"), F.col("shingles_r"))
-    return (
-        matched.select(
-            F.least("id_l", "id_r").alias("node_a"),
-            F.greatest("id_l", "id_r").alias("node_b"),
-            score.alias("score"),
-        )
-        .dropDuplicates(["node_a", "node_b"])
-        .where(F.col("score") >= threshold)
-    )
+    return scored_candidate_pairs(sigs)
 
 
 def incremental_assignment(
@@ -183,8 +136,6 @@ def incremental_update(
     old_relations: DataFrame,
     delta_mentions_exploded: DataFrame,
     delta_relations: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_band_bucket: int | None = None,
 ) -> dict[str, DataFrame]:
     """Merge one delta into the KG state; returns the new state.
 
@@ -201,12 +152,7 @@ def incremental_update(
     surfaces = merge_surfaces(old_surfaces, delta_surfaces).localCheckpoint(
         eager=True
     )
-    new_edges = delta_link_edges(
-        surfaces,
-        old_assignment,
-        threshold=threshold,
-        max_band_bucket=max_band_bucket,
-    )
+    new_edges = delta_link_edges(surfaces, old_assignment)
     assignment = incremental_assignment(surfaces, old_assignment, new_edges)
     # duplicates preserved — the batch pipeline's relations stage keeps
     # per-turn list semantics; consumers (materialize_edges,

@@ -10,12 +10,12 @@ Scale design (the part the reference, a single-box repo, never had):
 * signatures are computed **row-locally** with higher-order array
   functions (``transform`` over ``sequence`` + ``array_min``) — the
   shingle set never explodes into rows, so MinHash costs zero shuffle;
-* the only wide operation is the band-key self-join. Band keys are
-  ``entity_type|band|h1-h2-h3`` — high cardinality; residual hot buckets
-  (stop-surface bands) are handled by ``max_band_bucket`` which drops
-  pathological buckets (standard LSH stop-band practice at 10^12-turn
-  scale; off by default so small-scale results match the oracle exactly)
-  plus AQE skew-join splitting from the session defaults;
+* the only wide operation is the band-key join. Band keys are
+  ``entity_type|band|h1-h2-h3`` — high cardinality; residual hot
+  buckets are split by AQE skew-join handling from the session defaults;
+* one band join serves the batch and the incremental build
+  (``scored_candidate_pairs``): only ``new`` nodes probe the band index,
+  and a batch build is the case where every node is new;
 * the verify score is computed INSIDE the band join (once per band
   collision, row-local and cheap) and the (node_a, node_b) dedup runs
   after it, so the dedup exchange carries slim scored rows — never the
@@ -25,11 +25,8 @@ Scale design (the part the reference, a single-box repo, never had):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ner_spark.kg import (
     BAND_ROWS,
@@ -145,17 +142,6 @@ def jaccard_col(a: Column, b: Column) -> Column:
     )
 
 
-@pandas_udf(T.DoubleType())
-def _pandas_jaccard(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-    out = []
-    for a, b in zip(a_s, b_s):
-        sa, sb = set(a), set(b)
-        u = len(sa | sb)
-        # int/int division — bit-identical to the JVM size/size double
-        out.append(len(sa & sb) / u if u else 0.0)
-    return pd.Series(out, dtype="float64")
-
-
 # ---------------------------------------------------------------------------
 # stage operators
 # ---------------------------------------------------------------------------
@@ -183,10 +169,9 @@ def mention_nodes(mentions_exploded: DataFrame) -> DataFrame:
     )
 
 
-def with_signatures(nodes_df: DataFrame, norm_col: str = "norm") -> DataFrame:
-    sh = char_shingles_expr(F.col(norm_col))
+def with_signatures(nodes_df: DataFrame) -> DataFrame:
     return (
-        nodes_df.withColumn("shingles", sh)
+        nodes_df.withColumn("shingles", char_shingles_expr(F.col("norm")))
         .withColumn("sh_hashes", shingle_hashes_col(F.col("shingles")))
         .withColumn("minhash", minhash_sig_from_hashes(F.col("sh_hashes")))
         .withColumn(
@@ -196,124 +181,68 @@ def with_signatures(nodes_df: DataFrame, norm_col: str = "norm") -> DataFrame:
     )
 
 
-def candidate_pairs(
-    sig_df: DataFrame, max_band_bucket: int | None = None
-) -> DataFrame:
-    """Band-blocked candidate pairs (node_a < node_b), deduped.
+def scored_candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """Linked pairs ``(node_a < node_b, score)`` with at least one ``new``
+    endpoint: band join → score → dedup → threshold, in that order.
 
-    ``max_band_bucket``: at web scale, a handful of band keys can collect
-    millions of nodes (stop-surfaces); buckets above the cap are dropped
-    before the self-join (quadratic blow-up guard). None = exact (tests).
-    """
-    b = sig_df.select(
-        # explode_outer: see dedup.candidate pairs — avoids the inferred
-        # Generate filter that re-inlines the signature expression
-        F.col("node_id"), F.col("shingles"), F.explode_outer("bands").alias("band")
-    )
-    if max_band_bucket is not None:
-        sizes = b.groupBy("band").count().where(F.col("count") <= max_band_bucket)
-        b = b.join(F.broadcast(sizes.select("band")), "band")
-    left = b.select(
-        F.col("band"),
-        F.col("node_id").alias("node_a"),
-        F.col("shingles").alias("shingles_a"),
-    )
-    right = b.select(
-        F.col("band"),
-        F.col("node_id").alias("node_b"),
-        F.col("shingles").alias("shingles_b"),
-    )
-    return (
-        left.join(right, "band")
-        .where(F.col("node_a") < F.col("node_b"))
-        .select("node_a", "node_b", "shingles_a", "shingles_b")
-        .dropDuplicates(["node_a", "node_b"])
-    )
+    ``sigs`` holds ``with_signatures`` rows plus a boolean ``new``
+    column. Only new rows probe the band index (left = new rows, right
+    = all rows), so an incremental build scores just the pairs that can
+    change connectivity; a batch build passes ``new = true`` and the
+    join is the plain self-join over ``node_a < node_b``. A new-new pair
+    is kept once (``id_l < id_r``), a new-old pair once (``~new_r``).
 
-
-def scored_candidate_pairs(
-    sig_df: DataFrame,
-    max_band_bucket: int | None = None,
-    scorer: str = "jvm",
-) -> DataFrame:
-    """Band self-join → score → dedup, in that order.
-
-    Fused form of ``candidate_pairs`` + ``score_pairs`` that scores each
-    band collision INSIDE the join's codegen span and only then dedups,
-    so the dropDuplicates exchange carries slim (node_a, node_b, score)
-    rows instead of two shingle arrays per row (same ordering as
-    ``similarity.ivf_cosine_dup_pairs`` — exchanges never carry vectors).
-    Jaccard is deterministic, so scoring before dedup is value-identical
-    to dedup-then-score; a pair sharing k bands computes the (cheap,
-    row-local) score k times instead of shuffling its arrays once — the
-    right trade at scale where the dedup exchange dominates.
+    Each band collision is scored INSIDE the join's codegen span and
+    only then deduped, so the dropDuplicates exchange carries slim
+    (node_a, node_b, score) rows instead of two shingle arrays per row
+    (same ordering as ``similarity.ivf_cosine_dup_pairs`` — exchanges
+    never carry vectors). Jaccard is deterministic, so scoring before
+    dedup is value-identical to dedup-then-score; a pair sharing k bands
+    computes the (cheap, row-local) score k times instead of shuffling
+    its arrays once — the right trade at scale where the dedup exchange
+    dominates.
     """
     from ner_spark.functions.dedup import register_persist
 
-    # the exploded band frame feeds BOTH join sides (plus the optional
-    # bucket census); without a persist each consumer re-runs the whole
-    # signature pass (md5 per shingle + minhash + band keys) over the
-    # node dimension — measured ~2x the band-join cost at sf0.1. Same
-    # bounded-LRU registry as the dedup pair generators.
+    # the exploded band frame feeds BOTH join sides; without a persist
+    # each side re-runs the whole signature pass (md5 per shingle +
+    # minhash + band keys) over the node dimension — measured ~2x the
+    # band-join cost at sf0.1. Same bounded-LRU registry as the dedup
+    # pair generators.
     b = register_persist(
-        sig_df.select(
-            F.col("node_id"), F.col("shingles"), F.explode_outer("bands").alias("band")
+        sigs.select(
+            "node_id", "shingles", "new", F.explode_outer("bands").alias("band")
         )
     )
-    if max_band_bucket is not None:
-        sizes = b.groupBy("band").count().where(F.col("count") <= max_band_bucket)
-        b = b.join(F.broadcast(sizes.select("band")), "band")
-    left = b.select(
+    left = b.where(F.col("new")).select(
         F.col("band"),
-        F.col("node_id").alias("node_a"),
-        F.col("shingles").alias("shingles_a"),
+        F.col("node_id").alias("id_l"),
+        F.col("shingles").alias("shingles_l"),
     )
     right = b.select(
         F.col("band"),
-        F.col("node_id").alias("node_b"),
-        F.col("shingles").alias("shingles_b"),
+        F.col("node_id").alias("id_r"),
+        F.col("shingles").alias("shingles_r"),
+        F.col("new").alias("new_r"),
     )
-    matched = left.join(right, "band").where(F.col("node_a") < F.col("node_b"))
-    if scorer == "pandas":
-        score = _pandas_jaccard(F.col("shingles_a"), F.col("shingles_b"))
-    else:
-        score = jaccard_col(F.col("shingles_a"), F.col("shingles_b"))
+    matched = left.join(right, "band").where(
+        (F.col("id_l") < F.col("id_r")) | ~F.col("new_r")
+    )
     return (
-        matched.select("node_a", "node_b", score.alias("score"))
+        matched.select(
+            F.least("id_l", "id_r").alias("node_a"),
+            F.greatest("id_l", "id_r").alias("node_b"),
+            jaccard_col(F.col("shingles_l"), F.col("shingles_r")).alias("score"),
+        )
         .dropDuplicates(["node_a", "node_b"])
+        .where(F.col("score") >= JACCARD_THRESHOLD)
     )
 
 
-def score_pairs(pairs_df: DataFrame, scorer: str = "jvm") -> DataFrame:
-    """Verification of candidate pairs — the entity-link scorer.
-
-    Two interchangeable physical forms of the SAME score (shingle-set
-    Jaccard; asserted bit-identical in tests):
-
-    * ``jvm`` (default): pure built-ins (array_intersect/array_union)
-      inside the join's codegen span — no Python, the fast path;
-    * ``pandas``: an Arrow-batched pandas UDF — the extension point for
-      learned scorers (an embedding-similarity or classifier scorer
-      drops into the same batched signature; the north-star
-      architecture's "pandas-UDF entity-link scorer" slot).
-
-    No shuffle beyond the join that produced the pairs either way."""
-    if scorer == "pandas":
-        return pairs_df.withColumn(
-            "score", _pandas_jaccard(F.col("shingles_a"), F.col("shingles_b"))
-        ).select("node_a", "node_b", "score")
-    return pairs_df.withColumn(
-        "score", jaccard_col(F.col("shingles_a"), F.col("shingles_b"))
-    ).select("node_a", "node_b", "score")
-
-
-def link_edges(
-    mentions_exploded: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_band_bucket: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def link_edges(mentions_exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
     """exploded mentions -> (nodes, edges). Edges connect same-type nodes
-    whose normalized surfaces pass the Jaccard threshold.
+    whose normalized surfaces pass the Jaccard threshold: the band join
+    of ``scored_candidate_pairs`` with every node new.
 
     ``nodes`` is localCheckpointed: it is the small aggregated dimension
     (|nodes| ≪ |mentions|) that three consumers re-derive otherwise —
@@ -322,7 +251,5 @@ def link_edges(
     in-query equivalent of what the manifest protocol does between
     pipeline stages (measured 2.4x on the link+CC slice)."""
     nodes = mention_nodes(mentions_exploded).localCheckpoint(eager=True)
-    sigs = with_signatures(nodes)
-    scored = scored_candidate_pairs(sigs, max_band_bucket=max_band_bucket)
-    edges = scored.where(F.col("score") >= threshold)
-    return nodes, edges
+    sigs = with_signatures(nodes).withColumn("new", F.lit(True))
+    return nodes, scored_candidate_pairs(sigs)

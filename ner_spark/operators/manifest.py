@@ -9,8 +9,11 @@ Protocol (write-audit-publish, Iceberg-style without requiring an
 Iceberg catalog in the sandbox — plain parquet dirs stand in):
 
 1. a publish first appends a ``superseded`` marker, then writes the
-   stage's output to ``<out>/<run_id>/<stage>/data`` with
-   ``mode=overwrite`` (atomic publish per stage directory);
+   stage's output to a hidden sibling ``<out>/<run_id>/<stage>/.data-<uuid>``
+   and, once that write has succeeded, swaps it in as
+   ``<out>/<run_id>/<stage>/data`` (``write_replace``: delete, then
+   rename). A visible data dir thus holds exactly one write job's
+   files, and a failed write leaves the last publish's data in place;
 2. it then reads the row count of every written data file from the
    file's parquet footer — lineage evidence from the *written* data,
    not an estimate, and no Spark job — and appends one ``complete`` row
@@ -23,7 +26,8 @@ Iceberg catalog in the sandbox — plain parquet dirs stand in):
    rows, collected before its first stage (``manifest_rows``; no Spark
    job when no manifest exists yet). An interrupted stage has no
    ``complete`` row newer than its marker, so it recomputes and its
-   overwrite replaces any torn output.
+   swap replaces the data dir; a write killed before its swap leaves
+   only a hidden sibling, which readers skip.
 
 Every append is one parquet file written by the driver through the
 Hadoop FileSystem, in the physical layout Spark writes ``MANIFEST_SCHEMA``
@@ -139,6 +143,23 @@ def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
     fs, d = hadoop_path(spark, dst)
     fs.delete(d, True)
     _rename(fs, hadoop_path(spark, src)[1], d)
+
+
+def write_replace(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet to a hidden sibling ``.<name>-<uuid>`` of
+    ``path``, then move it onto ``path`` (``replace_dir``). A failed
+    write leaves ``path``'s last good contents in place, and ``path``
+    never holds the files of two write jobs. The sibling is deleted if
+    the swap did not happen."""
+    spark = df.sparkSession
+    parent, name = os.path.split(path.rstrip("/"))
+    tmp = os.path.join(parent, f".{name}-{uuid.uuid4().hex}")
+    try:
+        df.write.parquet(tmp)
+        replace_dir(spark, tmp, path)
+    finally:
+        fs, p = hadoop_path(spark, tmp)
+        fs.delete(p, True)
 
 
 def stage_complete_in(
@@ -278,9 +299,9 @@ def publish_stage(
     # 'superseded' marker row; completeness requires complete rows to
     # be newer than the latest marker, which (a) invalidates an older
     # fingerprint's rows the moment a re-publish starts and (b) leaves
-    # the stage incomplete if we crash mid-overwrite.
+    # the stage incomplete if we crash before the complete rows.
     _append_manifest(spark, out_dir, run_id, stage, "superseded", fingerprint, [(-1, 0)])
-    df.write.mode("overwrite").parquet(path)
+    write_replace(df, path)
     # the written schema, given back: file sources read every column as
     # nullable either way, and parquet schema inference costs a job
     published = spark.read.schema(df.schema).parquet(path)

@@ -28,46 +28,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ner_spark.model.artifact import active_weights_version
 
 TAGS_FIELD = T.StructField("tags", T.ArrayType(T.StringType()), False)
-
-
-def tag_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append a ``tags`` column (BIO tag string per whitespace token).
-
-    Row-local — no shuffle; Catalyst keeps upstream filters/pruning below
-    the ArrowEvalPython node because mapInPandas preserves the schema
-    contract declared here.
-    """
-    out_schema = T.StructType(df.schema.fields + [TAGS_FIELD])
-    cols = [f.name for f in df.schema.fields]
-    expected = active_weights_version()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # heavy import inside the worker: weights + memo live per executor
-        from ner_spark.model.artifact import require_weights
-        from ner_spark.model.tagger import tag_tokens_batch
-
-        # artifact weights (--files/--archives/SparkFiles) install once
-        # per worker process and must match the driver's version;
-        # memoized dict lookup afterwards
-        require_weights(expected)
-        for pdf in batches:
-            token_lists = [t.split(" ") if t else [] for t in pdf[text_col]]
-            pdf = pdf[cols].copy()
-            pdf["tags"] = tag_tokens_batch(token_lists)
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """JVM-side tokenization column (used by extraction and stats)."""
-    return df.withColumn("tokens", F.split(F.col(text_col), " "))
 
 
 def _mentions_field() -> T.StructField:
@@ -77,18 +42,19 @@ def _mentions_field() -> T.StructField:
     return T.StructField("mentions", MENTION_TYPE, False)
 
 
-def tag_and_extract(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fused tag+extract: one mapInPandas stage appending ``tags`` AND
-    ``mentions``.
+def tag_and_extract(df: DataFrame) -> DataFrame:
+    """Fused tag+extract: one mapInPandas stage appending ``tags`` (BIO
+    tag string per whitespace token of ``text``) AND ``mentions``.
 
-    Running both in a single Python stage halves the JVM↔Python Arrow
-    traffic of the hot path — the unfused plan serializes every batch
-    back to the JVM after tagging only to ship it (plus a re-tokenized
-    copy) straight into the extraction UDF. Tokenization happens once in
-    Python and is shared by the tagger and the span extractor. Semantics
-    are identical to ``tag_turns`` + ``extract_mentions_bio`` (asserted
-    in tests); both remain available unfused for the decode-only and
-    BIOES paths.
+    Row-local — no shuffle. Running both in a single Python stage halves
+    the JVM↔Python Arrow traffic of the hot path — an unfused plan would
+    serialize every batch back to the JVM after tagging only to ship it
+    (plus a re-tokenized copy) straight into an extraction UDF.
+    Tokenization happens once in Python and is shared by the tagger and
+    the span extractor. ``mentions`` equals ``extract_mentions_bio`` over
+    the stage's own ``tags`` and ``split(text, ' ')`` (asserted in
+    tests); that UDF stays the extractor for tag sequences read from
+    elsewhere (the noisy-tag queries).
     """
     out_schema = T.StructType(
         df.schema.fields + [TAGS_FIELD, _mentions_field()]
@@ -97,13 +63,17 @@ def tag_and_extract(df: DataFrame, text_col: str = "text") -> DataFrame:
     expected = active_weights_version()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # heavy import inside the worker: weights + memo live per executor
         from ner_spark.model.artifact import require_weights
         from ner_spark.model.tagger import tag_tokens_batch
         from ner_spark.operators.extraction import mention_dicts
 
+        # artifact weights (--files/--archives/SparkFiles) install once
+        # per worker process and must match the driver's version;
+        # memoized dict lookup afterwards
         require_weights(expected)
         for pdf in batches:
-            token_lists = [t.split(" ") if t else [] for t in pdf[text_col]]
+            token_lists = [t.split(" ") if t else [] for t in pdf["text"]]
             tags_col = tag_tokens_batch(token_lists)
             mentions = [
                 mention_dicts(tags, toks)

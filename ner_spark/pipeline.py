@@ -24,7 +24,8 @@ split across range partitions because the range key includes turn_idx —
 per-conversation order survives within each range slice, and no stage
 groups by conv_id alone (relate groups by (conv_id, turn_idx); linking
 groups by surface-derived keys), so no single task inherits the whole hot
-conversation. ``salt_hot_convs`` exists for operators that DO need
+conversation (tests/test_pipeline_e2e.py asserts it on the published
+mentions files). ``salt_hot_convs`` exists for operators that DO need
 conv-level aggregation and is applied to the per-conv turn reassembly
 check in tests.
 """
@@ -70,11 +71,11 @@ STAGES = (
 )
 
 
-def ingest(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def ingest(transcripts: DataFrame) -> DataFrame:
     """Range-repartition on (conv_id, turn_idx): deterministic co-location
     of conversation slices without serializing hot conversations.
 
-    Default partition count is 2× the core count, NOT 1×: one-task-per-
+    The partition count is 2× the core count, NOT 1×: one-task-per-
     core runs the whole stage as a single wave, so any straggler task
     (skewed range, page-cache miss, one slow core) extends the stage by
     its full overhang — measured as ±15% wall-time noise on the scaling
@@ -82,9 +83,7 @@ def ingest(transcripts: DataFrame, num_partitions: int | None = None) -> DataFra
     stragglers at negligible per-task overhead (4× was measured stabler
     still but ~15% slower from task fan-out costs — BENCH.md); the range
     co-location property is unchanged (just more ranges)."""
-    n = num_partitions or (
-        transcripts.sparkSession.sparkContext.defaultParallelism * 2
-    )
+    n = transcripts.sparkSession.sparkContext.defaultParallelism * 2
     return transcripts.repartitionByRange(n, "conv_id", "turn_idx")
 
 
@@ -103,7 +102,7 @@ def build_mentions(transcripts: DataFrame) -> DataFrame:
     # and every extra column (tool, ts) would round-trip through Arrow
     # serialization for nothing. tag+extract run FUSED in one Python
     # stage (operators/tagging.py:tag_and_extract) — half the Arrow
-    # traffic of tag_turns + extract_mentions_bio.
+    # traffic of a separate tagging and extraction stage.
     slim = transcripts.select("conv_id", "turn_idx", "role", "text")
     return tag_and_extract(ingest(slim)).select(
         "conv_id", "turn_idx", "role", "text", "tags", "mentions"

@@ -94,25 +94,16 @@ def main() -> None:
         spark.stop()
         return
 
-    import uuid
-
     from ner_spark.operators.extraction import mentions_to_triples
-    from ner_spark.operators.manifest import hadoop_path, replace_dir
+    from ner_spark.operators.manifest import write_replace
     from ner_spark.pipeline import build_mentions
 
     # every tagging task checks that its worker resolves the driver's
-    # weights version, so a mismatch either way fails this write. The
-    # write goes to a hidden sibling that replaces <output>/triples only
-    # once it has succeeded: a failed run keeps the last good triples.
-    triples = mentions_to_triples(build_mentions(t))
+    # weights version, so a mismatch either way fails this write; the
+    # write replaces <output>/triples only once it has succeeded, so a
+    # failed run keeps the last good triples
     out = os.path.join(args.output, "triples")
-    tmp = os.path.join(args.output, f".triples-{uuid.uuid4().hex}")
-    try:
-        triples.write.parquet(tmp)
-        replace_dir(spark, tmp, out)
-    finally:
-        fs, p = hadoop_path(spark, tmp)
-        fs.delete(p, True)
+    write_replace(mentions_to_triples(build_mentions(t)), out)
 
     back = spark.read.parquet(out)
     n = back.count()

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from ner_spark.fixtures.build import build_fixtures
 from ner_spark.operators.components import connected_components
-from ner_spark.operators.incremental import incremental_update
+from ner_spark.operators.incremental import delta_link_edges, incremental_update
 from ner_spark.operators.linking import link_edges, mention_nodes
 from ner_spark.operators.relate import explode_mentions, extract_relations
 from ner_spark.pipeline import build_mentions, kg_tail
@@ -75,6 +75,31 @@ def test_incremental_matches_batch(spark):
         )
     )
     m.unpersist()
+
+
+def test_delta_link_edges_equals_batch_edges_touching_new(spark):
+    """The delta band join is the batch one with only new nodes probing:
+    over the fixture's surface nodes split old/new by crc32 parity, it
+    gives exactly the batch link edges with at least one new endpoint,
+    each pair once."""
+    fx = build_fixtures("sf0.001")
+    ex = spark.read.parquet(f"{fx}/reference_mentions.parquet").select(
+        F.col("pred").alias("mtype"), F.col("obj").alias("mtext")
+    )
+    nodes, edges = link_edges(ex)
+    is_old = F.crc32("node_id") % 2 == 0
+    old_assignment = nodes.where(is_old).select(
+        "node_id", F.col("node_id").alias("component")
+    )
+    old = {r.node_id for r in old_assignment.collect()}
+    got = [tuple(r) for r in delta_link_edges(nodes, old_assignment).collect()]
+    batch = [tuple(r) for r in edges.collect()]
+    want = sorted(e for e in batch if e[0] not in old or e[1] not in old)
+    assert len({(a, b) for a, b, _ in got}) == len(got)
+    assert sorted(got) == want
+    # the split is non-trivial: some batch edges are old-old, some new-new
+    assert len(want) < len(batch)
+    assert any(a not in old and b not in old for a, b, _ in want)
 
 
 def test_incremental_empty_delta_is_identity(spark):

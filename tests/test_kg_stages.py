@@ -217,25 +217,3 @@ def test_manifest_resume_idempotent(spark, fixtures_small, tmp_path_factory):
     cols = list(res1["relations"].columns)
     assert canon(res1["relations"], cols).equals(canon(res3["relations"], cols))
 
-
-def test_pandas_udf_scorer_bit_identical(spark, mentions_df):
-    """The pandas-UDF entity-link scorer (the pluggable learned-scorer
-    slot) must produce bit-identical scores to the JVM built-in path."""
-    from ner_spark.operators.linking import (
-        candidate_pairs,
-        mention_nodes,
-        score_pairs,
-        with_signatures,
-    )
-
-    pairs = candidate_pairs(with_signatures(mention_nodes(mentions_df))).cache()
-    jvm = {
-        (r["node_a"], r["node_b"]): r["score"]
-        for r in score_pairs(pairs, scorer="jvm").collect()
-    }
-    pnd = {
-        (r["node_a"], r["node_b"]): r["score"]
-        for r in score_pairs(pairs, scorer="pandas").collect()
-    }
-    pairs.unpersist()
-    assert jvm == pnd and len(jvm) > 0

@@ -92,6 +92,21 @@ def test_driver_append_format(spark, tmp_path):
     ]
 
 
+def test_failed_republish_keeps_last_publish(spark, tmp_path):
+    """A re-publish whose data write fails leaves the previous publish's
+    data dir in place, readable with its rows, and no hidden sibling
+    behind; the stage reads incomplete, so a resume recomputes it."""
+    out = str(tmp_path)
+    mf.publish_stage(spark.range(10), out, "r1", "s")
+    boom = F.when(F.col("id") == 5, F.raise_error(F.lit("boom"))).otherwise(F.col("id"))
+    with pytest.raises(Exception, match="boom"):
+        mf.publish_stage(spark.range(10).select(boom.alias("id")), out, "r1", "s")
+    path = mf.stage_data_path(out, "r1", "s")
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(10))
+    assert os.listdir(os.path.dirname(path)) == ["data"]
+    assert not mf.stage_complete(spark, out, "r1", "s")
+
+
 # -- crash points -------------------------------------------------------------
 
 

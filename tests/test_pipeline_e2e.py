@@ -1,26 +1,24 @@
-"""M1 end-to-end slice: transcripts → tag (mapInPandas) → extract → triples,
-gated against the plain-Python oracle goldens (SURVEY §5.2 #2/#3)."""
+"""M1 end-to-end slice: transcripts → fused tag+extract (mapInPandas) →
+triples, gated against the plain-Python oracle goldens (SURVEY §5.2
+#2/#3)."""
 
 import json
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ner_spark.operators.extraction import extract_mentions_bio, mentions_to_triples
-from ner_spark.operators.tagging import tag_turns, with_tokens
+from ner_spark.operators.tagging import tag_and_extract
 from ner_spark.oracle.reference import micro_prf
+from ner_spark.pipeline import build_mentions
 
 
 def _triples_df(spark, fixtures_small):
     t = spark.read.parquet(f"{fixtures_small}/transcripts.parquet")
-    t = t.repartitionByRange(8, "conv_id", "turn_idx")
-    tagged = tag_turns(t)
-    m = with_tokens(tagged).withColumn(
-        "mentions", extract_mentions_bio(F.col("tags"), F.col("tokens"))
-    )
-    return mentions_to_triples(m)
+    return mentions_to_triples(build_mentions(t))
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark, fixtures_small):
@@ -68,16 +66,13 @@ def test_tagging_deterministic_across_parallelism(spark, fixtures_small):
     # extraction must be row-local and order-free: different partitioning,
     # identical triples (SURVEY §7.4 determinism across parallelism levels)
     t = spark.read.parquet(f"{fixtures_small}/transcripts.parquet")
-    a = mentions_to_triples(
-        with_tokens(tag_turns(t.repartition(17))).withColumn(
-            "mentions", extract_mentions_bio(F.col("tags"), F.col("tokens"))
-        )
-    ).toPandas()
-    b = mentions_to_triples(
-        with_tokens(tag_turns(t.coalesce(1))).withColumn(
-            "mentions", extract_mentions_bio(F.col("tags"), F.col("tokens"))
-        )
-    ).toPandas()
+    m = tag_and_extract(t.repartition(17))
+    # the unfused extraction UDF over the fused stage's own tags and
+    # whitespace tokens reproduces its mentions, row by row
+    unfused = extract_mentions_bio(F.col("tags"), F.split(F.col("text"), " "))
+    assert m.where(~unfused.eqNullSafe(F.col("mentions"))).count() == 0
+    a = mentions_to_triples(m).toPandas()
+    b = mentions_to_triples(tag_and_extract(t.coalesce(1))).toPandas()
     key = ["conv_id", "turn_idx", "pred", "obj"]
     assert a.sort_values(key).reset_index(drop=True)[key].equals(
         b.sort_values(key).reset_index(drop=True)[key]
@@ -117,19 +112,26 @@ def test_hot_conv_salting_bounds_groups(spark, fixtures_small):
     assert max(g["n"] for g in hot_groups) <= bound
 
 
-def test_full_pipeline_canonical_triples_stage(spark, fixtures_small, tmp_path_factory):
+@pytest.fixture(scope="module")
+def published(spark, fixtures_small, tmp_path_factory):
+    """``run_pipeline`` over the fixture: (out_dir, published frames)."""
+    from ner_spark.pipeline import PipelineConfig, run_pipeline
+
+    out_dir = str(tmp_path_factory.mktemp("kgout"))
+    t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
+    return out_dir, run_pipeline(spark, t, PipelineConfig(out_dir=out_dir, run_id="r1"))
+
+
+def test_full_pipeline_canonical_triples_stage(spark, fixtures_small, published):
     """run_pipeline materializes the canonical_triples stage and it
     matches the union-find oracle golden; the same stage graph under the
     entry queries' localCheckpoint materializer gives the published
     rows of every link/CC/graph stage."""
-    import os
-
     from ner_spark.entry_queries import _checkpoint
-    from ner_spark.pipeline import PipelineConfig, kg_stages, run_pipeline
+    from ner_spark.pipeline import kg_stages
 
-    out_dir = str(tmp_path_factory.mktemp("kgout"))
+    _, res = published
     t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
-    res = run_pipeline(spark, t, PipelineConfig(out_dir=out_dir, run_id="r1"))
     got = {
         tuple(r)
         for r in res["canonical_triples"]
@@ -152,6 +154,36 @@ def test_full_pipeline_canonical_triples_stage(spark, fixtures_small, tmp_path_f
     checkpointed = kg_stages(t, _checkpoint)
     for stage in ("link_edges", "assignment", "nodes", "edges", "canonical_triples"):
         assert rows(checkpointed[stage]) == rows(res[stage]), stage
+
+
+def test_mentions_files_spread_hot_conversation(spark, published):
+    """The ingest's skew claim (``pipeline.py``): range partitioning on
+    (conv_id, turn_idx) splits the hot conversation (~30% of turns)
+    over several tasks, so no published mentions file is much larger
+    than the median one. File rows come from the stage's ``complete``
+    manifest rows (parquet footers)."""
+    import statistics
+
+    from ner_spark.operators import manifest as mf
+
+    out_dir, res = published
+    rows = [
+        r.rows
+        for r in mf.manifest_rows(spark, out_dir, ["r1"])
+        if (r.stage, r.status) == ("mentions", "complete") and r.partition_id >= 0
+    ]
+    assert len(rows) >= 2
+    # 1.004 at sf0.001 on local[4]: 8 files of 112-113 turns
+    assert max(rows) <= 1.5 * statistics.median(rows), rows
+    hot = (
+        res["mentions"].groupBy("conv_id").count()
+        .orderBy(F.desc("count")).first()["conv_id"]
+    )
+    files = (
+        res["mentions"].where(F.col("conv_id") == hot)
+        .select(F.input_file_name()).distinct().count()
+    )
+    assert files >= 2
 
 
 def test_spark_submit_py_files_zip_channel(tmp_path, fixtures_small):

@@ -60,17 +60,11 @@ def test_stream_batch_parity_and_incremental_resume(spark, stream_dirs, fixtures
     )
     got1 = _triples_multiset(spark.read.parquet(stream_dirs["out"]))
 
-    from ner_spark.operators.extraction import (
-        extract_mentions_bio,
-        mentions_to_triples,
-    )
-    from ner_spark.operators.tagging import tag_turns, with_tokens
+    from ner_spark.operators.extraction import mentions_to_triples
+    from ner_spark.pipeline import build_mentions
 
     def batch_triples(df):
-        m = with_tokens(tag_turns(df)).withColumn(
-            "mentions", extract_mentions_bio(F.col("tags"), F.col("tokens"))
-        )
-        return mentions_to_triples(m)
+        return mentions_to_triples(build_mentions(df))
 
     batch1 = _triples_multiset(
         batch_triples(spark.read.parquet(stream_dirs["input"]))
@@ -125,13 +119,13 @@ def test_windowed_rollup_matches_batch(spark, stream_dirs, tmp_path):
     }
 
     # batch restatement of the same rollup
-    from ner_spark.operators.extraction import distinct_pairs, extract_mentions_bio
-    from ner_spark.operators.tagging import tag_turns, with_tokens
+    from ner_spark.operators.extraction import distinct_pairs
+    from ner_spark.operators.tagging import tag_and_extract
 
     t = spark.read.parquet(stream_dirs["input"])
-    pairs = with_tokens(tag_turns(t)).withColumn(
-        "mentions", extract_mentions_bio(F.col("tags"), F.col("tokens"))
-    ).withColumn("pair", F.explode(distinct_pairs(F.col("mentions"))))
+    pairs = tag_and_extract(t).withColumn(
+        "pair", F.explode(distinct_pairs(F.col("mentions")))
+    )
     want = {
         (r["ws"], r["pred"]): r["n"]
         for r in pairs.groupBy(
