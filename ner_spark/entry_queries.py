@@ -1479,11 +1479,6 @@ def _fx(sf_dir: str) -> str:
     return build_fixtures(sf if sf in SF_TURNS else "sf0.01")
 
 
-def _golden(name: str) -> str:
-    """Oracle-side path of a golden at the driver's correctness scale."""
-    return os.path.join(FIXTURES_SQL_ROOT, name)
-
-
 _SESSION_TABLES: dict[tuple[str, object], object] = {}
 
 
@@ -3334,7 +3329,9 @@ def q_kg_edge_diff(spark, sf_dir):
     from ner_spark.operators.graph import edge_diff
     from ner_spark.operators.linking import md5_hash60_col
 
-    ct = spark.read.parquet(_golden("canonical_triples.parquet"))
+    ct = spark.read.parquet(
+        os.path.join(_fx(sf_dir), "canonical_triples.parquet")
+    )
 
     def agg(df):
         return df.groupBy(

@@ -490,8 +490,8 @@ def lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     neighbor label with the highest total edge weight, ties to the
     smallest label via ``min(struct(-score, label))`` — one node-keyed
     join, one (node, label)-keyed weight sum, one node-keyed arg-min,
-    all map-side combinable. This is the per-round plan PLANS.md
-    asserts."""
+    all map-side combinable. This is the per-round plan the
+    ``kg_communities`` plan spec asserts (tools/explain_plans.py)."""
     nbr_lbl = und.join(
         labels.select(F.col("x").alias("y"), "lbl"), "y"
     ).select("x", "lbl", "w")
@@ -682,8 +682,9 @@ def undirected_edges(
 def peel_round(e: DataFrame, k: int) -> DataFrame:
     """One k-core peel round over an undirected (a, b) edge frame: drop
     every edge touching a node of current degree < k. One map-side-
-    combined degree aggregate + two left-semi restrictions — the plan
-    PLANS.md asserts per round."""
+    combined degree aggregate + two left-semi restrictions — the
+    per-round plan the ``kg_kcore`` plan spec asserts
+    (tools/explain_plans.py)."""
     deg = (
         e.select(F.col("a").alias("x"))
         .unionByName(e.select(F.col("b").alias("x")))
@@ -2770,6 +2771,15 @@ def personalized_pagerank(
     )
 
 
+def _release_checkpoint(*frames) -> None:
+    """Drop the cached blocks behind localCheckpointed frames (``None``
+    entries are skipped). ``DataFrame.unpersist`` does not reach them:
+    the blocks belong to the RDD under the frame's ``LogicalRDD``."""
+    for df in frames:
+        if df is not None:
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
     """HITS hubs-and-authorities over the DISTINCT directed canonical
     edge set: ``(entity_id, hub_micro, auth_micro)`` on the 10⁻⁶
@@ -2831,6 +2841,10 @@ def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
         # Measured neutral at sf0.1 (the 882-node graph is per-job-
         # overhead-dominated); the win is the halved join volume at
         # data scale, where the edge join IS the iteration cost.
+        #
+        # Each vector is checkpointed eagerly so the raw sums it was
+        # computed from (and the vector it replaces) can be released at
+        # once: a long-lived driver keeps only the final hub/auth pair.
         for _ in range(iters):
             a_raw = (
                 e.join(hub, e.s == hub.x)
@@ -2838,7 +2852,7 @@ def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
                 .agg(F.sum("score").alias("raw"))
             ).localCheckpoint(eager=True)
             a_tot = a_raw.agg(F.sum("raw")).collect()[0][0] or 1.0
-            auth = (
+            new_auth = (
                 nodes.join(a_raw, nodes.x == a_raw.d, "left")
                 .select(
                     "x",
@@ -2846,15 +2860,17 @@ def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
                         F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(a_tot)
                     ).alias("score"),
                 )
-                .localCheckpoint()
+                .localCheckpoint(eager=True)
             )
+            _release_checkpoint(a_raw, auth)
+            auth = new_auth
             h_raw = (
                 e.join(auth, e.d == auth.x)
                 .groupBy("s")
                 .agg(F.sum("score").alias("raw"))
             ).localCheckpoint(eager=True)
             h_tot = h_raw.agg(F.sum("raw")).collect()[0][0] or 1.0
-            hub = (
+            new_hub = (
                 nodes.join(h_raw, nodes.x == h_raw.s, "left")
                 .select(
                     "x",
@@ -2862,8 +2878,10 @@ def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
                         F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(h_tot)
                     ).alias("score"),
                 )
-                .localCheckpoint()
+                .localCheckpoint(eager=True)
             )
+            _release_checkpoint(h_raw, hub)
+            hub = new_hub
     finally:
         e.unpersist()
         nodes.unpersist()

@@ -1,175 +1,31 @@
-"""Pin the scale-critical physical-plan assertions in CI.
+"""Every physical-plan spec in tools/explain_plans.py, checked in CI.
 
-tools/explain_plans.py asserts 112 plan properties, but only when PLANS.md
-is regenerated — a plan regression between regenerations (a lost pushdown,
-a new exchange, Python leaking into a hot path) stayed invisible until the
-next audit (VERDICT r04 directive 6). This file executes the SAME spec
-dicts (imported from tools/explain_plans.py — one source of truth) for the
-scale-critical plans on the sf0.001 fixture at every pytest run, so
-breaking a plan property fails CI immediately.
+``CHECKS`` there is the one statement of each plan property (pushdown
+reaches the scan, dimension joins broadcast, row-local operators add no
+Exchange, the tagger is one fused MapInPandas after one range Exchange,
+...). Each spec is one case here: its frame is built on the sf0.001
+inputs and its formatted plan must show no violation, so a lost
+pushdown, a new Exchange or Python leaking into a hot path fails CI.
 
-Planning only — .explain() never executes the query, so each case costs
-milliseconds once the session is up.
+Planning only — .explain() never executes the query (a few specs' frames
+run eager checkpoints while they are built).
 """
 
 import os
-import re
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _TOOLS = os.path.join(REPO_ROOT, "tools")
 if _TOOLS not in sys.path:
     sys.path.insert(0, _TOOLS)
 
-from explain_plans import CHECKS, formatted  # noqa: E402
+from explain_plans import CHECKS, build, formatted, violations  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _n_exchanges(plan: str) -> int:
-    # tree nodes render as "+- Exchange", ":- Exchange" (non-last child
-    # of a binary op) or bare "Exchange (" at the root
-    return len(re.findall(r"(?:[:+]- |^)Exchange \(", plan, re.M))
-
-
-def _assert_spec(name: str, plan: str, spec: dict) -> None:
-    for s in spec["requires"]:
-        assert s in plan, f"{name}: plan lost required property {s!r}"
-    for s in spec["forbids"]:
-        assert s not in plan, f"{name}: forbidden {s!r} appeared in plan"
-    cap = spec.get("max_tree_exchanges")
-    if cap is not None:
-        n = _n_exchanges(plan)
-        assert n <= cap, f"{name}: {n} Exchanges > cap {cap}"
-
-
-# QUERIES-built scale-critical plans: pushdown (priority_count), broadcast
-# (top_revenue_nations), the zero/one-exchange devices (chunk_windows,
-# weighted_sample, pack_windows, token_percentiles), bounded-state dedup
-# (conv_dedup) and the as-of join (events_asof_view).
-_PLAIN = [
-    "priority_count",
-    "top_revenue_nations",
-    "pack_windows",
-    "token_percentiles",
-    "conv_dedup",
-    "events_asof_view",
-    "chunk_windows",
-    "weighted_sample",
-    "small_quantity_revenue",
-    "event_cube",
-    # the round-5 relational-shape wave: pushdown probe (Q6), semi-join
-    # decorrelation (Q4), top-k heap (Q3), ALL-decorrelation broadcast,
-    # the skyline's checkpointed single-scan shape, and the band join's
-    # never-a-nested-loop guarantee
-    "shipping_priority",
-    "late_shipment_priority",
-    "discount_band_revenue",
-    "monthly_record_orders",
-    "pareto_orders",
-    "event_attribution",
-]
-
-
-@pytest.mark.parametrize("name", _PLAIN)
-def test_plan_pin(spark, fixtures_small, name):
-    from ner_spark.entry_queries import QUERIES
-
-    plan = formatted(QUERIES[name](spark, SF_DIR))
-    _assert_spec(name, plan, CHECKS[name])
-
-
-def test_plan_pin_conv_near_dup_sig(spark, fixtures_small):
-    """The minhash signature stage (same construction as the
-    explain_plans builder): turn-local shingle rows + plain min
-    aggregates, no posexplode, no conversation-sized buffer."""
-    from ner_spark.functions.dedup import conv_shingle_rows
-    from ner_spark.operators.linking import (
-        H31_MASK,
-        MERSENNE61,
-        MINHASH_A,
-        MINHASH_B,
-    )
-
-    t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
-    sh = conv_shingle_rows(t, include_tiny=False, distinct=False)
-
-    def _perm(i):
-        h31 = F.col("h").bitwiseAND(F.lit(H31_MASK))
-        return (h31 * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(
-            MERSENNE61
-        )
-
-    df = sh.groupBy("conv_id").agg(
-        F.array(*[F.min(_perm(i)) for i in range(len(MINHASH_A))]).alias(
-            "minhash"
-        )
-    )
-    _assert_spec(
-        "conv_near_dup_sig", formatted(df), CHECKS["conv_near_dup_sig"]
-    )
-
-
-def test_plan_pin_flagship(spark, fixtures_small):
-    """The flagship tag->extract stage: Scan -> ONE range Exchange -> a
-    single fused MapInPandas (the whole NER/Viterbi/extraction chain in
-    one Arrow pass); the relations stage adds NO further exchange (pair
-    generation is row-local over the per-turn mention array)."""
-    from ner_spark.operators.relate import extract_relations
-    from ner_spark.pipeline import build_mentions
-
-    t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
-    m = build_mentions(t)
-    plan = formatted(m)
-    assert "MapInPandas" in plan
-    assert _n_exchanges(plan) == 1, "flagship must stay Scan->Exchange->fused MapInPandas"
-    rel_plan = formatted(extract_relations(m))
-    assert _n_exchanges(rel_plan) == 1, "relations must add no exchange beyond the upstream range partition"
-
-
-def test_plan_pin_degree_stats(spark, fixtures_small):
-    """Graph-analytics entry shape over the materialized edge table:
-    both endpoint roles union into one slim stream and reduce through a
-    single hash aggregate — exactly ONE Exchange, no join, no Python."""
-    from ner_spark.operators.graph import degree_stats
-
-    edges = spark.read.parquet(os.path.join(fixtures_small, "edges.parquet"))
-    plan = formatted(degree_stats(edges))
-    assert _n_exchanges(plan) == 1
-    assert "Union" in plan
-    assert "Python" not in plan
-
-
-def test_plan_pin_fact_history(spark, fixtures_small):
-    """SCD-2 fact timeline: ONE Exchange on (pred, src_entity) feeds
-    BOTH windows (change-collapse lag + interval lead/version); the
-    functional census joins back as a broadcast."""
-    from ner_spark.operators.graph import fact_history
-
-    ct = spark.read.parquet(
-        os.path.join(fixtures_small, "canonical_triples.parquet")
-    )
-    t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
-    _assert_spec(
-        "kg_fact_history",
-        formatted(fact_history(ct, t)),
-        CHECKS["kg_fact_history"],
-    )
-
-
-def test_plan_pin_pred_algebra(spark, fixtures_small):
-    """Relation-algebra census: reversed-pair join on the full
-    (subj, obj) key; argmax-inverse is a struct max — no Window."""
-    from ner_spark.operators.graph import pred_algebra
-
-    ct = spark.read.parquet(
-        os.path.join(fixtures_small, "canonical_triples.parquet")
-    )
-    _assert_spec(
-        "kg_pred_algebra",
-        formatted(pred_algebra(ct)),
-        CHECKS["kg_pred_algebra"],
-    )
+@pytest.mark.parametrize("name", sorted(CHECKS))
+def test_plan_pin(spark, name):
+    assert violations(name, formatted(build(spark, name, SF_DIR))) == []

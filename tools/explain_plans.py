@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Physical-plan evidence generator → PLANS.md.
+"""Physical-plan checks for the plan shapes the 100 TB design rests on.
 
-For each headline operator, capture ``df.explain("formatted")`` and
-assert the plan properties the 100 TB design depends on:
+``CHECKS`` is the one statement of each check. For every headline
+operator it names the plan properties the design depends on:
 
 * filters/column pruning reach the parquet scan (PushedFilters /
   ReadSchema);
@@ -10,21 +10,48 @@ assert the plan properties the 100 TB design depends on:
   joins under AQE;
 * row-local operators (extraction, minhash, simhash, quality) contain
   NO Exchange — one whole-stage-codegen span over the scan;
-* the tagger is a single ArrowEvalPython/MapInPandas node fed directly
-  by the scan + one range Exchange.
+* the tagger is a single MapInPandas node fed directly by the scan +
+  one range Exchange.
 
-Run: python tools/explain_plans.py [sf_dir]  (writes PLANS.md)
+A spec lists substrings the formatted plan ``requires`` and ``forbids``,
+and optionally caps (``max_tree_exchanges``) or fixes (``tree_exchanges``)
+the number of Exchange nodes in the plan tree. ``build`` makes each
+spec's frame and ``violations`` checks its plan; tests/test_plan_pins.py
+runs every spec.
+
+Run: python tools/explain_plans.py [sf_dir] [--only a,b]
+prints each plan with its verdicts and exits 1 on any violation.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from ner_spark.entry_queries import QUERIES, _fx  # noqa: E402
+from ner_spark.functions.bpe import _PAIRS_EXPR, word_histogram  # noqa: E402
+from ner_spark.functions.datasets import mention_contexts  # noqa: E402
+from ner_spark.functions.dedup import conv_shingle_rows  # noqa: E402
+from ner_spark.operators import graph  # noqa: E402
+from ner_spark.operators.alias import alias_pairs  # noqa: E402
+from ner_spark.operators.linking import (  # noqa: E402
+    H31_MASK,
+    MERSENNE61,
+    MINHASH_A,
+    MINHASH_B,
+)
+from ner_spark.operators.relate import extract_relations  # noqa: E402
+from ner_spark.operators.segments import tool_transitions, topic_segments  # noqa: E402
+from ner_spark.pipeline import build_mentions  # noqa: E402
+from ner_spark.session import get_spark  # noqa: E402
 
 
 def formatted(df) -> str:
@@ -32,6 +59,198 @@ def formatted(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _bfs_hop(edges):
+    """One frontier-expansion hop of the BFS loop."""
+    e = edges.select(
+        F.col("src_entity").alias("s"), F.col("dst_entity").alias("d")
+    ).distinct()
+    # a deterministic filter, not limit(): a global limit would add its
+    # own SinglePartition exchange that the real BFS loop (whose
+    # frontiers come from checkpointed frames) never contains
+    frontier = (
+        e.select(F.col("s").alias("x")).where(F.length("x") % 2 == 0).distinct()
+    )
+    return (
+        frontier.join(e, frontier.x == e.s)
+        .select(F.col("d").alias("x"))
+        .distinct()
+        .join(frontier, "x", "left_anti")
+    )
+
+
+def _closure_round(edges):
+    """One frontier-expansion round of the transitive closure (the real
+    loop's frames come from checkpointed parents, same device as the BFS
+    hop and the k-core peel)."""
+    e = (
+        edges.where(
+            F.col("pred").isin("affiliated_with", "based_in", "located_in")
+        )
+        .select(F.col("src_entity").alias("s"), F.col("dst_entity").alias("d"))
+        .where(F.col("s") != F.col("d"))
+        .distinct()
+    )
+    step = e.select(F.col("s").alias("m"), F.col("d").alias("nd"))
+    return (
+        e.join(step, e.d == step.m)
+        .select("s", F.col("nd").alias("d"))
+        .where(F.col("s") != F.col("d"))
+        .distinct()
+        .join(e.select("s", "d"), ["s", "d"], "left_anti")
+    )
+
+
+def _lpa_round(edges):
+    und = graph.weighted_undirected(edges)
+    labels = und.select("x").distinct().withColumn("lbl", F.col("x"))
+    return graph.lpa_round(und, labels)
+
+
+def _near_dup_sig(transcripts):
+    """The minhash signature stage: turn-local shingle rows + plain min
+    aggregates."""
+    sh = conv_shingle_rows(transcripts, include_tiny=False, distinct=False)
+    h31 = F.col("h").bitwiseAND(F.lit(H31_MASK))
+    return sh.groupBy("conv_id").agg(
+        F.array(
+            *[
+                F.min((h31 * F.lit(a) + F.lit(b)) % F.lit(MERSENNE61))
+                for a, b in zip(MINHASH_A, MINHASH_B)
+            ]
+        ).alias("minhash")
+    )
+
+
+def _bpe_round(spark, sf_dir):
+    """One BPE merge iteration over the checkpointed word histogram."""
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    w = word_histogram(docs).localCheckpoint(eager=True)
+    return (
+        w.select(F.explode(F.expr(_PAIRS_EXPR)).alias("p"), "wcount")
+        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+        .agg(F.sum("wcount").alias("cnt"))
+        .where(F.col("cnt") >= 2)
+        .orderBy(F.desc("cnt"), "l", "r")
+        .limit(1)
+    )
+
+
+def _on_goldens(op, *tables):
+    """A frame of ``op`` over the fixture goldens for ``sf_dir``: graph
+    analytics in production read the persisted KG tables, not the fused
+    extraction lineage, so their plans are checked over the golden
+    tables (the schemas the materialize stages write)."""
+
+    def frame(spark, sf_dir):
+        fx = _fx(sf_dir)
+        return op(
+            *(spark.read.parquet(os.path.join(fx, f"{t}.parquet")) for t in tables)
+        )
+
+    return frame
+
+
+# every spec whose frame is not its QUERIES entry
+FRAMES = {
+    "kg_degree_stats": _on_goldens(graph.degree_stats, "edges"),
+    "kg_triangles": _on_goldens(graph.triangle_count, "edges"),
+    "kg_pred_profile": _on_goldens(graph.pred_cardinality_profile, "edges"),
+    "kg_functional_violations": _on_goldens(
+        graph.functional_violations, "edges"
+    ),
+    "kg_paths_2hop": _on_goldens(graph.paths_2hop, "edges"),
+    "kg_pred_signatures": _on_goldens(graph.pred_type_signatures, "edges"),
+    "kg_adamic_adar": _on_goldens(graph.adamic_adar, "edges"),
+    "kg_random_walks": _on_goldens(graph.random_walks, "edges"),
+    "kg_skipgram_pairs": _on_goldens(
+        lambda e: graph.walk_skipgram_pairs(graph.random_walks(e)), "edges"
+    ),
+    "kg_community_profiles": _on_goldens(graph.community_profiles, "edges"),
+    "kg_edge_split": _on_goldens(graph.edge_holdout_split, "edges"),
+    "kg_bfs_hops": _on_goldens(_bfs_hop, "edges"),
+    "kg_transitive_closure": _on_goldens(_closure_round, "edges"),
+    "kg_communities": _on_goldens(_lpa_round, "edges"),
+    # one peel round: the loop localCheckpoints between rounds, so the
+    # per-round plan is the thing that must scale
+    "kg_kcore": _on_goldens(
+        lambda e: graph.peel_round(graph.undirected_edges(e), 2), "edges"
+    ),
+    "kg_entity_cards": _on_goldens(graph.entity_cards, "nodes", "edges"),
+    "kg_alias_pairs": _on_goldens(alias_pairs, "nodes"),
+    "kg_edge_temporal": _on_goldens(
+        graph.edge_temporal_profile, "canonical_triples", "transcripts"
+    ),
+    "kg_edge_decay": _on_goldens(
+        lambda ct, t: graph.edge_decay_weights(ct, t, halflife_days=7),
+        "canonical_triples",
+        "transcripts",
+    ),
+    "kg_current_facts": _on_goldens(
+        graph.current_facts, "canonical_triples", "transcripts"
+    ),
+    "kg_fact_history": _on_goldens(
+        graph.fact_history, "canonical_triples", "transcripts"
+    ),
+    "kg_entity_pmi": _on_goldens(
+        graph.entity_cooccurrence_pmi, "canonical_triples"
+    ),
+    "kg_pred_algebra": _on_goldens(graph.pred_algebra, "canonical_triples"),
+    "kg_rule_confidence": _on_goldens(
+        graph.rule_confidence, "canonical_triples"
+    ),
+    "kg_edge_provenance": _on_goldens(
+        graph.edge_provenance, "canonical_triples"
+    ),
+    "kg_cloze_questions": _on_goldens(
+        graph.cloze_questions, "canonical_triples"
+    ),
+    "kg_verbalize": _on_goldens(
+        lambda ct: graph.verbalize_entities(ct, max_facts=32),
+        "canonical_triples",
+    ),
+    "kg_mention_contexts": _on_goldens(
+        lambda m, t: mention_contexts(m, t, window=3),
+        "reference_mentions",
+        "transcripts",
+    ),
+    "kg_topic_segments": _on_goldens(topic_segments, "transcripts"),
+    "tool_transitions": _on_goldens(tool_transitions, "transcripts"),
+    "conv_near_dup_sig": _on_goldens(_near_dup_sig, "transcripts"),
+    "build_mentions": _on_goldens(build_mentions, "transcripts"),
+    "extract_relations": _on_goldens(
+        lambda t: extract_relations(build_mentions(t)), "transcripts"
+    ),
+    "bpe_round": _bpe_round,
+}
+
+
+def build(spark, name: str, sf_dir: str):
+    """The frame whose plan the spec ``name`` checks."""
+    frame = FRAMES.get(name)
+    return frame(spark, sf_dir) if frame else QUERIES[name](spark, sf_dir)
+
+
+# formatted plans render each node twice (tree + detail); tree nodes
+# render as "+- Exchange", ":- Exchange" (non-last child of a binary
+# op) or bare "Exchange (" at the root
+_TREE_EXCHANGE = re.compile(r"(?:[:+]- |^)Exchange \(", re.M)
+
+
+def violations(name: str, plan: str) -> list[str]:
+    """Every way ``plan`` breaks the spec ``CHECKS[name]``."""
+    spec = CHECKS[name]
+    out = [f"missing {s!r}" for s in spec["requires"] if s not in plan]
+    out += [f"forbidden {s!r}" for s in spec["forbids"] if s in plan]
+    n = len(_TREE_EXCHANGE.findall(plan))
+    cap = spec.get("max_tree_exchanges")
+    if cap is not None and n > cap:
+        out.append(f"{n} tree Exchanges > cap {cap}")
+    exact = spec.get("tree_exchanges")
+    if exact is not None and n != exact:
+        out.append(f"{n} tree Exchanges, expected exactly {exact}")
+    return out
 
 
 CHECKS = {
@@ -327,17 +546,17 @@ CHECKS = {
         ),
     ),
     "kg_degree_stats": dict(
-        requires=[],
+        requires=["Union"],
         forbids=["Join", "Python"],
-        max_tree_exchanges=1,
-        builder="edges",
+        tree_exchanges=1,
         note=(
             "Degree profile over the MATERIALIZED edge table (the "
             "production shape — analytics read the persisted KG, not the "
             "fused extraction lineage) compiles to ZERO joins (asserted): "
-            "both endpoint roles union into one slim 5-column stream "
-            "reduced by a single hash aggregate — one exchange over 2|E| "
-            "rows with map-side combine. The minimal-movement plan at "
+            "both endpoint roles union (asserted) into one slim 5-column "
+            "stream reduced by a single hash aggregate — exactly one "
+            "exchange (asserted) over 2|E| rows with map-side combine, no "
+            "Python. The minimal-movement plan at "
             "10^12 edges."
         ),
     ),
@@ -358,7 +577,6 @@ CHECKS = {
     "kg_edge_decay": dict(
         requires=[],
         forbids=["Python", "SortMergeJoin", "CartesianProduct"],
-        builder="decay",
         note=(
             "Recency-decayed edge weights over the materialized canonical "
             "triples: the decay contribution is an exact power-of-two "
@@ -384,7 +602,6 @@ CHECKS = {
         requires=[],
         forbids=["Python", "SortMergeJoin"],
         max_tree_exchanges=2,
-        builder="temporal",
         note=(
             "Edge provenance windows over the materialized canonical "
             "triples: the transcripts side prunes to (conv_id, turn_idx, "
@@ -397,7 +614,6 @@ CHECKS = {
     "kg_pred_profile": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="edges",
         note=(
             "Schema induction: two (pred, endpoint)-keyed distinct "
             "aggregates reduced to per-pred maxima plus one pred "
@@ -409,7 +625,6 @@ CHECKS = {
     "kg_functional_violations": dict(
         requires=["Broadcast"],
         forbids=["Python", "CartesianProduct"],
-        builder="edges",
         note=(
             "Conflict detection: one (pred, subject)-keyed collect_set "
             "(bounded by per-subject fan-out), a tiny induced-schema "
@@ -422,7 +637,6 @@ CHECKS = {
     "kg_current_facts": dict(
         requires=["Broadcast"],
         forbids=["Python", "CartesianProduct", "SinglePartition", "Window"],
-        builder="current_facts",
         note=(
             "Latest-wins fact resolution: ts rides the turn-keyed join, "
             "then ONE (pred, subject)-keyed aggregate computes arg-max "
@@ -436,7 +650,6 @@ CHECKS = {
     "kg_paths_2hop": dict(
         requires=["LeftSemi"],
         forbids=["Python", "CartesianProduct"],
-        builder="edges",
         note=(
             "2-hop path enumeration: two endpoint row-count aggregates "
             "derive the wedge cap, surviving mids restrict both edge "
@@ -449,7 +662,6 @@ CHECKS = {
     "kg_communities": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition", "Window"],
-        builder="lpa_round",
         note=(
             "One synchronous label-propagation round (the loop "
             "localCheckpoints between rounds, so the per-round plan is "
@@ -463,7 +675,6 @@ CHECKS = {
     "kg_mention_contexts": dict(
         requires=[],
         forbids=["Python", "SortMergeJoin", "CartesianProduct"],
-        builder="mention_ctx",
         note=(
             "EL training contexts over the materialized mentions + "
             "transcripts goldens: one turn-keyed hash join (broadcast "
@@ -477,7 +688,6 @@ CHECKS = {
     "kg_pred_signatures": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="edges",
         note=(
             "Typed ontology induction: one row-local type projection "
             "(ids carry their type prefix) + one map-side-combinable "
@@ -488,7 +698,6 @@ CHECKS = {
     "kg_bfs_hops": dict(
         requires=["LeftAnti"],
         forbids=["Python", "CartesianProduct", "SinglePartition", "Window"],
-        builder="bfs_hop",
         note=(
             "One BFS hop (the loop localCheckpoints between hops, so "
             "the per-hop plan is the thing that must scale): the "
@@ -502,7 +711,6 @@ CHECKS = {
     "kg_adamic_adar": dict(
         requires=["LeftAnti"],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="edges",
         note=(
             "Link-prediction scoring: per-mid wedge enumeration rides "
             "the adaptive salted skew-split self-join (hot mids spread "
@@ -516,7 +724,6 @@ CHECKS = {
     "kg_random_walks": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="edges",
         note=(
             "Deterministic DeepWalk corpus: the visible plan is the "
             "LAST step (the loop localCheckpoints between steps) — two "
@@ -530,7 +737,6 @@ CHECKS = {
     "kg_alias_pairs": dict(
         requires=["LeftAnti"],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="alias_nodes",
         note=(
             "PassJoin segment blocking: linear O(d^3)-keys-per-row "
             "candidate generation, two-sided salted join for hot "
@@ -543,7 +749,6 @@ CHECKS = {
     "kg_community_profiles": dict(
         requires=[],
         forbids=["Python", "CartesianProduct"],
-        builder="edges",
         note=(
             "Community summarization over the LPA labels (rounds are "
             "localCheckpointed upstream): one persisted (node, "
@@ -561,7 +766,6 @@ CHECKS = {
     "kg_skipgram_pairs": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="edges",
         note=(
             "Skip-gram pair extraction from the walk corpus: the "
             "windowed (center, context) enumeration is row-local "
@@ -587,7 +791,6 @@ CHECKS = {
     "kg_edge_split": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition", "Window"],
-        builder="edges",
         note=(
             "Transductive edge holdout: one row-local hash projection "
             "(split is a pure function of the edge triple — stable "
@@ -599,7 +802,6 @@ CHECKS = {
     "kg_entity_cards": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="cards",
         note=(
             "Entity profile cards: degree and predicate participation "
             "reduce the edge list via map-side-combinable aggregates "
@@ -612,7 +814,6 @@ CHECKS = {
     "kg_topic_segments": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="segments",
         note=(
             "Content-based topic segmentation: token sets are "
             "row-local, the lag + running boundary sum ride ONE window "
@@ -624,7 +825,6 @@ CHECKS = {
     "tool_transitions": dict(
         requires=[],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="tools",
         note=(
             "Tool-call transition matrix: one conv-partitioned lag "
             "window over the tool-role subset (bounded by conversation "
@@ -647,7 +847,6 @@ CHECKS = {
     "kg_edge_provenance": dict(
         requires=["Window"],
         forbids=["Python", "CartesianProduct", "SinglePartition"],
-        builder="prov",
         note=(
             "Bounded provenance: the row_number/count window partitions "
             "by the edge composite (never a single partition — asserted) "
@@ -659,7 +858,6 @@ CHECKS = {
     "kg_kcore": dict(
         requires=["LeftSemi"],
         forbids=["Python", "CartesianProduct"],
-        builder="kcore",
         note=(
             "k-core peeling: each round is one map-side-combined degree "
             "aggregate over slim endpoint rows plus two LEFT SEMI joins "
@@ -673,7 +871,6 @@ CHECKS = {
     "kg_entity_pmi": dict(
         requires=[],
         forbids=["Python", "CartesianProduct"],
-        builder="pmi",
         note=(
             "Co-occurrence PMI: pair derivation is row-local over the "
             "turn-distinct canonical triples; the pair / entity "
@@ -688,7 +885,6 @@ CHECKS = {
     "kg_triangles": dict(
         requires=["LeftSemi"],
         forbids=["Python", "CartesianProduct"],
-        builder="edges",
         note=(
             "Degree-oriented wedge closing: edges orient from the "
             "lower-(degree, id) endpoint, capping every out-degree at "
@@ -812,7 +1008,6 @@ CHECKS = {
         ),
     ),
     "conv_near_dup_sig": dict(
-        builder="conv_near_dup_sig",
         requires=["HashAggregate"],
         forbids=["Python", "collect_list", "sort_array", "PosExplode"],
         note=(
@@ -846,7 +1041,6 @@ CHECKS = {
         ),
     ),
     "bpe_round": dict(
-        builder="bpe_round",
         requires=["TakeOrderedAndProject", "HashAggregate"],
         forbids=["Python", "CartesianProduct", "Window"],
         note=(
@@ -933,7 +1127,6 @@ CHECKS = {
         ),
     ),
     "kg_cloze_questions": dict(
-        builder="cloze",
         requires=["HashAggregate"],
         forbids=["Python", "Window", "CartesianProduct"],
         max_tree_exchanges=1,
@@ -969,7 +1162,6 @@ CHECKS = {
         ),
     ),
     "kg_verbalize": dict(
-        builder="verbalize",
         requires=["Window"],
         forbids=["Python", "CartesianProduct"],
         note=(
@@ -1411,7 +1603,6 @@ CHECKS = {
         ),
     ),
     "kg_transitive_closure": dict(
-        builder="closure_round",
         requires=["HashAggregate"],
         forbids=["Python", "CartesianProduct", "Window"],
         note=(
@@ -1424,7 +1615,6 @@ CHECKS = {
         ),
     ),
     "kg_pred_algebra": dict(
-        builder="pred_algebra",
         requires=["BroadcastHashJoin"],
         forbids=["Python", "CartesianProduct", "Window"],
         note=(
@@ -1438,7 +1628,6 @@ CHECKS = {
         ),
     ),
     "kg_rule_confidence": dict(
-        builder="rule_confidence",
         requires=["HashAggregate"],
         forbids=["Python", "CartesianProduct", "Window"],
         note=(
@@ -1452,7 +1641,6 @@ CHECKS = {
         ),
     ),
     "kg_fact_history": dict(
-        builder="fact_history",
         requires=["Window"],
         forbids=["Python", "CartesianProduct"],
         max_tree_exchanges=4,
@@ -1566,485 +1754,60 @@ CHECKS = {
             "equi-join skew, AQE-splittable."
         ),
     ),
+    "build_mentions": dict(
+        requires=["MapInPandas"],
+        forbids=[],
+        tree_exchanges=1,
+        note=(
+            "The flagship tag+extract stage (build_mentions): Scan → ONE "
+            "range Exchange (the deterministic (conv_id, turn_idx) "
+            "co-location) → a SINGLE fused MapInPandas running batched "
+            "forward+Viterbi AND span extraction — one Python boundary, "
+            "no other shuffle (asserted: exactly 1 Exchange). The plan "
+            "is identical at any parallelism; only the partition count "
+            "changes."
+        ),
+    ),
+    "extract_relations": dict(
+        requires=[],
+        forbids=[],
+        tree_exchanges=1,
+        note=(
+            "Open relation extraction over build_mentions: ordered "
+            "mention pairs are generated ROW-LOCALLY with nested "
+            "higher-order functions over the per-turn mention array — "
+            "the only Exchange in the whole relations plan is the "
+            "upstream range repartition (asserted: exactly 1). The "
+            "naive formulation (explode + self-join on (conv_id, "
+            "turn_idx)) would add two full-table shuffles."
+        ),
+    ),
 }
 
 
 def main() -> None:
     argv = sys.argv[1:]
-    only = None
+    names = list(CHECKS)
     if "--only" in argv:
         i = argv.index("--only")
-        only = set(argv[i + 1].split(","))
+        names = argv[i + 1].split(",")
         argv = argv[:i] + argv[i + 2 :]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
 
-    from ner_spark.entry_queries import QUERIES
-    from ner_spark.session import get_spark
-
     spark = get_spark(app_name="explain_plans")
-
-    sections = []
-    failures = []
-    def _over_materialized_edges(name):
-        # graph analytics in production read the persisted node/edge
-        # tables, not the fused extraction lineage — assert the operator
-        # plan over the golden edges parquet (same schema the
-        # materialize stage writes)
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import (
-            adamic_adar,
-            community_profiles,
-            degree_stats,
-            edge_holdout_split,
-            functional_violations,
-            paths_2hop,
-            pred_cardinality_profile,
-            pred_type_signatures,
-            random_walks,
-            triangle_count,
-            walk_skipgram_pairs,
-        )
-
-        edges = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "edges.parquet")
-        )
-        return {
-            "kg_degree_stats": degree_stats,
-            "kg_triangles": triangle_count,
-            "kg_pred_profile": pred_cardinality_profile,
-            "kg_functional_violations": functional_violations,
-            "kg_paths_2hop": paths_2hop,
-            "kg_pred_signatures": pred_type_signatures,
-            "kg_adamic_adar": adamic_adar,
-            "kg_random_walks": random_walks,
-            "kg_skipgram_pairs": lambda e: walk_skipgram_pairs(
-                random_walks(e)
-            ),
-            "kg_community_profiles": community_profiles,
-            "kg_edge_split": edge_holdout_split,
-        }[name](edges)
-
-    def _temporal_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import edge_temporal_profile
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        t = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "transcripts.parquet")
-        )
-        return edge_temporal_profile(ct, t)
-
-    def _decay_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import edge_decay_weights
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        t = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "transcripts.parquet")
-        )
-        return edge_decay_weights(ct, t, halflife_days=7)
-
-    def _pmi_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import entity_cooccurrence_pmi
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        return entity_cooccurrence_pmi(ct)
-
-    def _current_facts_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import current_facts
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        t = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "transcripts.parquet")
-        )
-        return current_facts(ct, t)
-
-    def _pred_algebra_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import pred_algebra
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        return pred_algebra(ct)
-
-    def _rule_confidence_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import rule_confidence
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        return rule_confidence(ct)
-
-    def _fact_history_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import fact_history
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        t = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "transcripts.parquet")
-        )
-        return fact_history(ct, t)
-
-    def _lpa_round_over_goldens():
-        from pyspark.sql import functions as F
-
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import lpa_round, weighted_undirected
-
-        raw = spark.read.parquet(os.path.join(FIXTURES_SQL_ROOT, "edges.parquet"))
-        und = weighted_undirected(raw)
-        labels = und.select("x").distinct().withColumn("lbl", F.col("x"))
-        return lpa_round(und, labels)
-
-    def _prov_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.operators.graph import edge_provenance
-
-        ct = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "canonical_triples.parquet")
-        )
-        return edge_provenance(ct)
-
-    def _mention_ctx_over_goldens():
-        from ner_spark.entry_queries import FIXTURES_SQL_ROOT
-        from ner_spark.functions.datasets import mention_contexts
-
-        m = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "reference_mentions.parquet")
-        )
-        t = spark.read.parquet(
-            os.path.join(FIXTURES_SQL_ROOT, "transcripts.parquet")
-        )
-        return mention_contexts(m, t, window=3)
-
-    for name, spec in CHECKS.items():
-        if only is not None and name not in only:
-            continue
-        if spec.get("builder") == "tools":
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXT2
-            from ner_spark.operators.segments import tool_transitions
-
-            df = tool_transitions(
-                spark.read.parquet(os.path.join(_FXT2, "transcripts.parquet"))
-            )
-        elif spec.get("builder") == "segments":
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXS
-            from ner_spark.operators.segments import topic_segments
-
-            df = topic_segments(
-                spark.read.parquet(os.path.join(_FXS, "transcripts.parquet"))
-            )
-        elif spec.get("builder") == "cards":
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXC
-            from ner_spark.operators.graph import entity_cards
-
-            df = entity_cards(
-                spark.read.parquet(os.path.join(_FXC, "nodes.parquet")),
-                spark.read.parquet(os.path.join(_FXC, "edges.parquet")),
-            )
-        elif spec.get("builder") == "alias_nodes":
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXA
-            from ner_spark.operators.alias import alias_pairs
-
-            df = alias_pairs(
-                spark.read.parquet(os.path.join(_FXA, "nodes.parquet"))
-            )
-        elif spec.get("builder") == "edges":
-            df = _over_materialized_edges(name)
-        elif spec.get("builder") == "temporal":
-            df = _temporal_over_goldens()
-        elif spec.get("builder") == "decay":
-            df = _decay_over_goldens()
-        elif spec.get("builder") == "current_facts":
-            df = _current_facts_over_goldens()
-        elif spec.get("builder") == "pred_algebra":
-            df = _pred_algebra_over_goldens()
-        elif spec.get("builder") == "rule_confidence":
-            df = _rule_confidence_over_goldens()
-        elif spec.get("builder") == "fact_history":
-            df = _fact_history_over_goldens()
-        elif spec.get("builder") == "lpa_round":
-            df = _lpa_round_over_goldens()
-        elif spec.get("builder") == "mention_ctx":
-            df = _mention_ctx_over_goldens()
-        elif spec.get("builder") == "prov":
-            df = _prov_over_goldens()
-        elif spec.get("builder") == "bfs_hop":
-            # one frontier-expansion hop over the golden edges
-            from pyspark.sql import functions as F
-
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FX2
-
-            raw = spark.read.parquet(os.path.join(_FX2, "edges.parquet"))
-            e = raw.select(
-                F.col("src_entity").alias("s"), F.col("dst_entity").alias("d")
-            ).distinct()
-            # a deterministic filter, not limit(): a global limit would
-            # add its own SinglePartition exchange that the real BFS
-            # loop (whose frontiers come from checkpointed frames)
-            # never contains
-            frontier = (
-                e.select(F.col("s").alias("x"))
-                .where(F.length("x") % 2 == 0)
-                .distinct()
-            )
-            visited = frontier
-            df = (
-                frontier.join(e, frontier.x == e.s)
-                .select(F.col("d").alias("x"))
-                .distinct()
-                .join(visited.select("x"), "x", "left_anti")
-            )
-        elif spec.get("builder") == "pmi":
-            df = _pmi_over_goldens()
-        elif spec.get("builder") == "closure_round":
-            # one frontier-expansion round of the transitive closure
-            # over the golden edges (the real loop's frames come from
-            # checkpointed parents, same device as bfs_hop/kcore)
-            from pyspark.sql import functions as F
-
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXT
-
-            raw = spark.read.parquet(os.path.join(_FXT, "edges.parquet"))
-            e = (
-                raw.where(
-                    F.col("pred").isin(
-                        "affiliated_with", "based_in", "located_in"
-                    )
-                )
-                .select(
-                    F.col("src_entity").alias("s"),
-                    F.col("dst_entity").alias("d"),
-                )
-                .where(F.col("s") != F.col("d"))
-                .distinct()
-            )
-            closure = e
-            step = e.select(F.col("s").alias("m"), F.col("d").alias("nd"))
-            df = (
-                closure.join(step, closure.d == step.m)
-                .select("s", F.col("nd").alias("d"))
-                .where(F.col("s") != F.col("d"))
-                .distinct()
-                .join(closure.select("s", "d"), ["s", "d"], "left_anti")
-            )
-        elif spec.get("builder") == "cloze":
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXC
-            from ner_spark.operators.graph import cloze_questions
-
-            df = cloze_questions(
-                spark.read.parquet(
-                    os.path.join(_FXC, "canonical_triples.parquet")
-                )
-            )
-        elif spec.get("builder") == "verbalize":
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXV
-            from ner_spark.operators.graph import verbalize_entities
-
-            df = verbalize_entities(
-                spark.read.parquet(
-                    os.path.join(_FXV, "canonical_triples.parquet")
-                ),
-                max_facts=32,
-            )
-        elif spec.get("builder") == "conv_near_dup_sig":
-            from pyspark.sql import functions as F
-
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FXN
-            from ner_spark.functions.dedup import conv_shingle_rows
-            from ner_spark.operators.linking import (
-                H31_MASK,
-                MERSENNE61,
-                MINHASH_A,
-                MINHASH_B,
-            )
-
-            t = spark.read.parquet(os.path.join(_FXN, "transcripts.parquet"))
-            sh = conv_shingle_rows(t, include_tiny=False, distinct=False)
-
-            def _perm(i):
-                h31 = F.col("h").bitwiseAND(F.lit(H31_MASK))
-                return (
-                    h31 * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])
-                ) % F.lit(MERSENNE61)
-
-            df = sh.groupBy("conv_id").agg(
-                F.array(
-                    *[F.min(_perm(i)) for i in range(len(MINHASH_A))]
-                ).alias("minhash")
-            )
-        elif spec.get("builder") == "bpe_round":
-            from pyspark.sql import functions as F
-
-            from ner_spark.functions.bpe import _PAIRS_EXPR, word_histogram
-
-            docs = spark.read.parquet(
-                os.path.join(sf_dir, "documents.parquet")
-            )
-            w = word_histogram(docs).localCheckpoint(eager=True)
-            df = (
-                w.select(F.explode(F.expr(_PAIRS_EXPR)).alias("p"), "wcount")
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("wcount").alias("cnt"))
-                .where(F.col("cnt") >= 2)
-                .orderBy(F.desc("cnt"), "l", "r")
-                .limit(1)
-            )
-        elif spec.get("builder") == "kcore":
-            # assert ONE peel round's shape (the loop localCheckpoints
-            # between rounds, so the final frame's plan is a checkpoint
-            # scan — the per-round plan is the thing that must scale)
-            from ner_spark.entry_queries import FIXTURES_SQL_ROOT as _FX
-            from ner_spark.operators.graph import peel_round, undirected_edges
-
-            raw = spark.read.parquet(os.path.join(_FX, "edges.parquet"))
-            df = peel_round(undirected_edges(raw), 2)
-        else:
-            df = QUERIES[name](spark, sf_dir)
-        plan = formatted(df)
-        status = []
-        for s in spec["requires"]:
-            ok = s in plan
-            status.append(("requires", s, ok))
-            if not ok:
-                failures.append((name, "missing", s))
-        for s in spec["forbids"]:
-            ok = s not in plan
-            status.append(("forbids", s, ok))
-            if not ok:
-                failures.append((name, "unexpected", s))
-        cap = spec.get("max_tree_exchanges")
-        if cap is not None:
-            import re as _re
-
-            # tree nodes render as "+- Exchange", ":- Exchange" (non-last
-            # child of a binary op) or bare "Exchange (" at the root
-            n_ex = len(_re.findall(r"(?:[:+]- |^)Exchange \(", plan, _re.M))
-            ok = n_ex <= cap
-            status.append(("max Exchanges", str(cap), ok))
-            if not ok:
-                failures.append((name, f"{n_ex} Exchanges > cap", cap))
-        badge = "✅" if all(ok for (_, _, ok) in status) or not status else "❌"
-        checklist = "\n".join(
-            f"- {kind} `{pat}`: {'✅' if ok else '❌'}" for kind, pat, ok in status
-        )
-        sections.append(
-            f"## {name} {badge}\n\n{spec['note']}\n\n{checklist}\n\n"
-            f"```\n{plan.strip()}\n```\n"
-        )
-
-    # the KG tagging plan (mapInPandas) — show shape, no assertion grep
-    from ner_spark.operators.relate import extract_relations
-    from ner_spark.pipeline import build_mentions
-
-    t = spark.read.parquet(os.path.join(REPO, ".fixtures", "sf0.001", "transcripts.parquet"))
-    m = build_mentions(t)
-    kg_plan = formatted(m)
-    sections.append(
-        "## kg tag+extract (build_mentions)\n\n"
-        "One range Exchange (the deterministic (conv_id, turn_idx) "
-        "co-location), then a SINGLE fused MapInPandas stage running "
-        "batched forward+Viterbi AND span extraction — one Python "
-        "boundary, no other shuffle. The plan is identical at any "
-        "parallelism; only the partition count changes.\n\n"
-        f"```\n{kg_plan.strip()}\n```\n"
-    )
-
-    import re as _re
-
-    rel_plan = formatted(extract_relations(m))
-    # "formatted" renders each node twice (tree + detail); count tree rows
-    n_exchanges = len(_re.findall(r"(?:[:+]- |^)Exchange \(", rel_plan, _re.M))
-    badge = "✅" if n_exchanges == 1 else "❌"
-    if n_exchanges != 1:
-        failures.append(("kg_relations_plan", "expected exactly 1 Exchange", n_exchanges))
-    sections.append(
-        f"## kg open relation extraction {badge}\n\n"
-        "Ordered mention pairs are generated ROW-LOCALLY with nested "
-        "higher-order functions over the per-turn mention array — the "
-        "only Exchange in the whole relations plan is the upstream range "
-        "repartition (asserted: exactly 1). The naive formulation "
-        "(explode + self-join on (conv_id, turn_idx)) would add two "
-        "full-table shuffles.\n\n"
-        f"```\n{rel_plan.strip()}\n```\n"
-    )
-
-    # graph analytics over the materialized edge table (isolated from the
-    # upstream tag/link/CC chain by reading the golden edges directly)
-    from ner_spark.operators.graph import degree_stats
-
-    edges_golden = os.path.join(REPO, ".fixtures", "sf0.01", "edges.parquet")
-    deg_plan = formatted(degree_stats(spark.read.parquet(edges_golden)))
-    n_deg_ex = len(_re.findall(r"(?:[:+]- |^)Exchange \(", deg_plan, _re.M))
-    deg_ok = n_deg_ex == 1 and "Python" not in deg_plan and "Union" in deg_plan
-    if not deg_ok:
-        failures.append(("kg_degree_stats_plan", "1 Exchange + Union, no Python", n_deg_ex))
-    sections.append(
-        f"## kg degree profile (degree_stats) {'✅' if deg_ok else '❌'}\n\n"
-        "Both endpoint roles union into one slim 5-column stream and "
-        "reduce through a single hash aggregate: exactly ONE Exchange "
-        "(asserted), keyed on entity_id, with map-side partial "
-        "aggregation — no join, no Python. At 10^12 edges this is the "
-        "minimal-movement plan.\n\n"
-        f"```\n{deg_plan.strip()}\n```\n"
-    )
-
-    header = (
-        "# PLANS — physical-plan evidence (generated by tools/explain_plans.py)\n\n"
-        "`.explain(\"formatted\")` output for the headline operators with "
-        "the scale-critical plan properties asserted. Regenerate after any "
-        "operator change: `python tools/explain_plans.py`.\n\n"
-    )
-    if only is None:
-        with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-            f.write(header + "\n".join(sections))
-        print(
-            f"PLANS.md written; {len(CHECKS)} plans, {len(failures)} failures"
-        )
-    else:
-        # splice the regenerated sections into PLANS.md in place so a
-        # single-operator regen keeps the committed evidence current
-        path = os.path.join(REPO, "PLANS.md")
-        spliced = 0
-        if os.path.exists(path) and sections:
-            with open(path) as f:
-                doc = f.read()
-            for sec in sections:
-                name = sec.split("\n", 1)[0][3:].rsplit(" ", 1)[0]
-                import re as _re
-
-                pat = _re.compile(
-                    r"^## " + _re.escape(name) + r" [^\n]*\n.*?(?=^## |\Z)",
-                    _re.M | _re.S,
-                )
-                doc, n = pat.subn(sec.rstrip() + "\n\n", doc, count=1)
-                if not n:  # brand-new plan: append as a new section
-                    doc = doc.rstrip() + "\n\n" + sec.rstrip() + "\n"
-                spliced += 1
-            with open(path, "w") as f:
-                f.write(doc)
-        print(
-            f"checked {len(only)} plans ({spliced} sections spliced into "
-            f"PLANS.md); {len(failures)} failures"
-        )
-    for f_ in failures:
-        print("FAIL", f_)
+    failed = []
+    for name in names:
+        plan = formatted(build(spark, name, sf_dir))
+        bad = violations(name, plan)
+        print(f"## {name} {'FAIL' if bad else 'ok'}\n\n{CHECKS[name]['note']}\n")
+        for v in bad:
+            print(f"- {v}")
+        print(f"\n{plan.strip()}\n")
+        if bad:
+            failed.append(name)
+    print(f"{len(names)} plans checked; {len(failed)} failed: {failed}")
     spark.stop()
-    sys.exit(1 if failures else 0)
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":
