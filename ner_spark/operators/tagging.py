@@ -67,21 +67,26 @@ def tag_and_extract(df: DataFrame) -> DataFrame:
         from ner_spark.model.artifact import require_weights
         from ner_spark.model.tagger import tag_tokens_batch
         from ner_spark.operators.extraction import mention_dicts
+        from ner_spark.session import release_zip_finders
 
         # artifact weights (--files/--archives/SparkFiles) install once
         # per worker process and must match the driver's version;
         # memoized dict lookup afterwards
         require_weights(expected)
-        for pdf in batches:
-            token_lists = [t.split(" ") if t else [] for t in pdf["text"]]
-            tags_col = tag_tokens_batch(token_lists)
-            mentions = [
-                mention_dicts(tags, toks)
-                for toks, tags in zip(token_lists, tags_col)
-            ]
-            pdf = pdf[cols].copy()
-            pdf["tags"] = tags_col
-            pdf["mentions"] = mentions
-            yield pdf
+        try:
+            for pdf in batches:
+                token_lists = [t.split(" ") if t else [] for t in pdf["text"]]
+                tags_col = tag_tokens_batch(token_lists)
+                mentions = [
+                    mention_dicts(tags, toks)
+                    for toks, tags in zip(token_lists, tags_col)
+                ]
+                pdf = pdf[cols].copy()
+                pdf["tags"] = tags_col
+                pdf["mentions"] = mentions
+                yield pdf
+        finally:
+            # so the next task's invalidate_caches() re-reads no zip
+            release_zip_finders()
 
     return df.mapInPandas(run, schema=out_schema)

@@ -25,9 +25,7 @@ per-conversation order survives within each range slice, and no stage
 groups by conv_id alone (relate groups by (conv_id, turn_idx); linking
 groups by surface-derived keys), so no single task inherits the whole hot
 conversation (tests/test_pipeline_e2e.py asserts it on the published
-mentions files). ``salt_hot_convs`` exists for operators that DO need
-conv-level aggregation and is applied to the per-conv turn reassembly
-check in tests.
+mentions files).
 """
 
 from __future__ import annotations
@@ -37,7 +35,6 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ner_spark.operators.components import canonicalize_triples, connected_components
 from ner_spark.operators.extraction import mentions_to_triples
@@ -85,15 +82,6 @@ def ingest(transcripts: DataFrame) -> DataFrame:
     co-location property is unchanged (just more ranges)."""
     n = transcripts.sparkSession.sparkContext.defaultParallelism * 2
     return transcripts.repartitionByRange(n, "conv_id", "turn_idx")
-
-
-def salt_hot_convs(df: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Deterministic salt column for conv-level aggregations: spreads each
-    conversation over ``n_salts`` sub-keys (pmod of a turn hash). Callers
-    aggregate per (conv_id, salt) then merge — two-level aggregation."""
-    return df.withColumn(
-        "salt", F.pmod(F.hash("turn_idx"), F.lit(n_salts))
-    )
 
 
 def build_mentions(transcripts: DataFrame) -> DataFrame:

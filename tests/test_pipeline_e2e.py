@@ -87,7 +87,10 @@ def test_hot_conv_salting_bounds_groups(spark, fixtures_small):
 
     import pyspark.sql.functions as F
 
-    from ner_spark.pipeline import salt_hot_convs
+    def salt_hot_convs(df, n_salts):
+        # deterministic salt: spreads each conversation over n_salts
+        # sub-keys (pmod of a turn hash) for two-level aggregation
+        return df.withColumn("salt", F.pmod(F.hash("turn_idx"), F.lit(n_salts)))
 
     t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
     n_salts = 8

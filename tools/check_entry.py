@@ -3,6 +3,8 @@ Spark and its oracle_sql() on DuckDB over the same sf dir, compare
 row-count + column names + order-insensitive value multiset.
 
 Usage: python tools/check_entry.py [sf_dir] [query ...]
+
+Only a run over every query records its result in ``.gate_last.json``.
 """
 
 from __future__ import annotations
@@ -182,23 +184,25 @@ def main():
 
     bad = {k: v for k, v in results.items() if v[0] not in ("ok", "rows_only")}
     print(json.dumps({"total": len(results), "bad": len(bad)}))
-    # persist the result so bench.py can embed the latest gate state in
-    # its compact summary line (labeled with this run's timestamp + sf —
-    # a cross-reference, not a claim the bench re-verified correctness)
-    try:
-        with open(os.path.join(REPO, ".gate_last.json"), "w") as f:
-            json.dump(
-                {
-                    "total": len(results),
-                    "bad": len(bad),
-                    "bad_names": sorted(bad)[:10],
-                    "sf_dir": sf_dir,
-                    "ts": int(time.time()),
-                },
-                f,
-            )
-    except OSError:
-        pass
+    # persist a full run's result so bench.py can embed the latest gate
+    # state in its compact summary line (labeled with this run's
+    # timestamp + sf — a cross-reference, not a claim the bench
+    # re-verified correctness); a subset run is no gate state
+    if not only:
+        try:
+            with open(os.path.join(REPO, ".gate_last.json"), "w") as f:
+                json.dump(
+                    {
+                        "total": len(results),
+                        "bad": len(bad),
+                        "bad_names": sorted(bad)[:10],
+                        "sf_dir": sf_dir,
+                        "ts": int(time.time()),
+                    },
+                    f,
+                )
+        except OSError:
+            pass
     spark.stop()
     sys.exit(1 if bad else 0)
 
