@@ -16,14 +16,16 @@ deterministic regardless of partitioning (SURVEY §7.4: min-id, never
 first-seen), matching the union-find oracle ``ner_spark.kg.connected_components``.
 
 Scale notes:
-* per-iteration ``localCheckpoint`` truncates the lineage so the plan
-  doesn't grow unboundedly (SURVEY §4 explicit-engineering item c);
+* the rounds run under ``graph.iterate``, which checkpoints each round
+  so the plan stays one round deep (SURVEY §4 explicit-engineering item
+  c) and releases every frame a round replaces;
 * convergence is detected with a cheap deterministic signature
   (count + sum of hash over canonical directed edges) instead of a full
   except-join;
 * ``max_iter`` bounds pathological inputs (a 2^20-node chain converges in
   ~20 alternating rounds; entity-link clusters are near-cliques and
-  converge in 2-3).
+  converge in 2-3). Running out of rounds raises: labels read off a
+  graph that is not yet a star forest would be wrong components.
 """
 
 from __future__ import annotations
@@ -31,6 +33,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ner_spark.operators.graph import checkpointed, iterate
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -68,6 +72,12 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _star_round(e: DataFrame, *_) -> DataFrame:
+    """One large-star + small-star round over a (src, dst) edge frame;
+    either direction of an edge may be present."""
+    return _small_star(_sym(_large_star(_sym(e))))
+
+
 def _signature(e: DataFrame) -> tuple[int, int]:
     row = e.select(
         F.count(F.lit(1)).alias("n"),
@@ -103,41 +113,36 @@ def connected_components(
     moves to the driver in either mode — only edge endpoints do, and at
     the threshold that is a few MB. Pass ``local_threshold=None`` to
     force the distributed path (tests exercise both and assert equal
-    output)."""
+    output). The distributed path raises ``RuntimeError`` when
+    ``max_iter`` rounds end before the fixpoint."""
     e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    if local_threshold is not None:
-        # materialize the (possibly expensive, e.g. LSH-scored) edge
-        # lineage ONCE before probing: the probe's collect and — when the
-        # graph is over-threshold — the distributed star-contraction loop
-        # both read the checkpointed edges instead of recomputing them.
-        # Lifetime/fault notes: localCheckpoint blocks are reclaimed by
-        # the ContextCleaner when the DataFrame is garbage-collected, and
-        # are NOT fault-tolerant — an executor loss mid-computation fails
-        # the job, which the manifest protocol answers by recomputing the
-        # stage on resume (the documented trade for not paying the edge
-        # lineage twice).
-        e0 = e0.localCheckpoint(eager=True)
+    if local_threshold is None:
+        return _solve_distributed(nodes, e0, id_col, max_iter)
+    # materialize the (possibly expensive, e.g. LSH-scored) edge lineage
+    # ONCE before probing: the probe's collect and — when the graph is
+    # over-threshold — the first star-contraction round both read the
+    # checkpointed edges instead of recomputing them. The checkpoint is
+    # released once the probe's rows are on the driver, or (distributed)
+    # once the first round is checkpointed. Fault note: localCheckpoint
+    # blocks are NOT fault-tolerant — an executor loss mid-computation
+    # fails the job, which the manifest protocol answers by recomputing
+    # the stage on resume (the documented trade for not paying the edge
+    # lineage twice).
+    with checkpointed(e0) as e0:
         probe = e0.limit(local_threshold + 1).collect()
         if len(probe) <= local_threshold:
             return _solve_local(nodes, probe, id_col)
+        return _solve_distributed(nodes, e0, id_col, max_iter)
 
-    e = _sym(e0).select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    e = e.localCheckpoint(eager=True)
-    sig = None
-    for _ in range(max_iter):
-        e1 = _large_star(_sym(e))
-        e2 = _small_star(_sym(e1))
-        e2 = e2.localCheckpoint(eager=True)
-        new_sig = _signature(e2)
-        e = e2
-        if new_sig == sig:
-            break
-        sig = new_sig
 
-    # post-convergence the graph is a union of stars centered at component
-    # minima: label(u) = min(u, min N(u)); isolated nodes label themselves.
-    adj = _sym(e)
-    labels = adj.groupBy("u").agg(
+def _solve_distributed(
+    nodes: DataFrame, e0: DataFrame, id_col: str, max_iter: int
+) -> DataFrame:
+    """Large-star/small-star rounds to a star forest, then each node's
+    label read off its star: label(u) = min(u, min N(u)); isolated nodes
+    label themselves."""
+    e = iterate(e0, _star_round, max_iter, fixpoint=_signature)
+    labels = _sym(e).groupBy("u").agg(
         F.least(F.min("v"), F.first("u")).alias("component")
     )
     return (

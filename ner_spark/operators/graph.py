@@ -20,6 +20,8 @@ the component map is tiny relative to mentions — broadcastable below
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -120,6 +122,107 @@ def degree_stats(edges: DataFrame) -> DataFrame:
     )
 
 
+def _is_checkpoint(df: DataFrame) -> bool:
+    """True for a frame whose plan is a bare ``LogicalRDD``, as
+    ``localCheckpoint`` returns."""
+    return (
+        df._jdf.queryExecution().logical().getClass().getSimpleName()
+        == "LogicalRDD"
+    )
+
+
+def _release(*frames) -> None:
+    """Drop the blocks behind persisted or localCheckpointed frames
+    (``None`` entries are skipped). ``DataFrame.unpersist`` does not
+    reach a checkpoint: its blocks belong to the RDD under the frame's
+    ``LogicalRDD``."""
+    for df in frames:
+        if df is None:
+            continue
+        if _is_checkpoint(df):
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+        else:
+            df.unpersist()
+
+
+@contextmanager
+def checkpointed(df: DataFrame):
+    """An eager ``localCheckpoint`` of ``df`` for the ``with`` block,
+    released when the block exits."""
+    df = df.localCheckpoint(eager=True)
+    try:
+        yield df
+    finally:
+        _release(df)
+
+
+def iterate(state, step, n: int, fixpoint=None, cached=()):
+    """The loop of every iterative graph operator: at most ``n`` rounds
+    of ``step`` over checkpointed state; returns the last state.
+
+    ``state`` is a frame or a tuple of frames (``None`` allowed). Its
+    frames, and those of the state ``step(state, i, keep)`` returns for
+    round ``i`` (1-based), are eager ``localCheckpoint``s (a frame that
+    already is one is taken as it is), so each round plans one round
+    deep; ``step`` returns ``None`` to stop early. ``keep(df)``
+    checkpoints a frame the round reads more than once. Once a round's
+    state is checkpointed, the frames it replaced and the round's kept
+    frames are released: a call leaves persisted only the frames of the
+    state it returns.
+
+    ``fixpoint(state)``, when given, is a convergence signature: the
+    loop stops once a round leaves it unchanged and raises after ``n``
+    rounds without that (a partial state is a silently wrong answer).
+    ``cached`` are the loop-invariant persisted frames the rounds read,
+    released in a ``finally`` (and the state too when an error escapes).
+    """
+    frames = tuple if isinstance(state, tuple) else (lambda s: (s,))
+    kept = []
+
+    def keep(df):
+        kept.append(df.localCheckpoint(eager=True))
+        return kept[-1]
+
+    def checkpoint(s):
+        out = tuple(
+            df if df is None or _is_checkpoint(df) else df.localCheckpoint(eager=True)
+            for df in frames(s)
+        )
+        return out if isinstance(s, tuple) else out[0]
+
+    cur, done = None, False
+    try:
+        cur = checkpoint(state)
+        sig = fixpoint(cur) if fixpoint else None
+        for i in range(1, n + 1):
+            nxt = step(cur, i, keep)
+            if nxt is None:
+                break
+            nxt = checkpoint(nxt)
+            live = frames(nxt)
+            _release(*(
+                df for df in (*frames(cur), *kept)
+                if all(df is not x for x in live)
+            ))
+            kept.clear()
+            cur = nxt
+            if fixpoint:
+                sig, last = fixpoint(cur), sig
+                if sig == last:
+                    break
+        else:
+            if fixpoint:
+                raise RuntimeError(
+                    f"no fixpoint within {n} rounds; re-run with a larger bound"
+                )
+        done = True
+        return cur
+    finally:
+        _release(*cached, *kept)
+        if not done and cur is not None:
+            _release(*frames(cur))
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 5,
@@ -133,15 +236,14 @@ def pagerank(
     pr_micro = floor(pr·10⁶ + 0.5) — the integer grid makes the result
     identical across engines and partitionings (per-sum float noise is
     ~10⁻¹⁵ relative and damping contracts it; the 10⁻⁶ grid is 9 orders
-    coarser).
+    coarser). An empty edge set ranks nothing: the result is empty.
 
     Scale shape: the (src, dst, frac) transition frame is built once
     (one join against the out-weight aggregate) and persisted; each
     iteration is one hash-join of the slim rank vector against it, one
     aggregate, and one full reduction to a scalar (dangling mass) —
-    exactly the communication pattern of distributed PageRank. Ranks
-    are localCheckpointed per iteration so the plan stays one-iteration
-    deep instead of compounding K joins into one Catalyst tree.
+    exactly the communication pattern of distributed PageRank. The
+    rounds run under ``iterate``.
 
     The two driver-side scalars (node count, per-iteration dangling
     mass) are full reductions to one number each — they do not move
@@ -167,37 +269,28 @@ def pagerank(
     dangling_nodes = nodes.join(
         out_w.select(F.col("s").alias("x")), "x", "left_anti"
     ).persist()
-    n_nodes = nodes.count()
+    n_nodes = max(nodes.count(), 1)  # an empty graph: rounds over empty frames
     teleport = (1.0 - damping) / n_nodes
 
-    pr = nodes.select("x", F.lit(1.0 / n_nodes).alias("pr")).localCheckpoint()
-    try:
-        for _ in range(iters):
-            dang_row = (
-                pr.join(dangling_nodes, "x").agg(F.sum("pr")).collect()[0][0]
-            )
-            dang = (dang_row or 0.0) / n_nodes
-            contrib = (
-                trans.join(pr, trans.s == pr.x)
-                .groupBy("d")
-                .agg(F.sum(F.col("pr") * F.col("frac")).alias("c"))
-            )
-            pr = (
-                nodes.join(contrib, nodes.x == contrib.d, "left")
-                .select(
-                    "x",
-                    (
-                        F.lit(teleport)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dang))
-                    ).alias("pr"),
-                )
-                .localCheckpoint()
-            )
-    finally:
-        nodes.unpersist()
-        trans.unpersist()
-        dangling_nodes.unpersist()
+    def rank(pr, *_):
+        dang_row = pr.join(dangling_nodes, "x").agg(F.sum("pr")).collect()[0][0]
+        dang = (dang_row or 0.0) / n_nodes
+        contrib = (
+            trans.join(pr, trans.s == pr.x)
+            .groupBy("d")
+            .agg(F.sum(F.col("pr") * F.col("frac")).alias("c"))
+        )
+        return nodes.join(contrib, nodes.x == contrib.d, "left").select(
+            "x",
+            (
+                F.lit(teleport)
+                + F.lit(damping)
+                * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dang))
+            ).alias("pr"),
+        )
+
+    start = nodes.select("x", F.lit(1.0 / n_nodes).alias("pr"))
+    pr = iterate(start, rank, iters, cached=(nodes, trans, dangling_nodes))
     return pr.select(
         F.col("x").alias("entity_id"),
         F.floor(F.col("pr") * F.lit(1e6) + F.lit(0.5)).alias("pr_micro"),
@@ -444,20 +537,14 @@ def label_propagation(
     Scale shape per round: one join of the slim (node, label) frame
     against the weighted undirected edge list (both keyed on node),
     one (node, label)-keyed weight sum, one node-keyed arg-min — all
-    map-side combinable; labels are localCheckpointed per round so the
-    plan stays one round deep (same device as ``pagerank``/``k_core``).
+    map-side combinable; the rounds run under ``iterate``.
     Hot nodes are plain aggregation skew, which AQE's skew handling
     absorbs; no round materializes anything wider than (node, label,
     weight).
     """
     und = weighted_undirected(edges, src, dst, weight).persist()
-    labels = und.select("x").distinct().withColumn("lbl", F.col("x"))
-    labels = labels.localCheckpoint(eager=True)
-    try:
-        for _ in range(iters):
-            labels = lpa_round(und, labels).localCheckpoint(eager=True)
-    finally:
-        und.unpersist()
+    start = und.select("x").distinct().withColumn("lbl", F.col("x"))
+    labels = iterate(start, lambda lbl, *_: lpa_round(und, lbl), iters, cached=(und,))
     return labels.select(
         F.col("x").alias("entity_id"), F.col("lbl").alias("community")
     )
@@ -536,41 +623,34 @@ def bfs_hops(
     subgraph a KGQA retriever or a GNN sampler pulls.
 
     Level-synchronous frontier BFS: each hop joins the CURRENT frontier
-    (not the whole visited set) against the edge list, anti-joins the
-    already-visited set so every entity is labeled with its first
-    (minimum) hop count, and localCheckpoints both frames so the plan
-    stays one hop deep. Early-exits when a frontier empties — the
+    (the entities labeled last hop, not the whole visited set) against
+    the edge list and anti-joins the already-visited set, so every
+    entity is labeled with its first (minimum) hop count. The hops run
+    under ``iterate``. Early-exits when a frontier empties — the
     per-hop emptiness probe is one scalar count, the standard price of
-    iterative convergence (same device as the CC/k-core loops). All
-    joins key on entity id; frontier rows are one column wide.
+    iterative convergence. All joins key on entity id; frontier rows
+    are one column wide.
     """
     e = edges.select(
         F.col("src_entity").alias("s"), F.col("dst_entity").alias("d")
     ).distinct().persist()
-    visited = (
-        sources.select(F.col(sources.columns[0]).alias("x"))
-        .distinct()
-        .withColumn("hops", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
+
+    def hop(visited, h, keep):
+        frontier = visited.where(F.col("hops") == h - 1).select("x")
+        nxt = keep(
+            frontier.join(e, frontier.x == e.s)
+            .select(F.col("d").alias("x"))
+            .distinct()
+            .join(visited.select("x"), "x", "left_anti")
+        )
+        if nxt.isEmpty():
+            return None
+        return visited.unionByName(nxt.withColumn("hops", F.lit(h).cast("int")))
+
+    start = sources.select(F.col(sources.columns[0]).alias("x")).distinct()
+    visited = iterate(
+        start.withColumn("hops", F.lit(0).cast("int")), hop, max_hops, cached=(e,)
     )
-    frontier = visited.select("x")
-    try:
-        for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier.x == e.s)
-                .select(F.col("d").alias("x"))
-                .distinct()
-                .join(visited.select("x"), "x", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(
-                nxt.withColumn("hops", F.lit(h).cast("int"))
-            ).localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        e.unpersist()
     return visited.select(F.col("x").alias("entity_id"), "hops")
 
 
@@ -715,38 +795,20 @@ def k_core(
     Algorithm: iterative peeling — drop nodes with current degree < k,
     restrict edges to survivors, repeat to fixpoint. Each round is one
     degree aggregate (map-side combined over 2|E'| slim endpoint rows)
-    plus two semi-joins restricting the edge set; the surviving edge
-    frame is localCheckpointed per round so the plan stays one round
-    deep (same device as the CC loop). Rounds are bounded by the
-    longest peel chain — O(diameter)-ish in practice, ``max_iter`` as
-    the pathological backstop; convergence is detected by the surviving
-    edge count reaching a fixpoint (monotone decreasing, so equality of
-    counts IS convergence — no content signature needed). Exhausting
+    plus two semi-joins restricting the edge set, under ``iterate``.
+    Rounds are bounded by the longest peel chain — O(diameter)-ish in
+    practice, ``max_iter`` as the pathological backstop; convergence is
+    detected by the surviving edge count reaching a fixpoint (monotone
+    decreasing, so equality of counts IS convergence — no content
+    signature needed). Exhausting
     ``max_iter`` without the fixpoint raises instead of returning an
     under-peeled edge set as the "core" — a silently-wrong membership
     at scale is strictly worse than a loud retry with a larger bound.
     """
-    e = undirected_edges(edges, src, dst).localCheckpoint(eager=True)
-    n_edges = e.count()
-    converged = n_edges == 0
-    for _ in range(max_iter):
-        if n_edges == 0:
-            converged = True
-            break
-        e2 = peel_round(e, k).localCheckpoint(eager=True)
-        n2 = e2.count()
-        e = e2
-        if n2 == n_edges:
-            converged = True
-            break
-        n_edges = n2
-    if not converged:
-        raise RuntimeError(
-            f"k_core did not reach the peel fixpoint within max_iter="
-            f"{max_iter} rounds ({n_edges} edges still shrinking) — "
-            "re-run with a larger max_iter; returning the partial peel "
-            "would silently mislabel sub-core nodes as core members"
-        )
+    e = iterate(
+        undirected_edges(edges, src, dst),
+        lambda e, *_: peel_round(e, k), max_iter, fixpoint=DataFrame.count,
+    )
     return (
         e.select(F.col("a").alias("entity_id"))
         .unionByName(e.select(F.col("b").alias("entity_id")))
@@ -1070,15 +1132,13 @@ def random_walks(
       slim keyed joins per step, so a hub node costs the SAME as a
       leaf per visiting walk (no per-neighbor enumeration, no
       candidate explosion when many walks sit on the hub);
-    * the frontier is localCheckpointed per step, keeping the plan one
-      step deep (same device as bfs_hops / connected components).
+    * the steps run under ``iterate``.
 
     Walks may revisit nodes (plain first-order DeepWalk semantics);
     every node in the adjacency has deg >= 1 so walks never dead-end.
     """
     from pyspark.sql import Window
 
-    from ner_spark.functions.dedup import register_persist
     from ner_spark.operators.linking import md5_hash60_col
 
     und = undirected_edges(edges)
@@ -1091,28 +1151,10 @@ def random_walks(
         ),
         "n",
     )
-    ranked = register_persist(
-        adj.withColumn("idx", F.row_number().over(w) - F.lit(1))
-    )
-    deg = register_persist(
-        adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    )
+    ranked = adj.withColumn("idx", F.row_number().over(w) - F.lit(1)).persist()
+    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg")).persist()
 
-    cur = (
-        deg.select(
-            "z",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-            ).alias("r"),
-        )
-        .select(
-            F.concat_ws("#", F.col("z"), F.col("r")).alias("walk_id"),
-            F.col("z").alias("cur"),
-            F.array(F.col("z")).alias("path"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    for i in range(1, walk_length + 1):
+    def walk(cur, i, _):
         pick = cur.join(deg, cur.cur == deg.z).select(
             "walk_id",
             "cur",
@@ -1124,18 +1166,23 @@ def random_walks(
                 F.col("deg"),
             ).alias("pick"),
         )
-        cur = (
-            pick.join(
-                ranked,
-                (pick.cur == ranked.z) & (pick.pick == ranked.idx),
-            )
-            .select(
-                "walk_id",
-                F.col("n").alias("cur"),
-                F.array_append("path", F.col("n")).alias("path"),
-            )
-            .localCheckpoint(eager=False)
+        return pick.join(
+            ranked,
+            (pick.cur == ranked.z) & (pick.pick == ranked.idx),
+        ).select(
+            "walk_id",
+            F.col("n").alias("cur"),
+            F.array_append("path", F.col("n")).alias("path"),
         )
+
+    start = deg.select(
+        "z", F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("r")
+    ).select(
+        F.concat_ws("#", F.col("z"), F.col("r")).alias("walk_id"),
+        F.col("z").alias("cur"),
+        F.array(F.col("z")).alias("path"),
+    )
+    cur = iterate(start, walk, walk_length, cached=(ranked, deg))
     if as_array:
         return cur.select("walk_id", "path")
     return cur.select("walk_id", F.array_join("path", "->").alias("path"))
@@ -1485,8 +1532,7 @@ def bottleneck_paths(
     All-integer max/min semiring — no floats anywhere, so the fixpoint
     is deterministic under any partitioning and engine. Bounded-hop
     Bellman-Ford shape: per round ONE frontier⋈edges join plus a
-    (src, node)-keyed max; the frame is localCheckpointed per round so
-    the plan stays one round deep (same device as pagerank/k-core).
+    (src, node)-keyed max, under ``iterate``.
     Parallel edges collapse to their strongest support before the loop,
     so the join input is the slim distinct adjacency.
     """
@@ -1508,27 +1554,23 @@ def bottleneck_paths(
     src = sources.select(
         F.col(sources.columns[0]).alias("src")
     ).distinct()
-    best = (
+
+    def relax(best, *_):
+        cand = best.join(e, best.x == e.u).select(
+            "src", F.col("v").alias("x"), F.least("strength", "w").alias("strength")
+        )
+        return (
+            best.unionByName(cand)
+            .groupBy("src", "x")
+            .agg(F.max("strength").alias("strength"))
+        )
+
+    start = (
         src.join(e, src.src == e.u)
         .groupBy("src", F.col("v").alias("x"))
         .agg(F.max("w").alias("strength"))
-        .localCheckpoint(eager=True)
     )
-    try:
-        for _ in range(1, max_hops):
-            cand = (
-                best.join(e, best.x == e.u)
-                .select("src", F.col("v").alias("x"),
-                        F.least("strength", "w").alias("strength"))
-            )
-            best = (
-                best.unionByName(cand)
-                .groupBy("src", "x")
-                .agg(F.max("strength").alias("strength"))
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        e.unpersist()
+    best = iterate(start, relax, max_hops - 1, cached=(e,))
     return best.where(F.col("x") != F.col("src")).select(
         F.col("src").alias("src_entity"),
         F.col("x").alias("entity_id"),
@@ -2339,12 +2381,12 @@ def transitive_closure(
     starts from the distinct edge set as hop-1 pairs, each round joins
     the FRONTIER (pairs discovered last round, not the closure) to the
     edge list on ``frontier.dst = e.src``, anti-joins pairs already in
-    the closure (first discovery = minimum hops), and localCheckpoints
-    every frame so the plan never deepens. Joins are keyed on entity
-    ids; frontier rows are two ids wide — the closure itself, not any
-    single buffer, is the only thing that grows. The oracle computes
-    the same pairs by a recursive-CTE walk enumeration with min(hops)
-    — a different algorithm agreeing on the fixture.
+    the closure (first discovery = minimum hops); the rounds run under
+    ``iterate``. Joins are keyed on entity ids; frontier rows are two
+    ids wide — the closure itself, not any single buffer, is the only
+    thing that grows. The oracle computes the same pairs by a
+    recursive-CTE walk enumeration with min(hops) — a different
+    algorithm agreeing on the fixture.
     """
     e = (
         edges.where(F.col("pred").isin(*preds))
@@ -2353,29 +2395,25 @@ def transitive_closure(
         .distinct()
         .persist()
     )
-    closure = e.withColumn("min_hops", F.lit(1).cast("int")).localCheckpoint(
-        eager=True
-    )
-    frontier = closure.select("s", "d")
-    try:
-        for h in range(2, max_hops + 1):
-            step = e.select(F.col("s").alias("m"), F.col("d").alias("nd"))
-            nxt = (
-                frontier.join(step, frontier.d == step.m)
-                .select("s", F.col("nd").alias("d"))
-                .where(F.col("s") != F.col("d"))
-                .distinct()
-                .join(closure.select("s", "d"), ["s", "d"], "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            closure = closure.unionByName(
-                nxt.withColumn("min_hops", F.lit(h).cast("int"))
-            ).localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        e.unpersist()
+    step = e.select(F.col("s").alias("m"), F.col("d").alias("nd"))
+
+    def extend(closure, i, keep):
+        frontier = closure.where(F.col("min_hops") == i).select("s", "d")
+        nxt = keep(
+            frontier.join(step, frontier.d == step.m)
+            .select("s", F.col("nd").alias("d"))
+            .where(F.col("s") != F.col("d"))
+            .distinct()
+            .join(closure.select("s", "d"), ["s", "d"], "left_anti")
+        )
+        if nxt.isEmpty():
+            return None
+        return closure.unionByName(
+            nxt.withColumn("min_hops", F.lit(i + 1).cast("int"))
+        )
+
+    start = e.withColumn("min_hops", F.lit(1).cast("int"))
+    closure = iterate(start, extend, max_hops - 1, cached=(e,))
     return closure.select(
         F.col("s").alias("src_entity"),
         F.col("d").alias("dst_entity"),
@@ -2694,10 +2732,17 @@ def personalized_pagerank(
     so each iteration folds the dangling scalar into the restart
     coefficient: pr' = (1-α + α·dang)·r + α·contrib. Same
     communication pattern as ``pagerank`` (one slim-vector hash join +
-    one aggregate + one scalar reduction per iteration, ranks
-    localCheckpointed so the plan never compounds); the integer micro
-    grid absorbs per-sum float noise exactly as there.
+    one aggregate + one scalar reduction per iteration, under
+    ``iterate``); the integer micro grid absorbs per-sum float noise
+    exactly as there.
     """
+    seed_ids = seeds.select(F.col(seeds.columns[0]).alias("x")).distinct()
+    n_seeds = seed_ids.count()
+    if n_seeds == 0:
+        raise ValueError(
+            "personalized_pagerank requires a non-empty seed set "
+            "(restart mass is 1/|S| per seed)"
+        )
     e = edges.select(
         F.col(src).alias("s"),
         F.col(dst).alias("d"),
@@ -2718,66 +2763,36 @@ def personalized_pagerank(
     dangling_nodes = nodes.join(
         out_w.select(F.col("s").alias("x")), "x", "left_anti"
     ).persist()
-    seed_ids = seeds.select(
-        F.col(seeds.columns[0]).alias("x")
-    ).distinct().persist()
-    n_seeds = seed_ids.count()
-    if n_seeds == 0:
-        for p in (nodes, trans, dangling_nodes, seed_ids):
-            p.unpersist()
-        raise ValueError(
-            "personalized_pagerank requires a non-empty seed set "
-            "(restart mass is 1/|S| per seed)"
-        )
     restart = nodes.join(seed_ids, "x", "left_semi").select(
         "x", F.lit(1.0 / n_seeds).alias("r")
     ).persist()
 
-    pr = restart.select("x", F.col("r").alias("pr")).localCheckpoint()
-    try:
-        for _ in range(iters):
-            dang_row = (
-                pr.join(dangling_nodes, "x").agg(F.sum("pr")).collect()[0][0]
+    def rank(pr, *_):
+        dang = pr.join(dangling_nodes, "x").agg(F.sum("pr")).collect()[0][0]
+        coef = (1.0 - damping) + damping * (dang or 0.0)
+        contrib = (
+            trans.join(pr, trans.s == pr.x)
+            .groupBy("d")
+            .agg(F.sum(F.col("pr") * F.col("frac")).alias("c"))
+        )
+        return (
+            nodes.join(contrib, nodes.x == contrib.d, "left")
+            .join(restart, "x", "left")
+            .select(
+                "x",
+                (
+                    F.lit(coef) * F.coalesce(F.col("r"), F.lit(0.0))
+                    + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
+                ).alias("pr"),
             )
-            dang = dang_row or 0.0
-            coef = (1.0 - damping) + damping * dang
-            contrib = (
-                trans.join(pr, trans.s == pr.x)
-                .groupBy("d")
-                .agg(F.sum(F.col("pr") * F.col("frac")).alias("c"))
-            )
-            pr = (
-                nodes.join(contrib, nodes.x == contrib.d, "left")
-                .join(restart, "x", "left")
-                .select(
-                    "x",
-                    (
-                        F.lit(coef) * F.coalesce(F.col("r"), F.lit(0.0))
-                        + F.lit(damping)
-                        * F.coalesce(F.col("c"), F.lit(0.0))
-                    ).alias("pr"),
-                )
-                .localCheckpoint()
-            )
-    finally:
-        nodes.unpersist()
-        trans.unpersist()
-        dangling_nodes.unpersist()
-        seed_ids.unpersist()
-        restart.unpersist()
+        )
+
+    start = restart.select("x", F.col("r").alias("pr"))
+    pr = iterate(start, rank, iters, cached=(nodes, trans, dangling_nodes, restart))
     return pr.select(
         F.col("x").alias("entity_id"),
         F.floor(F.col("pr") * F.lit(1e6) + F.lit(0.5)).alias("ppr_micro"),
     )
-
-
-def _release_checkpoint(*frames) -> None:
-    """Drop the cached blocks behind localCheckpointed frames (``None``
-    entries are skipped). ``DataFrame.unpersist`` does not reach them:
-    the blocks belong to the RDD under the frame's ``LogicalRDD``."""
-    for df in frames:
-        if df is not None:
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
@@ -2795,12 +2810,9 @@ def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
     Per iteration: auth' = Σ_{s→x} hub(s) then normalize; hub' =
     Σ_{s→x} auth'(x) then normalize. Each half-step is one hash join
     of the slim score vector against the edge frame + one aggregate;
-    the vector is localCheckpointed per iteration so K iterations
-    never compound into one Catalyst tree. Nodes with no in-edges
+    the iterations run under ``iterate``. Nodes with no in-edges
     (resp. out-edges) keep authority (resp. hub) 0 via the left join.
     """
-    # cheap argument check FIRST — raising after the persists below
-    # would leak both cached frames in a driver that catches the error
     if iters < 1:
         raise ValueError("hits_scores requires iters >= 1")
     e = (
@@ -2816,75 +2828,35 @@ def hits_scores(edges: DataFrame, iters: int = 3) -> DataFrame:
         .distinct()
         .persist()
     )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        out = nodes.select(
-            F.col("x").alias("entity_id"),
-            F.lit(0).cast("long").alias("hub_micro"),
-            F.lit(0).cast("long").alias("auth_micro"),
+    n_nodes = max(nodes.count(), 1)  # an empty graph: rounds over empty frames
+
+    # per half-step, the edge join is materialized ONCE (the kept raw
+    # sums); the L1 norm is then a tiny scalar reduction over the
+    # materialized rows and the normalized vector a cheap node-keyed
+    # projection of them — without it the join would execute twice per
+    # half-step (once under the norm collect, once under the vector's
+    # own checkpoint), doubling the real per-iteration work. Measured
+    # neutral at sf0.1 (the 882-node graph is per-job-overhead-
+    # dominated); the win is the halved join volume at data scale,
+    # where the edge join IS the iteration cost.
+    def half_step(vec, by, to, keep):
+        raw = keep(
+            e.join(vec, e[by] == vec.x).groupBy(to).agg(F.sum("score").alias("raw"))
         )
-        e.unpersist()
-        nodes.unpersist()
-        return out
-    hub = nodes.select(
-        "x", F.lit(1.0 / n_nodes).alias("score")
-    ).localCheckpoint()
-    auth = None
-    try:
-        # per half-step, the edge join is materialized ONCE (raw-sum
-        # checkpoint); the L1 norm is then a tiny scalar reduction over
-        # the materialized rows and the normalized vector a cheap
-        # node-keyed projection of them — without the checkpoint the
-        # join would execute twice per half-step (once under the norm
-        # collect, once under the vector's own checkpoint), doubling
-        # the real per-iteration work. Same arithmetic, same values.
-        # Measured neutral at sf0.1 (the 882-node graph is per-job-
-        # overhead-dominated); the win is the halved join volume at
-        # data scale, where the edge join IS the iteration cost.
-        #
-        # Each vector is checkpointed eagerly so the raw sums it was
-        # computed from (and the vector it replaces) can be released at
-        # once: a long-lived driver keeps only the final hub/auth pair.
-        for _ in range(iters):
-            a_raw = (
-                e.join(hub, e.s == hub.x)
-                .groupBy("d")
-                .agg(F.sum("score").alias("raw"))
-            ).localCheckpoint(eager=True)
-            a_tot = a_raw.agg(F.sum("raw")).collect()[0][0] or 1.0
-            new_auth = (
-                nodes.join(a_raw, nodes.x == a_raw.d, "left")
-                .select(
-                    "x",
-                    (
-                        F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(a_tot)
-                    ).alias("score"),
-                )
-                .localCheckpoint(eager=True)
+        tot = raw.agg(F.sum("raw")).collect()[0][0] or 1.0
+        return keep(
+            nodes.join(raw, nodes.x == raw[to], "left").select(
+                "x",
+                (F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(tot)).alias("score"),
             )
-            _release_checkpoint(a_raw, auth)
-            auth = new_auth
-            h_raw = (
-                e.join(auth, e.d == auth.x)
-                .groupBy("s")
-                .agg(F.sum("score").alias("raw"))
-            ).localCheckpoint(eager=True)
-            h_tot = h_raw.agg(F.sum("raw")).collect()[0][0] or 1.0
-            new_hub = (
-                nodes.join(h_raw, nodes.x == h_raw.s, "left")
-                .select(
-                    "x",
-                    (
-                        F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(h_tot)
-                    ).alias("score"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            _release_checkpoint(h_raw, hub)
-            hub = new_hub
-    finally:
-        e.unpersist()
-        nodes.unpersist()
+        )
+
+    def hits_round(state, _, keep):
+        auth = half_step(state[0], "s", "d", keep)
+        return half_step(auth, "d", "s", keep), auth
+
+    start = nodes.select("x", F.lit(1.0 / n_nodes).alias("score"))
+    hub, auth = iterate((start, None), hits_round, iters, cached=(e, nodes))
     return (
         hub.withColumnsRenamed({"score": "h"})
         .join(auth.withColumnsRenamed({"score": "a"}), "x")

@@ -4,6 +4,7 @@ degree_stats, pagerank) against hand-computed / plain-Python oracles."""
 import pytest
 from pyspark.sql import functions as F
 
+from ner_spark.operators import graph
 from ner_spark.operators.graph import degree_stats, pagerank
 
 
@@ -209,10 +210,13 @@ def test_graph_ops_on_empty_and_tiny_inputs(spark):
     selfloop = spark.createDataFrame([("a", "p", "a", 1)], schema)
     one = spark.createDataFrame([("a", "p", "b", 1)], schema)
 
-    for edges in (empty, selfloop, one):
+    for edges, n_nodes in ((empty, 0), (selfloop, 1), (one, 2)):
         assert triangle_count(edges).collect()[0]["n_triangles"] == 0
         assert k_core(edges, k=2).count() == 0
         assert degree_stats(edges).count() in (0, 1, 2)
+        pr = pagerank(edges, iters=2)
+        assert pr.dtypes == [("entity_id", "string"), ("pr_micro", "bigint")]
+        assert pr.count() == n_nodes
 
     ct_empty = spark.createDataFrame(
         [], "conv_id string, turn_idx int, subj string, pred string, obj string"
@@ -1478,3 +1482,87 @@ def test_conv_extractive_summary_picks_idf_heavy_turn(spark):
     rare = math.floor(1e6 * (math.log(4 / 2) + 1.0))
     assert got[("c1", 0)][1] == 5 * common + 2 * rare
     assert got[("c2", 0)][1] == 5 * common
+
+
+def _path_graph(spark, n):
+    """``n`` nodes in one chain: the slowest input for star contraction."""
+    ids = [f"n{i:03d}" for i in range(n)]
+    nodes = spark.createDataFrame([(i,) for i in ids], "node_id string")
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
+    return nodes, edges
+
+
+def _cc(e, k, **kw):
+    """Connected components of a 10k-node chain: the rounds grow with k."""
+    from ner_spark.operators.components import connected_components
+
+    return connected_components(*_path_graph(e.sparkSession, 10 * k), **kw)
+
+
+# name -> (call over (edges, seeds, k), frames the result reads)
+ITERATIVE_OPS = {
+    "pagerank": (lambda e, s, k: graph.pagerank(e, iters=k), 1),
+    "personalized_pagerank": (
+        lambda e, s, k: graph.personalized_pagerank(e, s, iters=k), 1
+    ),
+    "label_propagation": (lambda e, s, k: graph.label_propagation(e, iters=k), 1),
+    "bfs_hops": (lambda e, s, k: graph.bfs_hops(e, s, max_hops=k), 1),
+    # k is the core order: k = 6 peels the golden graph over several rounds
+    "k_core": (lambda e, s, k: graph.k_core(e, k=k), 1),
+    "random_walks": (lambda e, s, k: graph.random_walks(e, walk_length=k), 1),
+    "bottleneck_paths": (
+        lambda e, s, k: graph.bottleneck_paths(e, s, max_hops=k), 1
+    ),
+    "transitive_closure": (
+        lambda e, s, k: graph.transitive_closure(e, max_hops=k), 1
+    ),
+    "hits_scores": (lambda e, s, k: graph.hits_scores(e, iters=k), 2),
+    # the local path's assignment is a driver-built frame: nothing persisted
+    "connected_components_local": (lambda e, s, k: _cc(e, k), 0),
+    "connected_components_distributed": (
+        lambda e, s, k: _cc(e, k, local_threshold=None), 1
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(ITERATIVE_OPS))
+def test_iterative_op_leaves_only_its_result_persisted(
+    spark, fixtures_small, name
+):
+    """A long-lived driver must not collect checkpoints: after the call,
+    with the result still referenced, the only new persistent RDDs are
+    the frames the result reads, however many rounds ran. No GC is
+    forced (a GC could only lower the count)."""
+    import os
+
+    run, reads = ITERATIVE_OPS[name]
+    edges = spark.read.parquet(os.path.join(fixtures_small, "edges.parquet"))
+    seeds = (
+        edges.select(F.col("src_entity").alias("x"))
+        .distinct()
+        .orderBy("x")
+        .limit(3)
+    )
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    grown = {}
+    for k in (1, 6):
+        before = set(rdds().keys())
+        out = run(edges, seeds, k)
+        out.count()  # the result reads back from what the call kept
+        grown[k] = len(set(rdds().keys()) - before)
+    assert grown[6] <= grown[1] <= reads, f"new persistent RDDs by k: {grown}"
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A 64-node chain needs more than three star-contraction rounds:
+    with ``max_iter=3`` the distributed path raises rather than label a
+    graph that is not yet a star forest; the default bound returns the
+    one component."""
+    from ner_spark.operators.components import connected_components
+
+    nodes, edges = _path_graph(spark, 64)
+    with pytest.raises(RuntimeError, match="no fixpoint within 3 rounds"):
+        connected_components(nodes, edges, max_iter=3, local_threshold=None)
+    out = connected_components(nodes, edges, local_threshold=None)
+    assert out.select("component").distinct().count() == 1
+    assert out.count() == 64

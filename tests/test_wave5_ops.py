@@ -275,31 +275,6 @@ def test_hits_scores_hand_computed(spark):
     }
 
 
-def test_hits_scores_releases_checkpoints(spark, fixtures_small):
-    """Each half-step's raw sums and the vectors they replace are
-    released inside the call: whatever ``iters``, the driver keeps at
-    most the final hub/auth pair persisted, and the result still reads
-    back in full."""
-    import os
-
-    from ner_spark.operators.graph import hits_scores
-
-    edges = spark.read.parquet(os.path.join(fixtures_small, "edges.parquet"))
-    n_nodes = (
-        edges.select("src_entity")
-        .union(edges.select("dst_entity"))
-        .distinct()
-        .count()
-    )
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    for iters in (1, 3, 6):
-        before = persistent().size()
-        out = hits_scores(edges, iters=iters)
-        assert out.count() == n_nodes
-        grown = persistent().size() - before
-        assert grown <= 2, f"iters={iters}: {grown} persistent RDDs left"
-
-
 def test_neighbor_jaccard_hand_computed(spark):
     """Triangle a-b-c plus pendant a-d: every 2-path mid emits its
     neighbor pairs once; union sizes use FULL degrees and the pendant
