@@ -1,20 +1,19 @@
 #!/usr/bin/env python
-"""Benchmark driver: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Benchmark driver: every ``QUERIES`` entry over the test data at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 dir) on local[$SPARK_GRAFT_CPUS];
+prints the full record as one JSON line, then a compact summary line.
 
-Two parts:
-1. headline query latencies (KG pipeline stages + training-data ops +
-   relational core) on the full-parallelism session;
-2. scaling evidence for the N→4N rule (BASELINE.md): the SAME KG
-   tag+extract job on the SAME input at local[N] vs local[4N], with
-   4N = the host's cores (``os.cpu_count()``) and N = max(1, cores // 4),
-   reporting rows/sec at both and efficiency = (thr_4N / thr_N) /
-   (4N / N).
+Two parts, in this order:
+1. scaling evidence for the N→4N rule (BASELINE.md), run first so the
+   query rows have not heated the box: the SAME KG tag+extract job on
+   the SAME input at local[N] vs local[4N], with 4N = the host's cores
+   (``os.cpu_count()``) and N = max(1, cores // 4), reporting rows/sec
+   at both and efficiency = (thr_4N / thr_N) / (4N / N).
    (Sandbox stand-in for 2 cluster sizes, per the driver instruction:
    "run the same job at two parallelism levels, e.g. N and 4N cores".)
 
    Methodology (why the raw per-round job isn't measured directly):
-   * the input is replicated SPARK_GRAFT_SCALE_REPL× (default 32) into
+   * the input is replicated 32× (``SCALE_REPL``) into
      a many-file parquet dir so the scan itself is splittable — a single
      small file serializes the pre-shuffle stages and would measure file
      layout, not the engine;
@@ -31,8 +30,23 @@ Two parts:
      threads PLUS k Python workers; a pair beyond the cores measures
      machine oversubscription, not engine scaling). The cores and the
      pair are recorded in the JSON.
+2. the rows, on one warmed session, each timed by one of three rules:
+   * ``kg_tag_extract_triples``, the headline turns/s: fixture
+     transcripts → fused tag+extract → per-turn dedup → triples count,
+     min of 2 runs;
+   * ``kg_stages``: one build of ``entry_queries._kg``, the session's
+     checkpointed KG stage graph that the ``kg_*`` queries read;
+   * every ``QUERIES`` entry: ``q(spark, sf_dir).count()`` twice,
+     keeping the min, then ``release_persisted_blocks()``.
+   The record's ``timed_over`` states each rule in one sentence (keys
+   ``kg_tag_extract_triples``, ``kg_stages`` and ``"*"``), so a change
+   in what a clock covers is read as a change in method, not a speedup.
+   ``ann_recall_at_5`` and ``ann_recall_at_5_clustered`` add the ANN
+   indexes' recall@5 against brute force (quality, not latency).
 
-Set SPARK_GRAFT_BENCH_SCALING=0 to skip part 2 (e.g. when iterating).
+Knobs: SPARK_GRAFT_SF_DIR picks the input; SPARK_GRAFT_BENCH_SCALING=0
+skips part 1 (e.g. when iterating); SPARK_GRAFT_BENCH_FULL_OUT is where
+the full record is written (default: BENCH_full.json beside this file).
 """
 
 from __future__ import annotations
@@ -44,7 +58,6 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
 
 def _probe_scalar(_):
     """Branchy integer loop — the JVM-ish, SIMD-free workload class."""
@@ -106,14 +119,189 @@ def _host_capacity_probe(n_lo: int, n_hi: int, n_rounds: int = 2) -> dict:
     return out
 
 
-def _kg_triples_count(spark, fx_dir: str) -> int:
+SCALE_REPL = 32  # the scaling input is the fixture transcripts ×32
+
+
+def _kg_triples_count(spark, transcripts: str) -> int:
     """The flagship job: transcripts → tag (mapInPandas Viterbi) →
     extract → per-turn dedup → triples. Returns the triple count."""
     from ner_spark.operators.extraction import mentions_to_triples
     from ner_spark.pipeline import build_mentions
 
-    t = spark.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
-    return mentions_to_triples(build_mentions(t)).count()
+    return mentions_to_triples(build_mentions(spark.read.parquet(transcripts))).count()
+
+
+def _recall_at_5(emb, qs, approx) -> dict[str, float]:
+    """recall@5 of each ``(key, frame)`` in ``approx`` — a top-5 of the
+    query vectors ``qs`` over ``emb`` — against brute-force truth."""
+    from ner_spark.functions.similarity import brute_force_topk
+
+    def pairs(df) -> set:
+        return {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
+
+    truth = pairs(brute_force_topk(emb, qs, k=5))
+    return {key: round(len(pairs(df) & truth) / len(truth), 4) for key, df in approx}
+
+
+def _scaling_pair(n_lo: int, n_hi: int, fx_dir: str, n_turns: int) -> dict:
+    """The flagship job at local[n_lo] vs local[n_hi] over the fixture
+    transcripts replicated SCALE_REPL× (module docstring, part 1)."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from ner_spark.fixtures.build import FIXTURE_VERSION
+    from ner_spark.session import get_spark
+
+    transcripts = os.path.join(fx_dir, "transcripts.parquet")
+    # cache key includes FIXTURE_VERSION: a version bump regenerates
+    # fixtures in place, and a stale replica would silently be timed
+    # against the NEW fixture's turn count
+    big = os.path.join(
+        tempfile.gettempdir(),
+        f"ner_spark_scale_{os.path.basename(fx_dir)}_x{SCALE_REPL}_{FIXTURE_VERSION}",
+    )
+    if not os.path.isdir(big):
+        s = get_spark(master=f"local[{n_hi}]", app_name="ner_spark_scale_prep")
+        t = s.read.parquet(transcripts)
+        r = (
+            t.crossJoin(
+                F.broadcast(s.range(SCALE_REPL).select(F.col("id").alias("rep")))
+            )
+            .withColumn("conv_id", F.concat_ws("#", "conv_id", "rep"))
+            .drop("rep")
+        )
+        r.repartition(256).write.mode("overwrite").parquet(big)
+        s.stop()
+    n_big_turns = n_turns * SCALE_REPL
+
+    def _one_run(k: int) -> tuple[float, int]:
+        s = get_spark(master=f"local[{k}]", app_name=f"ner_spark_scale_{k}")
+        _kg_triples_count(s, transcripts)  # warm-up: workers + codegen
+        t0 = time.time()
+        n = _kg_triples_count(s, big)
+        dt = time.time() - t0
+        s.stop()
+        return dt, n
+
+    def _summarize(runs: list[float], n: int) -> dict:
+        dt = min(runs)
+        return {
+            "sec": round(dt, 3),
+            "sec_runs": [round(x, 3) for x in runs],
+            "triples_per_sec": round(n / dt, 1),
+            "turns_per_sec": round(n_big_turns / dt, 1),
+        }
+
+    def _level_pair(ks: tuple[int, int], n_rounds: int) -> dict:
+        # INTERLEAVED rounds (lo, hi, lo, hi, ...), one fresh warmed
+        # session per run: host-load drift on this shared box is
+        # minutes-scale, so running each level as a sequential block
+        # puts an entire drift window on ONE side of the ratio
+        # (measured: a monotone slowdown during the lo block alone
+        # moved the reported efficiency from ~0.94 to 0.78 with no
+        # code change). Alternating runs lets both levels sample the
+        # same windows (see the estimator notes below on how the
+        # ratio is then formed). Per-run session spin-up is excluded from timing
+        # (the warm-up pass), so interleaving costs bench wall time
+        # but not measurement accuracy.
+        runs: dict[int, list[float]] = {k: [] for k in ks}
+        n_out = 0
+        for _ in range(n_rounds):
+            for k in ks:
+                dt, n_out = _one_run(k)
+                runs[k].append(dt)
+        return {f"local{k}": _summarize(runs[k], n_out) for k in ks}
+
+    # Efficiency estimation under host noise — two estimators, both
+    # reported raw for audit:
+    # (a) per-side minima over rounds: assumes each level
+    #     eventually samples a clean window. Fails when neighbor-VM
+    #     pressure persists across the whole measurement — steal
+    #     hits the 4N level (more runnable threads, less spare-core
+    #     slack) harder than N, so a dirty hi-side minimum paired
+    #     with a clean lo-side minimum biases the ratio DOWN
+    #     (measured on this box: 0.74-0.76 under pressure vs
+    #     0.89-0.95 on identical code when quiet).
+    # (b) per-ROUND ratios: each round's lo/hi runs are adjacent in
+    #     time, so ambient conditions are matched. The one noise
+    #     mode that can INFLATE a round is load landing only on its
+    #     lo run; rounds whose lo run is >15% above the lo minimum
+    #     are therefore ineligible for the headline.
+    # The headline is the max of (a) and the best ELIGIBLE (b):
+    # every other noise mode only depresses the measurement, so the
+    # least-contaminated observation is the best available estimate
+    # of the engine's true scaling; the full per-run matrix ships
+    # in the JSON.
+    # 6 rounds (~10-12 min span): host-load drift on this box is
+    # minutes-scale and occasionally covers an entire 4-round
+    # window (measured 2026-08-19: one full-bench window reported
+    # every matched round at 0.62-0.72 while probes 30 min either
+    # side measured 0.86-0.91 on identical code) — more rounds =
+    # more chances that at least one matched round is clean.
+    # host-capacity probe BEFORE the rounds (and again after):
+    # host drift on this box is minutes-scale, so one sample after
+    # a 10-12 min round block could miss a transient degradation
+    # that covered the rounds themselves — the pre/post pair
+    # brackets the measurement window instead.
+    try:
+        host_pre = _host_capacity_probe(n_lo, n_hi, n_rounds=1)
+    except Exception as exc:  # pragma: no cover - env-dependent
+        host_pre = {"error": repr(exc)[:200]}
+    scaling = _level_pair((n_lo, n_hi), n_rounds=6)
+    lo_runs = scaling[f"local{n_lo}"]["sec_runs"]
+    hi_runs = scaling[f"local{n_hi}"]["sec_runs"]
+    thr_lo = scaling[f"local{n_lo}"]["turns_per_sec"]
+    thr_hi = scaling[f"local{n_hi}"]["turns_per_sec"]
+    eff_minima = (thr_hi / thr_lo) / (n_hi / n_lo)
+    per_round = [
+        round((lo / hi) / (n_hi / n_lo), 3)
+        for lo, hi in zip(lo_runs, hi_runs)
+    ]
+    lo_min = min(lo_runs)
+    eligible = [
+        e for e, lo in zip(per_round, lo_runs) if lo <= 1.15 * lo_min
+    ]
+    scaling["pair"] = [n_lo, n_hi]
+    scaling["efficiency_per_side_minima"] = round(eff_minima, 3)
+    scaling["efficiency_per_round"] = per_round
+    scaling["efficiency_n_to_4n"] = round(max([eff_minima] + eligible), 3)
+    scaling["input_turns"] = n_big_turns
+    # host-capacity ceiling bracketing the window (see the probe
+    # docstring): scalar ≈ the box's best case, vector ≈ the
+    # memory/vector-frequency-bound worst case; the flagship's mix
+    # sits between them, so an engine reading below gate in a
+    # window whose vector ceiling collapsed is a host event, and
+    # the probe records it inside the same JSON. Best-effort: a
+    # probe failure (fork limits, BLAS quirks) must never cost the
+    # bench record itself.
+    try:
+        host_post = _host_capacity_probe(n_lo, n_hi, n_rounds=1)
+    except Exception as exc:  # pragma: no cover - env-dependent
+        host_post = {"error": repr(exc)[:200]}
+    scaling["host_capacity"] = {"pre": host_pre, "post": host_post}
+    return scaling
+
+
+# What each row's clock covers, one sentence per timing rule.
+TIMED_OVER = {
+    "kg_tag_extract_triples": (
+        "The fixture transcripts scanned, tagged and extracted by the fused "
+        "UDF, deduplicated per turn and counted as triples on a warmed "
+        "session, min of 2 runs."
+    ),
+    "kg_stages": (
+        "One build of entry_queries._kg, the nine pipeline.kg_stages stages "
+        "over the fixture transcripts each checkpointed once, plus a count "
+        "of its canonical triples."
+    ),
+    "*": (
+        "q(spark, sf_dir).count() for each QUERIES entry after kg_stages, "
+        "min of 2 runs, where a query's first run also builds any "
+        "session_table it is first to read (LPA labels, alias pairs, LM "
+        "scores), so the kept min excludes that build."
+    ),
+}
 
 
 def main() -> None:
@@ -122,412 +310,90 @@ def main() -> None:
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     sf_num = float(sf_name[2:]) if sf_name.startswith("sf") else 0.1
 
-    from ner_spark.entry_queries import QUERIES
-    from ner_spark.fixtures.build import build_fixtures
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from ner_spark.entry_queries import QUERIES, _fx, _kg
+    from ner_spark.fixtures.generator import generate_clustered_embeddings
+    from ner_spark.functions.dedup import release_persisted_blocks
+    from ner_spark.functions.similarity import ivf_topk, kmeans_centroids, lsh_topk
+    from ner_spark.operators.extraction import mentions_to_triples
+    from ner_spark.pipeline import build_mentions
     from ner_spark.session import get_spark
 
-    fx_dir = build_fixtures(sf_name, full=False)
+    # the full fixture build the kg_* queries read: a lighter build here
+    # would fail _kg's marker check and be rebuilt under this run
+    fx_dir = _fx(sf_dir)
+    transcripts = os.path.join(fx_dir, "transcripts.parquet")
+    n_turns = pq.read_metadata(transcripts).num_rows
+
+    # -- scaling evidence: same job, local[N] vs local[4N], 4N = cores
+    # (a 1-core host has no pair to measure). It runs first, before the
+    # query rows heat the box.
+    cores = os.cpu_count() or 1
+    n_lo, n_hi = max(1, cores // 4), cores
+    scaling = None
+    if n_hi > n_lo and os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
+        scaling = _scaling_pair(n_lo, n_hi, fx_dir, n_turns)
 
     timings: dict[str, float] = {}
     counts: dict[str, int] = {}
 
-    def run(name: str, fn, best_of: int = 1) -> None:
-        # best_of > 1 for the output-heavy pair queries: the FIRST big
-        # JVM-side query after the Python-heavy KG stage runs 3-7×
-        # slower (block-eviction + JIT churn that self-heals within one
-        # run — reproduced and isolated; session-history noise, not the
-        # operator), so single-shot timing would measure session state
-        # rather than the engine. Same best-of-N philosophy as the
-        # scaling section.
-        best = None
-        for _ in range(best_of):
-            t0 = time.time()
-            counts[name] = int(fn())
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+    def run(name: str, fn) -> None:
+        """Time one call of ``fn``; a row timed again keeps its min."""
+        t0 = time.time()
+        counts[name] = int(fn())
+        dt = round(time.time() - t0, 3)
+        timings[name] = min(dt, timings.get(name, dt))
 
     spark = get_spark(master=f"local[{cpus}]", app_name="ner_spark_bench")
 
     # session warm-up, excluded from every timing: spins up the Python
     # worker pool (numpy/pandas imports) and JIT/codegen — per-executor-
     # lifetime costs a long-lived cluster amortizes over hours.
-    from ner_spark.operators.extraction import mentions_to_triples as _m2t
-    from ner_spark.pipeline import build_mentions as _bm
+    warm = spark.read.parquet(transcripts).limit(5000)
+    mentions_to_triples(build_mentions(warm)).count()
 
-    _warm = spark.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
-    _m2t(_bm(_warm.limit(5000))).count()
-
-    # -- headline: KG pipeline --------------------------------------------
-    # best_of=2: this is the flagship number the driver records, and the
-    # first full-size pass after session start can pay page-cache misses
-    # on the input parquet plus residual JIT churn (BENCH_r02 recorded
-    # 2.55 s against a 1.6-1.8 s steady state) — the second run measures
-    # the engine, not session history.
-    run("kg_tag_extract_triples", lambda: _kg_triples_count(spark, fx_dir), best_of=2)
-
-    from ner_spark.operators.components import connected_components
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions, extract_relations
-    from ner_spark.pipeline import build_mentions
-
-    t = spark.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
-    mentions = build_mentions(t).cache()
-    mentions.count()  # materialize once; stage timings below exclude tagging
-
-    run("kg_relations", lambda: extract_relations(mentions).count())
-
-    def _link_cc() -> int:
-        nodes, edges = link_edges(explode_mentions(mentions))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        return a.count()
-
-    # best_of=2: link_cc is the heaviest headline query and runs right
-    # after the Python-heavy tagging stage — the same session-history
-    # cold window that inflated the flagship in r02 (recorded 9.7 s
-    # single-shot vs 5.5-5.8 s steady state measured interleaved).
-    run("kg_link_cc", _link_cc, best_of=2)
-
-    # graph analytics timed over the session's checkpointed KG stages
-    # (entry_queries._kg, built here untimed) so the numbers isolate the
-    # graph operators, not the upstream tag/link/CC chain (which the rows
-    # above already measure). The QUERIES loop below reads the same
-    # stages, so its first KG consumer does not absorb the build either.
-    from ner_spark.entry_queries import _kg
-    from ner_spark.operators.graph import (
-        current_facts,
-        degree_stats,
-        label_propagation,
-        pagerank,
-        paths_2hop,
-        triangle_count,
-    )
-
-    kg = _kg(spark, sf_dir)
-    kg_edges, kg_nodes, _ct = kg["edges"], kg["nodes"], kg["canonical_triples"]
-    run("kg_degree_stats", lambda: degree_stats(kg_edges).count())
-    # best_of=2: both are multi-stage jobs over a tiny cached graph —
-    # the first call pays codegen/JIT for every new stage shape (measured
-    # 3.0→0.9 s / 4.1→2.4 s steady state); the second run measures the
-    # operators.
-    run("kg_pagerank", lambda: pagerank(kg_edges).count(), best_of=2)
-    run("kg_triangles", lambda: triangle_count(kg_edges).count(), best_of=2)
-    run("kg_paths_2hop", lambda: paths_2hop(kg_edges).count())
-    # best_of=2: 3 localCheckpointed rounds = many first-seen stage
-    # shapes, same JIT story as pagerank.
-    run("kg_communities", lambda: label_propagation(kg_edges).count(), best_of=2)
-    run("kg_current_facts", lambda: current_facts(_ct, t).count())
-    from ner_spark.operators.graph import edge_decay_weights
-
-    run("kg_edge_decay", lambda: edge_decay_weights(_ct, t).count())
-
-    # KG-consumer layer added in r3 session 3: link prediction, walk
-    # corpus, community summaries, alias queue. best_of=2 — all are
-    # multi-stage jobs over the small cached graph (JIT-dominated cold).
-    from ner_spark.functions.dedup import release_persisted_blocks
-    from ner_spark.operators.alias import alias_pairs
-    from ner_spark.operators.graph import (
-        adamic_adar,
-        community_profiles,
-        edge_holdout_split,
-        random_walks,
-    )
-
-    run("kg_adamic_adar", lambda: adamic_adar(kg_edges).count(), best_of=2)
-    from ner_spark.operators.graph import linkpred_eval
-
-    # one summary row; the cost is AA-on-train + the rank overlay
-    run("kg_linkpred_eval", lambda: linkpred_eval(kg_edges).count(), best_of=2)
-    run("kg_random_walks", lambda: random_walks(kg_edges).count(), best_of=2)
-    # profiles timed over the PUBLISHED community assignment (untimed
-    # checkpoint): kg_communities above already times the LPA rounds;
-    # this row times the summarization, not the propagation again
-    lpa_mat = label_propagation(kg_edges).localCheckpoint(eager=True)
-    run(
-        "kg_community_profiles",
-        lambda: community_profiles(kg_edges, labels=lpa_mat).count(),
-        best_of=2,
-    )
-    run("kg_edge_split", lambda: edge_holdout_split(kg_edges).count())
-    from ner_spark.operators.graph import pred_cooccurrence
-
-    run("kg_pred_cooccurrence", lambda: pred_cooccurrence(kg_edges).count())
-    from pyspark.sql import functions as F
-
-    from ner_spark.operators.graph import bottleneck_paths
-    from ner_spark.operators.linking import md5_hash60_col as _h60c
-
-    def _bneck() -> int:
-        nodes = (
-            kg_edges.select(F.col("src_entity").alias("x"))
-            .unionByName(kg_edges.select(F.col("dst_entity").alias("x")))
-            .distinct()
-        )
-        srcs = nodes.where(
-            F.pmod(_h60c(F.concat(F.lit("bneck|"), F.col("x"))), F.lit(29)) == 0
-        )
-        return bottleneck_paths(kg_edges, srcs, max_hops=3).count()
-
-    run("kg_bottleneck_paths", _bneck, best_of=2)
-    run("kg_alias_pairs", lambda: alias_pairs(kg_nodes).count(), best_of=2)
-    from ner_spark.operators.alias import alias_clusters
-
-    # clusters timed over a PUBLISHED pair table (untimed checkpoint),
-    # the same isolate-the-operator treatment the graph analytics get
-    # over cached canonical edges: kg_alias_pairs above already times
-    # the PassJoin; this row times the closure, not the join again
-    alias_pairs_mat = alias_pairs(kg_nodes).localCheckpoint(eager=True)
-    run(
-        "kg_alias_clusters",
-        lambda: alias_clusters(kg_nodes, pairs=alias_pairs_mat).count(),
-    )
-    from ner_spark.operators.graph import entity_cards
-
-    run("kg_entity_cards", lambda: entity_cards(kg_nodes, kg_edges).count())
-    release_persisted_blocks()
-
-    # mention context windows: row-local over the still-cached mentions
-    from ner_spark.functions.datasets import mention_contexts
-    from pyspark.sql import functions as F
-
-    def _mention_ctx() -> int:
-        ex = mentions.select(
-            "conv_id", "turn_idx", "text",
-            F.posexplode("mentions").alias("mention_idx", "mn"),
-        ).select(
-            "conv_id", "turn_idx", "text", "mention_idx",
-            F.col("mn.pred").alias("pred"), F.col("mn.obj").alias("obj"),
-            F.col("mn.span_start").alias("span_start"),
-            F.col("mn.span_end").alias("span_end"),
-        )
-        return mention_contexts(ex, None, window=3).count()
-
-    run("kg_mention_contexts", _mention_ctx)
-
-    # release the cached mentions BEFORE the training-data queries: the
-    # 90k-row mention-struct cache is dead weight for them, and the
-    # resulting memory pressure measured as a 3-6× slowdown of the
-    # pair-enumeration queries inside a long bench session.
-    n_turns = t.count()
-    mentions.unpersist()
-    # drop any remaining cached/persisted frames from the KG section:
-    # leftover storage memory measured as a 3-90x slowdown of later
-    # single-shot queries in a long bench session (kg_topic_segments
-    # 0.35 s standalone vs 32 s mid-session before this teardown)
-    release_persisted_blocks()
-    spark.catalog.clearCache()
-
-    # -- headline: training-data ops + relational core --------------------
-    heavy = {
-        "token_jaccard_pairs",
-        "simhash_band_pairs",
-        "embedding_dup_pairs_ivf",
-        # session-history-sensitive single-shot outliers (first run can
-        # pay page-cache + JIT churn mid-session; standalone steady
-        # state is 10-90x faster — same best-of-N philosophy as above)
-        "kg_topic_segments",
-        "conv_near_dup",
-    }
-    for qname in (
-        "dedup_exact",
-        "lsh_dup_pairs",
-        "dedup_survivors",
-        "simhash_values",
-        "simhash_band_pairs",
-        "token_jaccard_pairs",
-        "embedding_dup_pairs_ivf",
-        "ann_topk",
-        "ann_ivf_topk",
-        "multimodal_decode",
-        "pii_scan",
-        "pii_redact",
-        "events_asof_view",
-        "pricing_summary",
-        "top_revenue_nations",
-        "window_topk_orders",
-        "sessionize",
-        "quality_scores",
-        "ngram_topk",
-        "tfidf_terms",
-        "pack_windows",
-        "bm25_topk",
-        "kg_topic_segments",
-        "tool_transitions",
-        "turn_latency",
-        "conv_dedup",
-        "mixture_weights",
-        "filter_report",
-        "curation_decisions",
-        "kg_conv_cards",
-        "token_percentiles",
-        "embedding_centroids",
-        "tool_ngrams",
-        "corpus_drift",
-        "lang_confusion",
-        "mixture_resample",
-        # session-5 additions
-        "dup_span_fraction",
-        "unigram_logprob",
-        "distinct_sketch",
-        "embedding_outliers",
-        "hybrid_rrf_topk",
-        "conv_near_dup",
-        "source_overlap",
-        "pq_codes",
-        "sft_pairs",
-        "bpe_merges",
-        "weighted_sample",
-        # round-4 additions
-        "dup_span_removal",
-        "bigram_logprob",
-        "sft_packed",
-        "kg_linkpred_probe",
-        "semantic_dedup",
-        "chunk_windows",
-        "hard_negatives",
-        "dsir_weights",
-        "kg_verbalize",
-        "ann_pq_topk",
-        "session_windows",
-        "containment_pairs",
-        "kg_cloze_questions",
-        "dedup_incremental",
-        # round-4 continuation additions
-        "retry_runs",
-        "kg_supergraph",
-        "kg_node_features",
-        "curriculum_schedule",
-        "perplexity_buckets",
-        "kg_entity_salience",
-        "kg_motif_census",
-        "kg_fact_confidence",
-        "novelty_scores",
-        "kg_entity_bursts",
-        "lm_topk",
-        "conv_summary",
-        # round-4 wave-2 additions
-        "event_funnel",
-        "event_retention",
-        "gopher_rules",
-        "text_normalize",
-        "zipf_fit",
-        "dup_cluster_stats",
-        "dialog_acts",
-        "ann_recall_eval",
-        "kg_transitive_closure",
-        # round-4 wave-3 additions (round-5 window pool)
-        "heaps_fit",
-        "kg_subject_completeness",
-        "split_leakage",
-        "event_anomaly_days",
-        "rank_agreement",
-        "chunk_dedup",
-        "oov_rate",
-        "lsh_recall_eval",
-        "mmr_rerank",
-        "pmi_collocations",
-        "session_funnel",
-        "json_props_stats",
-        "event_pivot",
-        "order_priority_rollup",
-        # round-5 additions
-        "json_payload_mentions",
-        "event_unpivot",
-        "event_daily_trend",
-        "idle_customers",
-        "kg_pred_algebra",
-        "kg_rule_confidence",
-        "kg_fact_history",
-        "small_quantity_revenue",
-        "event_cube",
-        "tokenizer_fertility",
-        "keyphrases",
-        "sq_codes",
-        "ann_sq_topk",
-        "late_order_suppliers",
-        "customer_order_distribution",
-        "nation_market_share",
-        "nation_year_profit",
-        "cheapest_supplier_per_part",
-        "promo_revenue_share",
-        "top_customer_returns",
-        "nation_pair_trade",
-        "returnflag_priority_counts",
-        "disjunctive_part_revenue",
-        "large_order_customers",
-        "top_supplier_revenue",
-        "part_supplier_variety",
-        "kg_ppr",
-        "kg_hits",
-        "kg_neighbor_jaccard",
-        "shipping_priority",
-        "late_shipment_priority",
-        "discount_band_revenue",
-        "monthly_record_orders",
-        "pareto_orders",
-        "event_attribution",
-    ):
-        run(
-            qname,
-            lambda q=qname: QUERIES[q](spark, sf_dir).count(),
-            best_of=2 if qname in heavy else 1,
-        )
-
-    # pair queries are done: release the salted-self-join helper's
-    # persisted block derivations so they don't occupy storage memory
-    # under the ANN sections (explicit teardown beats the 8-slot LRU in
-    # a long session).
-    from ner_spark.functions.dedup import release_persisted_blocks
-
-    release_persisted_blocks()
+    # Every row is the min of 2 runs but kg_stages, whose second call
+    # would read the session table its first one built. The first
+    # full-size pass of a job after session start can pay page-cache
+    # misses and JIT for every new stage shape (BENCH_r02 recorded the
+    # flagship at 2.55 s against a 1.6-1.8 s steady state); the second
+    # run measures the engine, not session history.
+    for _ in range(2):
+        run("kg_tag_extract_triples", lambda: _kg_triples_count(spark, transcripts))
+    run("kg_stages", lambda: _kg(spark, sf_dir)["canonical_triples"].count())
+    for name, q in QUERIES.items():
+        for _ in range(2):
+            run(name, lambda q=q: q(spark, sf_dir).count())
+        # leftover persisted block derivations measured as a 3-90x
+        # slowdown of later single-shot rows in a long bench session
+        # (one row: 0.35 s standalone vs 32 s mid-session)
+        release_persisted_blocks()
 
     # -- ANN recall@k vs the exact baseline (quality, not latency) ---------
     # the approximate indexes are only useful if their recall is known;
     # measured at the bench scale against brute_force_topk ground truth.
-    ann_recall: dict[str, float] = {}
+    # Each sweep has its own try: a failed sweep must not sink the record.
     try:
-        from pyspark.sql import functions as F
-
-        from ner_spark.functions.similarity import (
-            brute_force_topk,
-            ivf_topk,
-            kmeans_centroids,
-            lsh_topk,
-        )
-
         emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
         qs = emb.where(F.col("vec_id") < 50)
-        truth = {
-            (r["query_id"], r["neighbor_id"])
-            for r in brute_force_topk(emb, qs, k=5).collect()
-        }
-
-        def _recall(df) -> float:
-            got = {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
-            return round(len(got & truth) / len(truth), 4)
-
-        ann_recall["lsh_8planes"] = _recall(lsh_topk(emb, qs, k=5, n_planes=8))
-        # multi-table LSH (standard recall repair): 4 disjoint 4-plane
-        # banks, candidates = union over tables — ~25% of brute-force
-        # candidate cost at this corpus size
-        ann_recall["lsh_4p_4tables"] = _recall(
-            lsh_topk(emb, qs, k=5, n_planes=4, n_tables=4)
-        )
-        ann_recall["ivf_seed_nprobe1"] = _recall(ivf_topk(emb, qs, k=5, n_cells=16))
-        ann_recall["ivf_seed_nprobe2"] = _recall(
-            ivf_topk(emb, qs, k=5, n_cells=16, nprobe=2)
-        )
-        ann_recall["ivf_seed_nprobe4"] = _recall(
-            ivf_topk(emb, qs, k=5, n_cells=16, nprobe=4)
-        )
         cent = kmeans_centroids(emb, n_cells=16, n_iter=4)
-        ann_recall["ivf_kmeans_nprobe2"] = _recall(
-            ivf_topk(emb, qs, k=5, centroids=cent, nprobe=2)
-        )
-    except Exception as e:  # recall block must never sink the bench
-        ann_recall["error"] = str(e)[:200]
+        ann_recall = _recall_at_5(emb, qs, [
+            ("lsh_8planes", lsh_topk(emb, qs, k=5, n_planes=8)),
+            # multi-table LSH (standard recall repair): 4 disjoint 4-plane
+            # banks, candidates = union over tables — ~25% of brute-force
+            # candidate cost at this corpus size
+            ("lsh_4p_4tables", lsh_topk(emb, qs, k=5, n_planes=4, n_tables=4)),
+            *[
+                (f"ivf_seed_nprobe{p}", ivf_topk(emb, qs, k=5, n_cells=16, nprobe=p))
+                for p in (1, 2, 4)
+            ],
+            ("ivf_kmeans_nprobe2", ivf_topk(emb, qs, k=5, centroids=cent, nprobe=2)),
+        ])
+    except Exception as e:
+        ann_recall = {"error": str(e)[:200]}
 
     # -- ANN recall@k on CLUSTERED geometry --------------------------------
     # the uniform sweep above is the adversarial floor (no coarse
@@ -535,22 +401,13 @@ def main() -> None:
     # corpora are clustered, and there trained centroids must earn their
     # cost: k-means cells + nprobe should reach production recall while
     # seed cells plateau. Deterministic Gaussian-blob fixture.
-    ann_recall_clustered: dict[str, float] = {}
     try:
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from ner_spark.fixtures.generator import generate_clustered_embeddings
-        from ner_spark.functions.similarity import (
-            brute_force_topk,
-            ivf_topk,
-            kmeans_centroids,
-            lsh_topk,
-        )
-
         cdf = generate_clustered_embeddings(n=2000, dim=64, n_blobs=16)
         cemb = spark.createDataFrame(
-            [(int(r.vec_id), [float(x) for x in r.embedding]) for r in cdf.itertuples()],
+            [
+                (int(r.vec_id), [float(x) for x in r.embedding])
+                for r in cdf.itertuples()
+            ],
             T.StructType(
                 [
                     T.StructField("vec_id", T.LongType()),
@@ -559,30 +416,24 @@ def main() -> None:
             ),
         ).cache()
         cqs = cemb.where(F.col("vec_id") < 50)
-        truth_c = {
-            (r["query_id"], r["neighbor_id"])
-            for r in brute_force_topk(cemb, cqs, k=5).collect()
-        }
-
-        def _recall_c(df) -> float:
-            got = {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
-            return round(len(got & truth_c) / len(truth_c), 4)
-
-        for npb in (1, 2):
-            ann_recall_clustered[f"ivf_seed_nprobe{npb}"] = _recall_c(
-                ivf_topk(cemb, cqs, k=5, n_cells=16, nprobe=npb)
-            )
         ccent = kmeans_centroids(cemb, n_cells=16, n_iter=4)
-        for npb in (1, 2):
-            ann_recall_clustered[f"ivf_kmeans_nprobe{npb}"] = _recall_c(
-                ivf_topk(cemb, cqs, k=5, centroids=ccent, nprobe=npb)
-            )
-        ann_recall_clustered["lsh_4p_4tables"] = _recall_c(
-            lsh_topk(cemb, cqs, k=5, n_planes=4, n_tables=4)
-        )
+        ann_recall_clustered = _recall_at_5(cemb, cqs, [
+            *[
+                (f"ivf_seed_nprobe{p}", ivf_topk(cemb, cqs, k=5, n_cells=16, nprobe=p))
+                for p in (1, 2)
+            ],
+            *[
+                (
+                    f"ivf_kmeans_nprobe{p}",
+                    ivf_topk(cemb, cqs, k=5, centroids=ccent, nprobe=p),
+                )
+                for p in (1, 2)
+            ],
+            ("lsh_4p_4tables", lsh_topk(cemb, cqs, k=5, n_planes=4, n_tables=4)),
+        ])
         cemb.unpersist()
     except Exception as e:
-        ann_recall_clustered["error"] = str(e)[:200]
+        ann_recall_clustered = {"error": str(e)[:200]}
 
     spark.stop()
 
@@ -591,6 +442,7 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        "timed_over": TIMED_OVER,
         "sf": sf_num,
         "rows": counts,
         "kg_triples_per_sec": round(
@@ -599,157 +451,9 @@ def main() -> None:
         "kg_turns_per_sec": round(n_turns / timings["kg_tag_extract_triples"], 1),
         "ann_recall_at_5": ann_recall,
         "ann_recall_at_5_clustered": ann_recall_clustered,
+        "host": {"cores": cores},
     }
-
-    # -- scaling evidence: same job, local[N] vs local[4N], 4N = cores
-    # (a 1-core host has no pair to measure)
-    cores = os.cpu_count() or 1
-    n_lo, n_hi = max(1, cores // 4), cores
-    out["host"] = {"cores": cores}
-    if n_hi > n_lo and os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
-        import tempfile
-
-        from ner_spark.fixtures.build import FIXTURE_VERSION
-
-        repl = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "32"))
-        # cache key includes FIXTURE_VERSION: a version bump regenerates
-        # fixtures in place, and a stale replica would silently be timed
-        # against the NEW fixture's turn count
-        big = os.path.join(
-            tempfile.gettempdir(),
-            f"ner_spark_scale_{sf_name}_x{repl}_{FIXTURE_VERSION}",
-        )
-        if not os.path.isdir(big):
-            s = get_spark(
-                master=f"local[{cores}]", app_name="ner_spark_scale_prep"
-            )
-            from pyspark.sql import functions as F
-
-            t = s.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
-            r = (
-                t.crossJoin(
-                    F.broadcast(s.range(repl).select(F.col("id").alias("rep")))
-                )
-                .withColumn("conv_id", F.concat_ws("#", "conv_id", "rep"))
-                .drop("rep")
-            )
-            r.repartition(256).write.mode("overwrite").parquet(big)
-            s.stop()
-
-        def _count_big(s) -> int:
-            from ner_spark.operators.extraction import mentions_to_triples
-            from ner_spark.pipeline import build_mentions
-
-            t = s.read.parquet(big)
-            return mentions_to_triples(build_mentions(t)).count()
-
-        n_big_turns = n_turns * repl
-
-        def _one_run(k: int) -> tuple[float, int]:
-            s = get_spark(master=f"local[{k}]", app_name=f"ner_spark_scale_{k}")
-            _kg_triples_count(s, fx_dir)  # warm-up: workers + codegen
-            t0 = time.time()
-            n = _count_big(s)
-            dt = time.time() - t0
-            s.stop()
-            return dt, n
-
-        def _summarize(runs: list[float], n: int) -> dict:
-            dt = min(runs)
-            return {
-                "sec": round(dt, 3),
-                "sec_runs": [round(x, 3) for x in runs],
-                "triples_per_sec": round(n / dt, 1),
-                "turns_per_sec": round(n_big_turns / dt, 1),
-            }
-
-        def _level_pair(ks: tuple[int, int], n_rounds: int) -> dict:
-            # INTERLEAVED rounds (lo, hi, lo, hi, ...), one fresh warmed
-            # session per run: host-load drift on this shared box is
-            # minutes-scale, so running each level as a sequential block
-            # puts an entire drift window on ONE side of the ratio
-            # (measured: a monotone slowdown during the lo block alone
-            # moved the reported efficiency from ~0.94 to 0.78 with no
-            # code change). Alternating runs lets both levels sample the
-            # same windows (see the estimator notes below on how the
-            # ratio is then formed). Per-run session spin-up is excluded from timing
-            # (the warm-up pass), so interleaving costs bench wall time
-            # but not measurement accuracy.
-            runs: dict[int, list[float]] = {k: [] for k in ks}
-            n_out = 0
-            for _ in range(n_rounds):
-                for k in ks:
-                    dt, n_out = _one_run(k)
-                    runs[k].append(dt)
-            return {f"local{k}": _summarize(runs[k], n_out) for k in ks}
-
-        # Efficiency estimation under host noise — two estimators, both
-        # reported raw for audit:
-        # (a) per-side minima over rounds: assumes each level
-        #     eventually samples a clean window. Fails when neighbor-VM
-        #     pressure persists across the whole measurement — steal
-        #     hits the 4N level (more runnable threads, less spare-core
-        #     slack) harder than N, so a dirty hi-side minimum paired
-        #     with a clean lo-side minimum biases the ratio DOWN
-        #     (measured on this box: 0.74-0.76 under pressure vs
-        #     0.89-0.95 on identical code when quiet).
-        # (b) per-ROUND ratios: each round's lo/hi runs are adjacent in
-        #     time, so ambient conditions are matched. The one noise
-        #     mode that can INFLATE a round is load landing only on its
-        #     lo run; rounds whose lo run is >15% above the lo minimum
-        #     are therefore ineligible for the headline.
-        # The headline is the max of (a) and the best ELIGIBLE (b):
-        # every other noise mode only depresses the measurement, so the
-        # least-contaminated observation is the best available estimate
-        # of the engine's true scaling; the full per-run matrix ships
-        # in the JSON.
-        # 6 rounds (~10-12 min span): host-load drift on this box is
-        # minutes-scale and occasionally covers an entire 4-round
-        # window (measured 2026-08-19: one full-bench window reported
-        # every matched round at 0.62-0.72 while probes 30 min either
-        # side measured 0.86-0.91 on identical code) — more rounds =
-        # more chances that at least one matched round is clean.
-        # host-capacity probe BEFORE the rounds (and again after):
-        # host drift on this box is minutes-scale, so one sample after
-        # a 10-12 min round block could miss a transient degradation
-        # that covered the rounds themselves — the pre/post pair
-        # brackets the measurement window instead.
-        try:
-            host_pre = _host_capacity_probe(n_lo, n_hi, n_rounds=1)
-        except Exception as exc:  # pragma: no cover - env-dependent
-            host_pre = {"error": repr(exc)[:200]}
-        scaling = _level_pair((n_lo, n_hi), n_rounds=6)
-        lo_runs = scaling[f"local{n_lo}"]["sec_runs"]
-        hi_runs = scaling[f"local{n_hi}"]["sec_runs"]
-        thr_lo = scaling[f"local{n_lo}"]["turns_per_sec"]
-        thr_hi = scaling[f"local{n_hi}"]["turns_per_sec"]
-        eff_minima = (thr_hi / thr_lo) / (n_hi / n_lo)
-        per_round = [
-            round((lo / hi) / (n_hi / n_lo), 3)
-            for lo, hi in zip(lo_runs, hi_runs)
-        ]
-        lo_min = min(lo_runs)
-        eligible = [
-            e for e, lo in zip(per_round, lo_runs) if lo <= 1.15 * lo_min
-        ]
-        scaling["pair"] = [n_lo, n_hi]
-        scaling["efficiency_per_side_minima"] = round(eff_minima, 3)
-        scaling["efficiency_per_round"] = per_round
-        scaling["efficiency_n_to_4n"] = round(max([eff_minima] + eligible), 3)
-        scaling["input_turns"] = n_big_turns
-        # host-capacity ceiling bracketing the window (see the probe
-        # docstring): scalar ≈ the box's best case, vector ≈ the
-        # memory/vector-frequency-bound worst case; the flagship's mix
-        # sits between them, so an engine reading below gate in a
-        # window whose vector ceiling collapsed is a host event, and
-        # the probe records it inside the same JSON. Best-effort: a
-        # probe failure (fork limits, BLAS quirks) must never cost the
-        # bench record itself.
-        try:
-            host_post = _host_capacity_probe(n_lo, n_hi, n_rounds=1)
-        except Exception as exc:  # pragma: no cover - env-dependent
-            host_post = {"error": repr(exc)[:200]}
-        scaling["host_capacity"] = {"pre": host_pre, "post": host_post}
+    if scaling:
         out["scaling"] = scaling
 
     print(json.dumps(out))
@@ -759,9 +463,7 @@ def main() -> None:
     # only the compact summary below; VERDICT r04 directive 3). The file
     # is committed per round as BENCH_full_r{N}.json.
     full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_full.json"),
+        "SPARK_GRAFT_BENCH_FULL_OUT", os.path.join(REPO, "BENCH_full.json")
     )
     try:
         with open(full_path, "w") as f:
@@ -795,47 +497,35 @@ def main() -> None:
         "host": out["host"],
     }
     # latest mirror-gate result (written by tools/check_entry.py) as a
-    # cross-reference: total/bad + age in hours, so the record shows
+    # cross-reference: total/bad, the sf dir the gate ran at (it need
+    # not be the sf timed here) and age in hours, so the record shows
     # how fresh the correctness state behind these timings is
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".gate_last.json")
-        ) as f:
+        with open(os.path.join(REPO, ".gate_last.json")) as f:
             g = json.load(f)
         compact["gate"] = {
             "total": g["total"],
             "bad": g["bad"],
+            "sf_dir": g["sf_dir"],
             "age_h": round((time.time() - g["ts"]) / 3600, 1),
         }
     except (OSError, KeyError, ValueError):
         pass
-    sc = out.get("scaling")
-    if sc:
+    if scaling:
+        probes = scaling["host_capacity"].values()
         compact["scaling"] = {
             "pair": [n_lo, n_hi],
-            "efficiency_n_to_4n": sc["efficiency_n_to_4n"],
-            "efficiency_per_side_minima": sc["efficiency_per_side_minima"],
-            "thr_lo": sc[f"local{n_lo}"]["turns_per_sec"],
-            "thr_hi": sc[f"local{n_hi}"]["turns_per_sec"],
+            "efficiency_n_to_4n": scaling["efficiency_n_to_4n"],
+            "efficiency_per_side_minima": scaling["efficiency_per_side_minima"],
+            "thr_lo": scaling[f"local{n_lo}"]["turns_per_sec"],
+            "thr_hi": scaling[f"local{n_hi}"]["turns_per_sec"],
             # window-bracketing host ceiling (scalar best case /
             # vector memory-bound worst case), conservative side of
             # the pre/post pair — the context an engine efficiency
             # reading must be judged against on this VM
             "host": {
                 k: min(
-                    (
-                        v
-                        for v in (
-                            sc.get("host_capacity", {})
-                            .get("pre", {})
-                            .get(f"{k}_eff"),
-                            sc.get("host_capacity", {})
-                            .get("post", {})
-                            .get(f"{k}_eff"),
-                        )
-                        if v is not None
-                    ),
+                    (p[f"{k}_eff"] for p in probes if f"{k}_eff" in p),
                     default=None,
                 )
                 for k in ("scalar", "vector")

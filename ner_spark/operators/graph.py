@@ -1141,6 +1141,11 @@ def random_walks(
 
     from ner_spark.operators.linking import md5_hash60_col
 
+    if walks_per_node < 1:
+        # sequence(0, walks_per_node - 1) would count DOWN: 0 gives 2 walks
+        raise ValueError(
+            f"random_walks requires walks_per_node >= 1, got {walks_per_node}"
+        )
     und = undirected_edges(edges)
     adj = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))

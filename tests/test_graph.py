@@ -702,6 +702,10 @@ def test_random_walks_deterministic_and_hash_indexed(spark):
     assert random_walks(
         spark.createDataFrame([("a", "p", "a", 1)], schema)
     ).count() == 0
+    # fewer than one walk per node is rejected, not counted down
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="walks_per_node"):
+            random_walks(edges, walks_per_node=bad)
 
 
 def test_community_profiles_consistent_with_lpa(spark):
