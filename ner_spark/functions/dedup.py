@@ -25,6 +25,9 @@ from ner_spark.functions.text import content_hash, tokens_col
 from ner_spark.operators.linking import md5_hash60_col
 
 SIMHASH_BITS = 32
+# bounds on the salt count of a heavy join key's large side (salted_join)
+MIN_SALTS = 8
+MAX_SALTS = 2048
 
 
 # --------------------------------------------------------------------------
@@ -125,7 +128,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     threshold: float = 0.7,
     k: int = 3,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs verified by exact shingle Jaccard ≥ threshold.
 
@@ -143,9 +145,6 @@ def minhash_lsh_pairs(
         # parallelize. Outer generate ≡ same rows here, no inferred filter.
         F.col(id_col).alias("id"), "shingles", F.explode_outer("bands").alias("band")
     )
-    if max_band_bucket is not None:
-        keep = b.groupBy("band").count().where(F.col("count") <= max_band_bucket)
-        b = b.join(F.broadcast(keep.select("band")), "band")
     left = b.select("band", F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     right = b.select("band", F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
     return (
@@ -164,7 +163,6 @@ def near_dup_survivors(
     text_col: str = "text",
     threshold: float = 0.5,
     k: int = 3,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """End-to-end near-dup collapse: LSH pairs → connected components →
     one row per doc with its cluster's canonical (minimum) id.
@@ -177,9 +175,7 @@ def near_dup_survivors(
     (doc_id, canonical_id, is_survivor)."""
     from ner_spark.operators.components import connected_components
 
-    pairs = minhash_lsh_pairs(
-        df, id_col, text_col, threshold, k, max_band_bucket
-    )
+    pairs = minhash_lsh_pairs(df, id_col, text_col, threshold, k)
 
     # CC works on strings; encode ids so lexicographic order equals
     # numeric order over the FULL int64 range: flip the sign bit (signed
@@ -216,7 +212,7 @@ def near_dup_survivors(
 
 
 # --------------------------------------------------------------------------
-# skew-split block self-join (shared by the pair generators)
+# skew-split join (shared by the pair generators)
 # --------------------------------------------------------------------------
 
 # cache-lifetime bound for the helper's persisted derivations (see
@@ -245,8 +241,8 @@ def register_persist(df: DataFrame) -> DataFrame:
 
 
 def release_persisted_blocks() -> int:
-    """Explicitly unpersist every block-derivation DataFrame the salted
-    self-join helper has cached, returning how many were released.
+    """Explicitly unpersist every block-derivation DataFrame the pair
+    generators have registered, returning how many were released.
 
     The 8-slot LRU above bounds the footprint within a burst of pair
     queries, but a long-lived driver (notebook, service) would otherwise
@@ -265,184 +261,107 @@ def release_persisted_blocks() -> int:
     return n
 
 
-def _salted_block_self_join(
-    t: DataFrame,
-    a_side,
-    b_side,
-    key: str = "bkey",
+def salted_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    id_left: str,
+    id_right: str,
     salt_threshold: int = 512,
-    n_salts: int = 8,
-    max_salts: int = 2048,
 ) -> DataFrame:
-    """Self-join ``t`` on its block ``key`` with quadratic-skew splitting.
+    """Equi-join ``left`` and ``right`` on ``keys`` with quadratic-skew
+    splitting — the one skew-split join under every blocked pair
+    generator (token-Jaccard, SimHash-band, IVF-cell and containment
+    self-joins, the Adamic-Adar and neighbor-Jaccard wedge joins, the
+    PassJoin alias candidate join).
 
-    A block's pair count is quadratic in its population, and an equi-join
-    evaluates each block's whole C²/2 enumeration inside ONE task — a
-    single hot block (boilerplate-heavy language × dominant length band,
-    a popular simhash band value, …) serializes the query. Blocks above
-    ``salt_threshold`` rows take a salted triangle join instead: each row
-    gets a deterministic salt u ∈ [0, s); the left side joins under
-    (key, u, j) for every j and the right under (key, i, u), spreading
-    the block over s² independently-scheduled join cells of (C/s)² pairs.
-    Each unordered pair still meets exactly once per block (one
-    orientation survives the caller's id_a < id_b filter), so results
-    are identical — asserted by the oracle gate.
+    A plain equi-join evaluates a key's whole n_l·n_r enumeration inside
+    ONE task, so a single hot block (a dominant language × length band,
+    a popular band value, a hub mid, a shared name prefix) serializes
+    the query. The salt policy, with T = ``salt_threshold``:
 
-    The salt count is ADAPTIVE per block: s_b = ceil(C_b/salt_threshold)
-    clamped to [n_salts, max_salts], computed from the same block census
-    that classifies heavy keys and joined back as a broadcast column. A
-    fixed s would only divide a block's quadratic cost by s² — a
-    million-row block at s=8 still lands 15 G-pair cells on single
-    tasks; scaling s with the block bounds every cell at
-    ~max(salt_threshold, C_b/max_salts)² pairs regardless of block size
-    (the row-duplication cost, C_b·s_b ≈ C_b²/salt_threshold input
-    rows, is proportional to sqrt of the pair output — negligible next
-    to the enumeration it parallelizes).
+    * a key is heavy iff n_l·n_r > T², so at least one of its sides
+      holds more than T rows;
+    * each side of a heavy key with n > T rows gets
+      s = clamp(ceil(n/T), MIN_SALTS, MAX_SALTS) salts, a side with
+      n ≤ T one salt (more salts there would only replicate the large
+      side more);
+    * a row takes its own salt hash(id) mod s and is replicated over
+      every salt of the other side, so the key spreads over an
+      s_l × s_r grid of at least MIN_SALTS cells, each of at most T²
+      pairs (unless MAX_SALTS clamps a side).
 
-    The salted join's INPUT is tiny (rows × s) while its OUTPUT is the
-    quadratic enumeration — AQE sizes partitions by input bytes and
-    would coalesce the whole enumeration back into one task, so the
-    parallelism is pinned with an explicit repartition on the join keys
-    (user-specified numPartitions is exempt from AQE coalescing) that
-    also co-partitions both sides: the join adds no further exchange.
+    The floor keeps a key just over the threshold from landing on a few
+    tasks: without it a self-join block of C = 2T rows takes 2 × 2
+    cells, with it 8 × 8.
 
-    ``a_side``/``b_side`` rename ``t``'s columns into the left/right
-    aliases; both must keep ``key``, and ``t`` must carry an ``id``
-    column (salt source)."""
-    # consumed three times (block census + light join + heavy join):
-    # persist so the possibly-expensive row derivation (signatures,
-    # shingle sets) runs once. MEMORY_AND_DISK — at corpus scale this is
-    # linear state that spills rather than recomputing three times. The
-    # helper cannot know when its lazy result is done, so it bounds its
-    # own footprint instead: at most the last few invocations stay
-    # cached, older ones are unpersisted (safe — uncaching only costs
-    # recomputation if a stale plan is somehow re-executed).
-    t = register_persist(t)
-    counts = t.groupBy(key).count()
-    heavy = counts.where(F.col("count") > salt_threshold).select(
-        key,
-        F.least(
-            F.greatest(
-                F.ceil(F.col("count") / salt_threshold).cast("int"),
-                F.lit(n_salts),
-            ),
-            F.lit(max_salts),
-        ).alias("_ns"),
-    )
-    t_light = t.join(F.broadcast(heavy.select(key)), key, "left_anti")
-    # inner join attaches the per-block salt count
-    t_heavy = t.join(F.broadcast(heavy), key)
-    u = F.pmod(F.hash("id"), F.col("_ns"))
-    salts = F.sequence(F.lit(0), F.col("_ns") - 1)
-    npart = t.sparkSession.sparkContext.defaultParallelism * 2
-    a_h = a_side(
-        t_heavy.withColumn("sa", u)
-        .withColumn("sb", F.explode_outer(salts))
-        .drop("_ns")
-    ).repartition(npart, key, "sa", "sb")
-    b_h = b_side(
-        t_heavy.withColumn("sa", F.explode_outer(salts))
-        .withColumn("sb", u)
-        .drop("_ns")
-    ).repartition(npart, key, "sa", "sb")
-    # the light side gets the same treatment on the key alone: its pair
-    # work is bounded per block (≤ salt_threshold²) but AQE would still
-    # coalesce MANY small blocks into one input-tiny, output-huge task;
-    # hash-spreading blocks over pinned partitions bounds a task at
-    # ~Σc²/npart.
-    light = (
-        a_side(t_light)
-        .repartition(npart, key)
-        .join(b_side(t_light).repartition(npart, key), key)
-    )
-    return light.unionByName(
-        a_h.join(b_h, [key, "sa", "sb"]).drop("sa", "sb")
-    )
+    Every (l, r) pair of a key meets in exactly one cell (its two own
+    salts), so the output is row-identical to the plain equi-join. The
+    replication cost, n_l·s_r + n_r·s_l rows, stays a small share of
+    the n_l·n_r pairs it parallelizes. Light keys (left-anti the
+    heavy census) take a plain co-partitioned join.
 
+    The join inputs are tiny while the outputs are quadratic, and AQE
+    sizes partitions by input bytes: it would coalesce the enumeration
+    back into a few tasks. Both paths therefore pin their parallelism
+    with an explicit repartition on their join keys (a user-specified
+    partition count is exempt from AQE coalescing), which also
+    co-partitions the two sides.
 
-def _salted_block_join(
-    tl: DataFrame,
-    tr: DataFrame,
-    key: str = "bkey",
-    id_left: str = "id",
-    id_right: str = "id",
-    salt_threshold: int = 512,
-    n_salts: int = 8,
-    max_salts: int = 2048,
-) -> DataFrame:
-    """BIPARTITE companion to ``_salted_block_self_join``: equi-join two
-    DIFFERENT frames on their block ``key`` with two-sided quadratic-skew
-    splitting. Used where one join side is a restricted subset of the
-    other (e.g. Adamic-Adar wedges touching only the link-prediction
-    test endpoints) so the self-join's triangle trick doesn't apply.
+    Each input is read three times (census, light path, heavy path), so
+    a caller persists an expensive row derivation once
+    (``register_persist``); a self-join passes two projections of that
+    one frame. Non-key column names must be disjoint between the sides;
+    ``id_left``/``id_right`` name each side's salt source."""
+    budget = salt_threshold * salt_threshold
 
-    Blocks heavy on EITHER side get a per-block 2-D salt grid: side L
-    rows take a deterministic salt ``sa = hash(id) mod s_l`` and
-    replicate over all ``s_r`` values of ``sb``; side R symmetrically.
-    Every (l, r) pair of a block meets in exactly ONE of the s_l × s_r
-    cells — cell cost is bounded at ~``(C/s)² ≤ salt_threshold²`` pairs
-    regardless of block size, with the salt counts adaptive per block
-    and per side (``s = clamp(ceil(C/salt_threshold), 1, max_salts)``;
-    a side that is small in a block that is heavy on the other side
-    keeps s = 1 and only replicates). Light blocks ride a plain
-    co-partitioned join; both paths pin parallelism with an explicit
-    repartition (exempt from AQE's input-byte coalescing, which would
-    otherwise fuse the input-tiny / output-quadratic enumeration back
-    into few tasks).
-
-    ``tl`` and ``tr`` must share ONLY ``key``; ``id_left``/``id_right``
-    name a column on each side to derive the deterministic salt from.
-    """
-    tl = register_persist(tl)
-    tr = register_persist(tr)
-
-    def _s(count_col: Column) -> Column:
+    def _salts(n: str) -> Column:
+        s = F.ceil(F.col(n) / salt_threshold).cast("int")
         return F.least(
-            F.greatest(
-                F.ceil(count_col / salt_threshold).cast("int"), F.lit(1)
-            ),
-            F.lit(max_salts),
+            F.when(s > 1, F.greatest(s, F.lit(MIN_SALTS))).otherwise(1),
+            F.lit(MAX_SALTS),
         )
 
-    cl = tl.groupBy(key).agg(F.count(F.lit(1)).alias("_cl"))
-    cr = tr.groupBy(key).agg(F.count(F.lit(1)).alias("_cr"))
-    # four downstream consumers (two anti-join broadcasts, two inner
-    # broadcasts) each build their own broadcast — persist the tiny
-    # census so the double groupBy runs once, not four times
-    heavy = register_persist(
-        cl.join(cr, key)
-        .where(
-            (F.col("_cl") > salt_threshold) | (F.col("_cr") > salt_threshold)
+    def _side(df: DataFrame, nl: int) -> DataFrame:
+        return df.select(*keys, F.lit(nl).alias("_nl"), F.lit(1 - nl).alias("_nr"))
+
+    # one census aggregate over both sides, not a join of two aggregates
+    heavy = (
+        _side(left, 1)
+        .unionByName(_side(right, 0))
+        .groupBy(*keys)
+        .agg(F.sum("_nl").alias("_nl"), F.sum("_nr").alias("_nr"))
+        .where(F.col("_nl") * F.col("_nr") > budget)
+        .select(*keys, _salts("_nl").alias("_sl"), _salts("_nr").alias("_sr"))
+    )
+    npart = left.sparkSession.sparkContext.defaultParallelism * 2
+    hot = F.broadcast(heavy.select(*keys))
+    light = (
+        left.join(hot, keys, "left_anti")
+        .repartition(npart, *keys)
+        .join(right.join(hot, keys, "left_anti").repartition(npart, *keys), keys)
+    )
+
+    def _cells(side: DataFrame, sa: Column, sb: Column) -> DataFrame:
+        return (
+            side.join(F.broadcast(heavy), keys)
+            .withColumn("_sa", sa)
+            .withColumn("_sb", sb)
+            .drop("_sl", "_sr")
+            .repartition(npart, *keys, "_sa", "_sb")
         )
-        .select(key, _s(F.col("_cl")).alias("_sl"), _s(F.col("_cr")).alias("_sr"))
+
+    def _own(id_col: str, n: str) -> Column:
+        return F.pmod(F.hash(id_col), F.col(n))
+
+    def _every(n: str) -> Column:
+        return F.explode_outer(F.sequence(F.lit(0), F.col(n) - 1))
+
+    cells = _cells(left, _own(id_left, "_sl"), _every("_sr")).join(
+        _cells(right, _every("_sl"), _own(id_right, "_sr")),
+        [*keys, "_sa", "_sb"],
     )
-    light_l = tl.join(F.broadcast(heavy.select(key)), key, "left_anti")
-    light_r = tr.join(F.broadcast(heavy.select(key)), key, "left_anti")
-    npart = tl.sparkSession.sparkContext.defaultParallelism * 2
-    light = light_l.repartition(npart, key).join(
-        light_r.repartition(npart, key), key
-    )
-    h_l = (
-        tl.join(F.broadcast(heavy), key)
-        .withColumn("sa", F.pmod(F.hash(id_left), F.col("_sl")))
-        .withColumn(
-            "sb", F.explode_outer(F.sequence(F.lit(0), F.col("_sr") - 1))
-        )
-        .drop("_sl", "_sr")
-        .repartition(npart, key, "sa", "sb")
-    )
-    h_r = (
-        tr.join(F.broadcast(heavy), key)
-        .withColumn("sb", F.pmod(F.hash(id_right), F.col("_sr")))
-        .withColumn(
-            "sa", F.explode_outer(F.sequence(F.lit(0), F.col("_sl") - 1))
-        )
-        .drop("_sl", "_sr")
-        .repartition(npart, key, "sa", "sb")
-    )
-    return light.unionByName(
-        h_l.join(h_r, [key, "sa", "sb"]).drop("sa", "sb")
-    )
+    return light.unionByName(cells.drop("_sa", "_sb"))
 
 
 # --------------------------------------------------------------------------
@@ -500,8 +419,6 @@ def simhash_band_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     salt_threshold: int = 512,
-    n_salts: int = 8,
-    max_salts: int = 2048,
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance on SimHash with COMPLETE
     pigeonhole banding: the hash is split into ``max_hamming + 1``
@@ -518,26 +435,20 @@ def simhash_band_pairs(
     n_bands = max_hamming + 1
     bits = SIMHASH_BITS
     w = bits // n_bands
-    s = df.select(
-        F.col(id_col).alias("id"),
-        simhash_col(F.col(text_col)).alias("simhash"),
-    ).select(
-        "id",
-        "simhash",
-        F.posexplode_outer(
-            simhash_band_keys_col(F.col("simhash"), n_bands)
-        ).alias("bidx", "band"),
+    s = register_persist(
+        df.select(
+            F.col(id_col).alias("id"),
+            simhash_col(F.col(text_col)).alias("simhash"),
+        ).select(
+            "id",
+            "simhash",
+            F.posexplode_outer(
+                simhash_band_keys_col(F.col("simhash"), n_bands)
+            ).alias("bidx", "band"),
+        )
     )
-
-    def _a(df_: DataFrame) -> DataFrame:
-        return df_.withColumnsRenamed(
-            {"id": "id_a", "simhash": "sh_a", "bidx": "k"}
-        )
-
-    def _b(df_: DataFrame) -> DataFrame:
-        return df_.drop("bidx").withColumnsRenamed(
-            {"id": "id_b", "simhash": "sh_b"}
-        )
+    a = s.withColumnsRenamed({"id": "id_a", "simhash": "sh_a", "bidx": "k"})
+    b = s.drop("bidx").withColumnsRenamed({"id": "id_b", "simhash": "sh_b"})
 
     def _band_match(bi: int) -> Column:
         start = bi * w
@@ -559,11 +470,7 @@ def simhash_band_pairs(
     first_match = F.col("k") == expr
 
     return (
-        _salted_block_self_join(
-            s, _a, _b, key="band",
-            salt_threshold=salt_threshold, n_salts=n_salts,
-            max_salts=max_salts,
-        )
+        salted_join(a, b, ["band"], "id_a", "id_b", salt_threshold)
         .where(F.col("id_a") < F.col("id_b"))
         .where(first_match)
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
@@ -615,8 +522,6 @@ def token_jaccard_pairs(
     threshold: float = 0.7,
     length_buckets: bool = True,
     salt_threshold: int = 512,
-    n_salts: int = 8,
-    max_salts: int = 2048,
 ) -> DataFrame:
     """Token-set Jaccard near-dup pairs within a blocking key (default:
     language), LOSSLESSLY sub-blocked by distinct-token-count buckets.
@@ -669,19 +574,15 @@ def token_jaccard_pairs(
             .withColumn("probe", F.lit(0))
             .withColumn("bkey", F.col("block"))
         )
-    def _a(df: DataFrame) -> DataFrame:
-        return df.drop("block").withColumnsRenamed(
-            {"id": "id_a", "toks": "t_a", "home": "h_a", "probe": "k"}
-        )
-
-    def _b(df: DataFrame) -> DataFrame:
-        return df.drop("block", "probe").withColumnsRenamed(
-            {"id": "id_b", "toks": "t_b", "home": "h_b"}
-        )
-
-    pairs = _salted_block_self_join(
-        t, _a, _b, salt_threshold=salt_threshold, n_salts=n_salts,
-        max_salts=max_salts,
+    t = register_persist(t)
+    a = t.drop("block").withColumnsRenamed(
+        {"id": "id_a", "toks": "t_a", "home": "h_a", "probe": "k"}
+    )
+    b = t.drop("block", "probe").withColumnsRenamed(
+        {"id": "id_b", "toks": "t_b", "home": "h_b"}
+    )
+    pairs = salted_join(
+        a, b, ["bkey"], "id_a", "id_b", salt_threshold
     ).where(F.col("id_a") < F.col("id_b"))
     if length_buckets:
         # a pair with home buckets (βa, βb) meets exactly at buckets
@@ -698,79 +599,6 @@ def token_jaccard_pairs(
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-def salted_two_sided_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    right_salt_col: str,
-    salt_threshold: int = 512,
-    max_salts: int = 2048,
-) -> DataFrame:
-    """Equi-join two DIFFERENT frames on ``keys`` with quadratic-skew
-    splitting — the asymmetric sibling of ``_salted_block_self_join``
-    for blocking schemes whose two sides derive different keys from the
-    same corpus (e.g. PassJoin segment-vs-substring candidate
-    generation, operators/alias.py).
-
-    A key's join fan-out is n_left × n_right, all evaluated inside ONE
-    task by a plain equi-join. Keys whose product exceeds
-    ``salt_threshold²`` are split: the right side takes a deterministic
-    salt u = hash(right_salt_col) mod s, the left side is replicated
-    over all s salts, and the join adds the salt to the key — spreading
-    the hot key over s independently-scheduled cells of ≤
-    salt_threshold² pairs (s = ceil(n_l·n_r / salt_threshold²) clamped
-    to ``max_salts``; the replication cost s·n_l rows is the square
-    root of the pair work it parallelizes). Every (left, right) row
-    pair still meets exactly once — the salt is a partition of the
-    right side. Parallelism is pinned with explicit repartitions on
-    both paths: the join inputs are tiny while outputs are quadratic,
-    and AQE sizes partitions by input bytes (it would coalesce the
-    enumeration back into one task).
-
-    Non-key column names must be disjoint between the two frames.
-    """
-    left = register_persist(left)
-    right = register_persist(right)
-    lc = left.groupBy(keys).agg(F.count(F.lit(1)).alias("_nl"))
-    rc = right.groupBy(keys).agg(F.count(F.lit(1)).alias("_nr"))
-    budget = salt_threshold * salt_threshold
-    heavy = (
-        lc.join(rc, keys)
-        .where(F.col("_nl") * F.col("_nr") > budget)
-        .select(
-            *keys,
-            F.least(
-                F.ceil(F.col("_nl") * F.col("_nr") / F.lit(budget)),
-                F.lit(max_salts),
-            ).alias("_ns"),
-        )
-    )
-    npart = left.sparkSession.sparkContext.defaultParallelism * 2
-    l_light = left.join(F.broadcast(heavy.select(*keys)), keys, "left_anti")
-    r_light = right.join(F.broadcast(heavy.select(*keys)), keys, "left_anti")
-    light = (
-        l_light.repartition(npart, *keys)
-        .join(r_light.repartition(npart, *keys), keys)
-    )
-    l_heavy = (
-        left.join(F.broadcast(heavy), keys)
-        .withColumn(
-            "_u", F.explode_outer(F.sequence(F.lit(0), F.col("_ns") - 1))
-        )
-        .drop("_ns")
-        .repartition(npart, *keys, "_u")
-    )
-    r_heavy = (
-        right.join(F.broadcast(heavy), keys)
-        .withColumn("_u", F.pmod(F.hash(right_salt_col), F.col("_ns")))
-        .drop("_ns")
-        .repartition(npart, *keys, "_u")
-    )
-    return light.unionByName(
-        l_heavy.join(r_heavy, [*keys, "_u"]).drop("_u")
     )
 
 
@@ -958,7 +786,6 @@ def conv_near_dup_pairs(
     transcripts: DataFrame,
     threshold: float = 0.5,
     k: int = 3,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate CONVERSATION pairs — ``(id_a, id_b, jaccard)``
     over conv_ids: MinHash-LSH over the conversation's word k-gram
@@ -1012,9 +839,6 @@ def conv_near_dup_pairs(
         F.col("conv_id").alias("id"),
         F.explode_outer(doc_band_keys(F.col("minhash"))).alias("band"),
     )
-    if max_band_bucket is not None:
-        keep = b.groupBy("band").count().where(F.col("count") <= max_band_bucket)
-        b = b.join(F.broadcast(keep.select("band")), "band")
     cand = (
         b.select("band", F.col("id").alias("id_a"))
         .join(b.select("band", F.col("id").alias("id_b")), "band")
@@ -1094,10 +918,10 @@ def containment_pairs(
     before the explode — the dup_span device), so exchanges carry
     (doc_id, int64) rows only; the df census is one map-side-combinable
     aggregate; pair enumeration blocks on the shingle hash with block
-    population bounded by ``max_df`` and rides the shared salted
-    self-join (all-light at this cap, parallelism pinned against AQE
-    input-byte coalescing); the per-pair intersection count and the
-    two size joins are slim-keyed.
+    population bounded by ``max_df`` and rides ``salted_join`` (every
+    key light at this cap, so only its pinned parallelism against AQE
+    input-byte coalescing acts); the per-pair intersection count and
+    the two size joins are slim-keyed.
     """
     from ner_spark.operators.linking import md5_hash60_col
 
@@ -1127,15 +951,14 @@ def containment_pairs(
         .select("h")
     )
     s = register_persist(sh.join(keep, "h", "left_semi"))
-
-    def _a(df: DataFrame) -> DataFrame:
-        return df.withColumnRenamed("id", "id_a")
-
-    def _b(df: DataFrame) -> DataFrame:
-        return df.withColumnRenamed("id", "id_b")
-
     inter = (
-        _salted_block_self_join(s, _a, _b, key="h")
+        salted_join(
+            s.withColumnRenamed("id", "id_a"),
+            s.withColumnRenamed("id", "id_b"),
+            ["h"],
+            "id_a",
+            "id_b",
+        )
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
@@ -1171,7 +994,6 @@ def incremental_dup_pairs(
     text_col: str = "text",
     threshold: float = 0.5,
     k: int = 3,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup pairs — ``(id_a, id_b, jaccard, pair_kind)``
     with ``pair_kind ∈ {'new-new', 'new-old'}``: the daily-ingest shape
@@ -1207,9 +1029,6 @@ def incremental_dup_pairs(
         "is_new",
         F.explode_outer("bands").alias("band"),
     )
-    if max_band_bucket is not None:
-        keep = b.groupBy("band").count().where(F.col("count") <= max_band_bucket)
-        b = b.join(F.broadcast(keep.select("band")), "band")
     left = b.where(F.col("is_new")).select(
         "band", F.col("id").alias("id_l"), F.col("shingles").alias("sh_l")
     )
@@ -1296,8 +1115,8 @@ def split_leakage(
     split. Output ``(id_a, id_b, jaccard, split_a, split_b)`` with
     split_a <> split_b.
 
-    Scale shape: identical to the proven pair generator (blocking,
-    skew-split salted join, slim scored rows); the split columns are
+    Scale shape: identical to ``minhash_lsh_pairs`` (band blocking, a
+    plain band join, slim scored rows); the split columns are
     two row-local md5 buckets joined from the id dimension — no new
     shuffle surface.
     """

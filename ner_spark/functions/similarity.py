@@ -318,8 +318,10 @@ def ivf_cosine_dup_pairs(
     of the probed cells, the standard recall repair for cell blocking);
     pairs sharing any cell are verified by exact cosine ≥ threshold and
     deduped. Cost = Σ over cells |cell·nprobe|² — quadratic only within
-    a cell, never across the corpus."""
-    from ner_spark.functions.dedup import _salted_block_self_join
+    a cell, never across the corpus; the cell self-join is
+    ``functions/dedup.py:salted_join``, so a hot cell spreads over a
+    grid of bounded join cells."""
+    from ner_spark.functions.dedup import register_persist, salted_join
 
     cent = centroids if centroids is not None else seed_centroids(emb, n_cells, id_col, vec_col)
     t = _assign_cells(
@@ -329,18 +331,15 @@ def ivf_cosine_dup_pairs(
         "v",
         nprobe=nprobe,
     ).withColumn("n", norm_col(F.col("v")))  # once per row, pre-join
-
-    def _a(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_a", "v": "v_a", "n": "n_a"})
-
-    def _b(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_b", "v": "v_b", "n": "n_b"})
+    t = register_persist(t)
+    a = t.withColumnsRenamed({"id": "id_a", "v": "v_a", "n": "n_a"})
+    b = t.withColumnsRenamed({"id": "id_b", "v": "v_b", "n": "n_b"})
 
     # hot Voronoi cells hold the corpus's dense regions — exactly where
     # the quadratic within-cell enumeration lands on one task without the
-    # skew-split (see dedup._salted_block_self_join).
+    # skew-split.
     return (
-        _salted_block_self_join(t, _a, _b, key="cell")
+        salted_join(a, b, ["cell"], "id_a", "id_b")
         .where(F.col("id_a") < F.col("id_b"))
         # score FIRST (vectorized, dot-only — norms precomputed; at worst
         # nprobe× redundant for multi-cell meetings), filter, and only
@@ -743,11 +742,12 @@ def semantic_dedup(
 
     Scale shape: one broadcast centroid pass (max_by aggregation, no
     per-id sort), the within-cell quadratic bounded by cell population
-    (centroid count is the knob) and skew-split by the shared salted
-    self-join, and the verdict join carries only the slim distinct
-    dropped-id set. No corpus cross join, no window over the corpus.
+    (centroid count is the knob) and skew-split by
+    ``functions/dedup.py:salted_join``, and the verdict join carries
+    only the slim distinct dropped-id set. No corpus cross join, no
+    window over the corpus.
     """
-    from ner_spark.functions.dedup import _salted_block_self_join
+    from ner_spark.functions.dedup import register_persist, salted_join
 
     cent = (
         centroids
@@ -760,15 +760,11 @@ def semantic_dedup(
         "id",
         "v",
     ).withColumn("n", norm_col(F.col("v")))  # once per row, pre-join
-
-    def _a(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_a", "v": "v_a", "n": "n_a"})
-
-    def _b(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_b", "v": "v_b", "n": "n_b"})
-
+    t = register_persist(t)
+    a = t.withColumnsRenamed({"id": "id_a", "v": "v_a", "n": "n_a"})
+    b = t.withColumnsRenamed({"id": "id_b", "v": "v_b", "n": "n_b"})
     dropped = (
-        _salted_block_self_join(t, _a, _b, key="cell")
+        salted_join(a, b, ["cell"], "id_a", "id_b")
         .where(F.col("id_a") < F.col("id_b"))
         # score first (vectorized, dot-only — norms precomputed), filter,
         # THEN distinct: the exchange carries only the few over-threshold

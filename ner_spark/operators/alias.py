@@ -33,8 +33,8 @@ char substitution costs 3), matching the DuckDB oracle bit-for-bit.
 Skew: the join key ``(block, l, i, seg)`` concentrates exactly where
 name collisions do (popular tokens, and the zero-length trailing
 segments of names shorter than ``d+1`` bytes, which degrade to a
-length-band block); hot keys ride ``functions/dedup.py:
-salted_two_sided_join`` so no single task evaluates a quadratic
+length-band block); the candidate join is ``functions/dedup.py:
+salted_join``, so no single task evaluates a hot key's quadratic
 candidate block.
 """
 
@@ -66,20 +66,19 @@ def _seg_len(l: Column, k: int, i: int) -> Column:
     return base + F.when(F.lit(i) < rem, F.lit(1)).otherwise(F.lit(0))
 
 
-def alias_pairs(
+PASSJOIN_KEYS = ["block", "l", "i", "seg"]
+
+
+def passjoin_sides(
     names: DataFrame,
     id_col: str = "entity_id",
     name_col: str = "canonical_name",
     block_col: str | None = "entity_type",
     max_dist: int = 2,
-    salt_threshold: int = 512,
-) -> DataFrame:
-    """All pairs of rows whose names are within byte-level edit
-    distance ``max_dist`` (and share ``block_col`` if given):
-    ``(id_a, id_b, dist)`` with ``id_a < id_b``. Lossless — proven
-    against the brute-force quadratic oracle by the driver gate."""
-    from ner_spark.functions.dedup import salted_two_sided_join
-
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the PassJoin candidate join on ``PASSJOIN_KEYS``:
+    the indexed segments ``(id_a, proxy_a, *keys)`` and the probe
+    substrings ``(id_b, proxy_b, *keys)``."""
     d = max_dist
     k = d + 1
     block = F.col(block_col) if block_col else F.lit("")
@@ -147,18 +146,36 @@ def alias_pairs(
             )
         ).alias("e"),
     ).select("id_b", "proxy_b", "block", "e.l", "e.i", "e.seg")
+    return indexed, probe
 
-    cand = salted_two_sided_join(
-        indexed,
-        probe,
-        keys=["block", "l", "i", "seg"],
-        right_salt_col="id_b",
-        salt_threshold=salt_threshold,
+
+def alias_pairs(
+    names: DataFrame,
+    id_col: str = "entity_id",
+    name_col: str = "canonical_name",
+    block_col: str | None = "entity_type",
+    max_dist: int = 2,
+    salt_threshold: int = 512,
+) -> DataFrame:
+    """All pairs of rows whose names are within byte-level edit
+    distance ``max_dist`` (and share ``block_col`` if given):
+    ``(id_a, id_b, dist)`` with ``id_a < id_b``. Lossless — proven
+    against the brute-force quadratic oracle by the correctness gate."""
+    from ner_spark.functions.dedup import register_persist, salted_join
+
+    indexed, probe = passjoin_sides(names, id_col, name_col, block_col, max_dist)
+    cand = salted_join(
+        register_persist(indexed),
+        register_persist(probe),
+        PASSJOIN_KEYS,
+        "id_a",
+        "id_b",
+        salt_threshold,
     )
     verified = (
         cand.where(F.col("id_a") != F.col("id_b"))
         .withColumn(
-            "dist", F.levenshtein("proxy_a", "proxy_b", d)
+            "dist", F.levenshtein("proxy_a", "proxy_b", max_dist)
         )
         .where(F.col("dist") >= 0)
         # slim BEFORE the dedup exchange: ids + the already-computed

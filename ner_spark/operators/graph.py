@@ -973,9 +973,9 @@ def adamic_adar(
       exceeds the few-ULP libm wobble of the dividend by ≥ 14×, so
       Java's Math.log and DuckDB's C libm floor identically;
     * wedge enumeration at a mid z costs deg(z)², so the wedge join
-      rides ``_salted_block_self_join`` (adaptive salted triangle join,
-      see functions/dedup.py) — a hot mid is spread over s² bounded
-      join cells instead of serializing in one task;
+      rides ``functions/dedup.py:salted_join`` — a hot mid is spread
+      over a grid of bounded join cells instead of serializing in one
+      task;
     * mids with deg > ``max_mid_degree`` are EXCLUDED, mirrored
       verbatim in the SQL oracle: a celebrity hub's wedge volume is
       quadratic in its degree while its per-pair contribution
@@ -995,18 +995,14 @@ def adamic_adar(
       per surviving pair is unchanged; only which pairs are emitted
       narrows (asserted by test and by the linkpred oracle row).
     """
-    from ner_spark.functions.dedup import (
-        _salted_block_join,
-        _salted_block_self_join,
-        register_persist,
-    )
+    from ner_spark.functions.dedup import register_persist, salted_join
 
     und = register_persist(undirected_edges(edges))
     adj = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     deg = adj.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    mids = (
+    mids = register_persist(
         adj.join(deg, "a")
         .where((F.col("deg") >= 2) & (F.col("deg") <= max_mid_degree))
         .select(
@@ -1021,12 +1017,10 @@ def adamic_adar(
     def _a(df: DataFrame) -> DataFrame:
         return df.withColumnsRenamed({"id": "id_a", "contrib": "contrib_a"})
 
-    def _b(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_b", "contrib": "contrib_b"})
-
+    b = mids.withColumnsRenamed({"id": "id_b", "contrib": "contrib_b"})
     if restrict is None:
         pairs = (
-            _salted_block_self_join(mids, _a, _b, key="z")
+            salted_join(_a(mids), b, ["z"], "id_a", "id_b")
             .where(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(
@@ -1047,11 +1041,9 @@ def adamic_adar(
         # membership flag joined onto the full adjacency), the exact
         # doubling is halved AFTER the aggregation, where the frame is
         # pairs, not wedges: count and sum are both exactly 2× there.
-        mids_q = _a(mids.join(q, "id", "left_semi"))
+        mids_q = _a(register_persist(mids.join(q, "id", "left_semi")))
         raw = (
-            _salted_block_join(
-                mids_q, _b(mids), key="z", id_left="id_a", id_right="id_b"
-            )
+            salted_join(mids_q, b, ["z"], "id_a", "id_b")
             .where(F.col("id_a") != F.col("id_b"))
             .groupBy(
                 F.least("id_a", "id_b").alias("id_a"),
@@ -2894,16 +2886,13 @@ def neighbor_jaccard(
     common), and jacc_micro = (2·10⁶·common + union) div (2·union) —
     all-integer rounding, bit-identical on any engine.
 
-    Scale shape: wedge enumeration rides the adaptive salted
-    skew-split self-join on the mid key (hot mids spread over s²
+    Scale shape: wedge enumeration rides ``functions/dedup.py:
+    salted_join`` on the mid key (hot mids spread over a grid of
     bounded cells); the pair aggregate map-side combines; degrees
     join on near-unique node ids (broadcast under AQE when the node
     dimension is small).
     """
-    from ner_spark.functions.dedup import (
-        _salted_block_self_join,
-        register_persist,
-    )
+    from ner_spark.functions.dedup import register_persist, salted_join
 
     und = register_persist(undirected_edges(edges))
     adj = und.unionByName(
@@ -2912,20 +2901,19 @@ def neighbor_jaccard(
     deg = register_persist(
         adj.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     )
-    mids = (
+    mids = register_persist(
         adj.join(deg, "a")
         .where((F.col("deg") >= 2) & (F.col("deg") <= max_mid_degree))
         .select(F.col("a").alias("z"), F.col("b").alias("id"))
     )
-
-    def _a(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_a"})
-
-    def _b(df: DataFrame) -> DataFrame:
-        return df.withColumnsRenamed({"id": "id_b"})
-
     pairs = (
-        _salted_block_self_join(mids, _a, _b, key="z")
+        salted_join(
+            mids.withColumnRenamed("id", "id_a"),
+            mids.withColumnRenamed("id", "id_b"),
+            ["z"],
+            "id_a",
+            "id_b",
+        )
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("common_neighbors"))

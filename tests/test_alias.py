@@ -1,5 +1,5 @@
 """PassJoin alias resolution: losslessness vs brute force, byte
-semantics, and skew-split equivalence of the two-sided salted join."""
+semantics, and the salted candidate join's heavy path."""
 
 import itertools
 import random
@@ -59,9 +59,9 @@ def test_alias_pairs_vs_brute_force(spark):
 def test_alias_pairs_randomized_and_salted_heavy_path(spark):
     """Seeded random corpus over a tiny alphabet (dense near-collisions)
     — once at the default threshold (light path) and once at
-    salt_threshold=1 (EVERY key takes the salted two-sided join): both
-    must equal brute force exactly, proving the salt is a partition of
-    the candidate space."""
+    salt_threshold=1 (every key with more than one candidate pair takes
+    the salted cells): both must equal brute force exactly, proving the
+    salt is a partition of the candidate space."""
     rng = random.Random(42)
     rows = []
     for i in range(120):
@@ -87,35 +87,6 @@ def test_alias_pairs_block_none_and_degenerate(spark):
         [], "entity_id string, entity_type string, canonical_name string"
     )
     assert ap(empty).count() == 0
-
-
-@pytest.mark.parametrize("threshold", [1, 512])
-def test_salted_two_sided_join_equals_plain_join(spark, threshold):
-    """salted_two_sided_join must be row-identical to the plain
-    equi-join at any salt threshold (1 = everything heavy)."""
-    from pyspark.sql import functions as F
-
-    from ner_spark.functions.dedup import salted_two_sided_join
-
-    rng = random.Random(7)
-    left = spark.createDataFrame(
-        [(f"L{i}", rng.randint(0, 4)) for i in range(200)], "lid string, k int"
-    )
-    right = spark.createDataFrame(
-        [(f"R{i}", rng.randint(0, 4)) for i in range(150)], "rid string, k int"
-    )
-    got = sorted(
-        (r.k, r.lid, r.rid)
-        for r in salted_two_sided_join(
-            left, right, keys=["k"], right_salt_col="rid",
-            salt_threshold=threshold,
-        ).collect()
-    )
-    exp = sorted(
-        (r.k, r.lid, r.rid)
-        for r in left.join(right, "k").select("k", "lid", "rid").collect()
-    )
-    assert got == exp and got
 
 
 def test_alias_clusters_transitive_chain(spark):

@@ -81,20 +81,20 @@ def test_tagging_deterministic_across_parallelism(spark, fixtures_small):
 
 def test_hot_conv_salting_bounds_groups(spark, fixtures_small):
     """SURVEY §5.2 #5: the fixture's hot conversation (~30% of turns)
-    must spread over n_salts sub-groups for conv-level aggregation, with
+    must spread over every salt sub-group for conv-level aggregation, with
     per-group size bounded and totals preserved."""
     import os
 
     import pyspark.sql.functions as F
 
-    def salt_hot_convs(df, n_salts):
-        # deterministic salt: spreads each conversation over n_salts
+    def salt_hot_convs(df, salts):
+        # deterministic salt: spreads each conversation over `salts`
         # sub-keys (pmod of a turn hash) for two-level aggregation
-        return df.withColumn("salt", F.pmod(F.hash("turn_idx"), F.lit(n_salts)))
+        return df.withColumn("salt", F.pmod(F.hash("turn_idx"), F.lit(salts)))
 
     t = spark.read.parquet(os.path.join(fixtures_small, "transcripts.parquet"))
-    n_salts = 8
-    salted = salt_hot_convs(t, n_salts=n_salts)
+    salts = 8
+    salted = salt_hot_convs(t, salts=salts)
 
     # two-level aggregation: per (conv, salt) then merged per conv
     lvl1 = salted.groupBy("conv_id", "salt").agg(F.count(F.lit(1)).alias("n"))
@@ -110,8 +110,8 @@ def test_hot_conv_salting_bounds_groups(spark, fixtures_small):
     total = t.count()
     assert hot["n"] >= 0.2 * total  # the fixture really is skewed
     hot_groups = lvl1.where(F.col("conv_id") == hot["conv_id"]).collect()
-    assert len(hot_groups) == n_salts  # spread over every salt
-    bound = (hot["n"] / n_salts) * 2  # salt hash is roughly uniform
+    assert len(hot_groups) == salts  # spread over every salt
+    bound = (hot["n"] / salts) * 2  # salt hash is roughly uniform
     assert max(g["n"] for g in hot_groups) <= bound
 
 

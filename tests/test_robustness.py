@@ -1,11 +1,8 @@
-"""Robustness: empty inputs through every stage; the LSH hot-band guard.
+"""Robustness: empty inputs through every stage.
 
 An empty transcripts table must flow through the full pipeline without
 crashing and produce empty (but correctly-schemed) stages — the behavior
 a scheduled production run hits on an empty partition of a date range.
-The ``max_band_bucket`` guard must drop pathological stop-surface bands
-(the quadratic blow-up protection at web scale) while leaving small
-bands untouched.
 """
 
 from __future__ import annotations
@@ -47,30 +44,6 @@ def test_empty_input_full_pipeline(spark, empty_transcripts, tmp_path_factory):
         assert df.count() == 0, stage
     # triples schema survives the empty path
     assert res["triples"].columns == ["conv_id", "turn_idx", "subj", "pred", "obj"]
-
-
-def test_hot_band_bucket_guard(spark):
-    """Docs sharing a stop-surface band beyond the cap produce no pairs
-    from that band; normal bands still match."""
-    from ner_spark.functions.dedup import minhash_lsh_pairs
-
-    # 30 identical "stop" docs (one giant band bucket) + 2 near-dup docs
-    stop = [(i, "aaa bbb ccc ddd eee fff") for i in range(100, 130)]
-    pair = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon eta"),
-    ]
-    df = spark.createDataFrame(stop + pair, "doc_id long, text string")
-
-    unguarded = minhash_lsh_pairs(df, threshold=0.5, k=3)
-    assert unguarded.where(F.col("id_a") >= 100).count() == 30 * 29 / 2
-
-    guarded = minhash_lsh_pairs(df, threshold=0.5, k=3, max_band_bucket=10)
-    got = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
-    # the hot bucket (30 members > cap) is dropped entirely...
-    assert all(a < 100 for (a, b) in got)
-    # ...while the small band still yields the true near-dup pair
-    assert (1, 2) in got
 
 
 def test_cc_numeric_node_ids_local_path(spark):

@@ -46,23 +46,25 @@ def test_token_jaccard_length_buckets_lossless(spark):
         ), f"length-bucket blocking changed results at threshold {thr}"
 
 
-def test_token_jaccard_salted_skew_split_exact(spark):
-    """Force every block through the salted triangle join (threshold 2):
-    the skew split must be invisible in the results."""
-    from ner_spark.functions.dedup import token_jaccard_pairs
+def test_token_jaccard_salted_skew_split_exact(spark, monkeypatch):
+    """Force every block through the salted join (threshold 2): the skew
+    split must be invisible in the results, with and without the
+    MAX_SALTS clamp engaged."""
+    from ner_spark.functions import dedup
 
     d = _docs(spark)
-    plain = sorted(
-        map(tuple, token_jaccard_pairs(d, threshold=0.5, salt_threshold=10**9).collect())
-    )
-    # adaptive path: s_b = ceil(C/2) clamped below by n_salts=3
-    salted = token_jaccard_pairs(d, threshold=0.5, salt_threshold=2, n_salts=3)
-    assert sorted(map(tuple, salted.collect())) == plain
-    # max_salts clamp engaged (every heavy block capped at s_b=4)
-    capped = token_jaccard_pairs(
-        d, threshold=0.5, salt_threshold=2, n_salts=3, max_salts=4
-    )
-    assert sorted(map(tuple, capped.collect())) == plain
+
+    def pairs(**kw):
+        return sorted(
+            map(tuple, dedup.token_jaccard_pairs(d, threshold=0.5, **kw).collect())
+        )
+
+    plain = pairs(salt_threshold=10**9)
+    # adaptive path: s = ceil(C/2) salts per side of every heavy block
+    assert pairs(salt_threshold=2) == plain
+    # clamp engaged: every heavy block capped at s = 4
+    monkeypatch.setattr(dedup, "MAX_SALTS", 4)
+    assert pairs(salt_threshold=2) == plain
 
 
 def test_simhash_band_pairs_complete_vs_bruteforce(spark):

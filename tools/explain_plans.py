@@ -331,7 +331,7 @@ CHECKS = {
             "Jaccard pair generation is fully JVM-side (no Python). The "
             "shared (block × length-bucket) derivation is persisted once "
             "(InMemoryTableScan) and feeds the block census plus both "
-            "join branches; heavy blocks take the salted triangle join "
+            "join branches; heavy blocks take salted_join's salt grid, "
             "whose parallelism is pinned against AQE input-byte "
             "coalescing (the enumeration is output-heavy, input-tiny). "
             "Measured at sf0.1: 49 s → 6.8 s for the same 1.01 M pairs."
@@ -341,7 +341,7 @@ CHECKS = {
         requires=["InMemoryTableScan"],
         forbids=["Python"],
         note=(
-            "Complete pigeonhole banding with the same skew-split join: "
+            "Complete pigeonhole banding with the same salted_join: "
             "band rows persisted once, hot band values salted, light "
             "bands hash-spread over pinned partitions. The first-matching-"
             "band filter dedups multi-band collisions as a scalar "
@@ -713,8 +713,8 @@ CHECKS = {
         forbids=["Python", "CartesianProduct", "SinglePartition"],
         note=(
             "Link-prediction scoring: per-mid wedge enumeration rides "
-            "the adaptive salted skew-split self-join (hot mids spread "
-            "over bounded cells), contributions are int64-quantized "
+            "salted_join (hot mids spread over bounded cells), "
+            "contributions are int64-quantized "
             "before the order-independent sum, and the non-adjacency "
             "filter is a left-anti join (asserted) of slim pairs "
             "against the undirected edge set. Super-hub mids cut at "
@@ -739,7 +739,7 @@ CHECKS = {
         forbids=["Python", "CartesianProduct", "SinglePartition"],
         note=(
             "PassJoin segment blocking: linear O(d^3)-keys-per-row "
-            "candidate generation, two-sided salted join for hot "
+            "candidate generation, salted_join for hot "
             "(block, len, seg) keys (LeftAnti = the light-path heavy-"
             "key exclusion), banded levenshtein verify, score-then-"
             "dedup so the dedup exchange carries (id, id, dist) and "
@@ -1070,8 +1070,8 @@ CHECKS = {
         forbids=["Python", "Window"],
         note=(
             "SemDeDup: the one broadcast-centroid assignment pass is "
-            "persisted (InMemoryTableScan) and feeds BOTH the salted "
-            "within-cell self-join and the final verdict join; the "
+            "persisted (InMemoryTableScan) and feeds BOTH the "
+            "within-cell salted_join and the final verdict join; the "
             "dropped-id side of the verdict join carries only distinct "
             "ids (vectors pruned by Catalyst), and the dropped set "
             "scales with the duplicate fraction so it stays a shuffle "
@@ -1426,7 +1426,7 @@ CHECKS = {
         forbids=["Python"],
         note=(
             "Cross-split near-dup pairs: the proven blocked-LSH pair "
-            "generator (persisted band frame, skew-split salted join) "
+            "generator (minhash_lsh_pairs: a plain band join) "
             "plus two row-local md5-bucket split columns joined from "
             "the id dimension — no new shuffle surface."
         ),
