@@ -800,22 +800,18 @@ def q_dedup_exact(spark, sf_dir):
 def q_minhash_bands(spark, sf_dir):
     """MinHash signatures + LSH banding keys over word 3-gram shingles —
     the blocking layer of near-dup detection, all row-local."""
-    from ner_spark.functions.dedup import doc_band_keys, doc_minhash
+    from ner_spark.functions.dedup import doc_minhash
 
     d = _t(spark, sf_dir, "documents")
-    sigs = doc_minhash(d.select("doc_id", "text"))
-    return (
-        sigs.withColumn("bands", doc_band_keys(F.col("minhash")))
-        .select(
-            "doc_id", F.posexplode_outer("bands").alias("band_idx", "band_key")
-        )
+    return doc_minhash(d.select("doc_id", "text")).select(
+        "doc_id", F.posexplode_outer("bands").alias("band_idx", "band_key")
     )
 
 
 # shared CTE chain: documents → 3-gram shingles → MinHash → band keys →
 # verified near-dup pairs (Jaccard ≥ 0.5) — reused by lsh_dup_pairs and
 # the transitive-closure survivors oracle
-def _lsh_cte(d_clause: str, thr: float = 0.5, hash_verify: bool = False) -> str:
+def _lsh_cte(d_clause: str, hash_verify: bool = False) -> str:
     """LSH candidate/verify CTE chain over any ``d AS (SELECT doc_id,
     text, string_split(text, ' ') AS toks FROM ...)`` clause — shared by
     the document-level and conversation-level near-dup oracles.
@@ -856,29 +852,12 @@ def _lsh_cte(d_clause: str, thr: float = 0.5, hash_verify: bool = False) -> str:
           FROM m, (SELECT unnest(range(0, 4)) AS b) bands),
     p AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
           FROM b a JOIN b c ON a.key = c.key AND a.doc_id < c.doc_id),{verify}
-    dup_pairs AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= {thr})"""
-
-
-_LSH_CTE_BODY = f"""d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-    t AS (SELECT doc_id,
-            CASE WHEN len(toks) < 3 THEN [text]
-                 ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-            END AS sh
-          FROM d),
-    hh AS (SELECT doc_id, sh, {_hs_sql('sh')} AS hs FROM t),
-    m AS (SELECT doc_id, sh, {_sig_sql()} AS sig
-          FROM hh),
-    b AS (SELECT doc_id,
-            b::VARCHAR || '|' || sig[3*b+1]::VARCHAR || '-' || sig[3*b+2]::VARCHAR || '-' || sig[3*b+3]::VARCHAR AS key
-          FROM m, (SELECT unnest(range(0, 4)) AS b) bands),
-    p AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-          FROM b a JOIN b c ON a.key = c.key AND a.doc_id < c.doc_id),
-    j AS (SELECT id_a, id_b,
-            round(len(list_intersect(ta.sh, tb.sh))::DOUBLE
-                  / len(list_distinct(list_concat(ta.sh, tb.sh))), 6) AS jaccard
-          FROM p JOIN t ta ON p.id_a = ta.doc_id JOIN t tb ON p.id_b = tb.doc_id),
     dup_pairs AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.5)"""
+
+
+_LSH_CTE_BODY = _lsh_cte(
+    "d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)"
+)
 
 
 @query(
@@ -4135,7 +4114,7 @@ _TRANSCRIPTS_PQ = os.path.join(FIXTURES_SQL_ROOT, "transcripts.parquet")
       SELECT conv_id AS doc_id,
              string_agg(text, ' ' ORDER BY turn_idx) AS text
       FROM aug GROUP BY conv_id),
-    d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM docs)''', thr=0.5, hash_verify=True)}
+    d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM docs)''', hash_verify=True)}
     SELECT id_a, id_b, jaccard FROM dup_pairs
     """,
 )

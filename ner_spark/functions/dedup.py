@@ -2,7 +2,9 @@
 
 Five families, each a `queries()` entry with a DuckDB oracle:
 * exact           — content-hash groupBy (zero false positives);
-* MinHash + LSH   — shingle → signature → band → bucket self-join;
+* MinHash + LSH   — shingle → signature → band → bucket self-join (the
+                    band join is ``linking.scored_candidate_pairs``, the
+                    one entity linking runs too);
 * SimHash         — 32-bit sign-hash + Hamming-radius pairs;
 * n-gram Jaccard  — token-set Jaccard over blocked candidate pairs;
 * embedding cosine— near-dup pairs in vector space (see similarity.py).
@@ -22,7 +24,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ner_spark.functions.text import content_hash, tokens_col
-from ner_spark.operators.linking import md5_hash60_col
+from ner_spark.operators.linking import (
+    H31_MASK,
+    N_HASHES,
+    band_keys_col,
+    jaccard_col,
+    md5_hash60_col,
+    minhash_perm,
+    minhash_sig_col,
+    scored_candidate_pairs,
+)
 
 SIMHASH_BITS = 32
 # bounds on the salt count of a heavy join key's large side (salted_join)
@@ -90,36 +101,27 @@ def _ensure_parallel(df: DataFrame) -> DataFrame:
     return df
 
 
-def doc_minhash(df: DataFrame, text_col: str = "text", n_hashes: int = 12, k: int = 3) -> DataFrame:
-    """Append shingles + minhash signature columns (row-local)."""
-    from ner_spark.operators.linking import minhash_sig_col
-
+def doc_minhash(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+    """Append shingles, minhash signature and band-key columns (row-local)."""
     df = _ensure_parallel(df)
-    return df.withColumn("shingles", word_shingles_col(F.col(text_col), k)).withColumn(
-        "minhash", minhash_sig_col(F.col("shingles"), n_hashes)
+    return (
+        df.withColumn("shingles", word_shingles_col(F.col(text_col), k))
+        .withColumn("minhash", minhash_sig_col(F.col("shingles")))
+        .withColumn("bands", band_keys_col(F.col("minhash")))
     )
 
 
-def doc_band_keys(sig: Column, band_rows: int = 3, n_bands: int = 4) -> Column:
-    from ner_spark.functions.colutil import let
-
-    return let(
-        sig,
-        lambda s: F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.concat(
-                b.cast("string"),
-                F.lit("|"),
-                F.array_join(
-                    F.transform(
-                        F.slice(s, b * band_rows + 1, band_rows),
-                        lambda h: h.cast("string"),
-                    ),
-                    "-",
-                ),
-            ),
-        ),
-    )
+def _doc_pairs(sigs: DataFrame, id_col: str, threshold: float, both_new: bool = False) -> DataFrame:
+    """``(id_a, id_b, jaccard[, both_new])`` over ``doc_minhash`` rows with
+    a boolean ``new`` column: the band join of
+    ``linking.scored_candidate_pairs``, the shingle Jaccard rounded to 6
+    digits before the dedup and the threshold after it."""
+    return scored_candidate_pairs(
+        sigs.select(F.col(id_col).alias("node_id"), "shingles", "new", "bands"),
+        score=lambda a, b: F.round(jaccard_col(a, b), 6),
+        threshold=threshold,
+        both_new=both_new,
+    ).withColumnsRenamed({"node_a": "id_a", "node_b": "id_b", "score": "jaccard"})
 
 
 def minhash_lsh_pairs(
@@ -129,32 +131,12 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
     k: int = 3,
 ) -> DataFrame:
-    """LSH candidate pairs verified by exact shingle Jaccard ≥ threshold.
+    """LSH candidate pairs verified by exact shingle Jaccard ≥ threshold:
+    the band join with every document new.
 
     ``k`` = shingle width in words (k=1 ⇒ token-set Jaccard)."""
-    from ner_spark.operators.linking import jaccard_col
-
-    sigs = doc_minhash(df, text_col, k=k).withColumn(
-        "bands", doc_band_keys(F.col("minhash"))
-    )
-    b = sigs.select(
-        # explode_outer: bands is always exactly 4 keys, but the non-outer
-        # Generate makes the optimizer infer a size()>0 filter that gets
-        # pushed BELOW the adaptive repartition carrying the whole hash
-        # expression — re-serializing the pass the Exchange exists to
-        # parallelize. Outer generate ≡ same rows here, no inferred filter.
-        F.col(id_col).alias("id"), "shingles", F.explode_outer("bands").alias("band")
-    )
-    left = b.select("band", F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    right = b.select("band", F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        left.join(right, "band")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("jaccard", F.round(jaccard_col(F.col("sh_a"), F.col("sh_b")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sigs = doc_minhash(df, text_col, k=k).withColumn("new", F.lit(True))
+    return _doc_pairs(sigs, id_col, threshold)
 
 
 def near_dup_survivors(
@@ -248,9 +230,11 @@ def release_persisted_blocks() -> int:
     queries, but a long-lived driver (notebook, service) would otherwise
     hold up to 8 persisted derivations in executor storage memory long
     after the queries finish. Call this from query/batch teardown
-    (bench.py and run_pipeline do) once the pair results are
-    materialized; unpersisting is always safe — re-executing a stale
-    plan merely recomputes."""
+    (``bench.py`` and the ``run_pipeline.py`` script do) once the pair
+    results are materialized; unpersisting is always safe — re-executing
+    a stale plan merely recomputes. ``pipeline.run_pipeline`` and
+    ``run_incremental`` do not call it: they release their own linking
+    frames (``graph.release_checkpoint``)."""
     n = 0
     while _PERSISTED:
         try:
@@ -538,8 +522,6 @@ def token_jaccard_pairs(
     duplication into the join. ``length_buckets=False`` recovers the
     single-key join (useful when the caller's block key is already
     fine-grained, e.g. an IVF cell)."""
-    from ner_spark.operators.linking import jaccard_col
-
     t = df.select(
         F.col(block_col).alias("block"),
         F.col(id_col).alias("id"),
@@ -700,8 +682,6 @@ def conv_shingle_rows(
     """
     from pyspark.sql import Window
 
-    from ner_spark.operators.linking import md5_hash60_col
-
     turns = transcripts.select(
         "conv_id", "turn_idx", F.split(F.col("text"), " ").alias("tk")
     )
@@ -782,6 +762,19 @@ def conv_shingle_rows(
     return out.dropDuplicates(["conv_id", "h"]) if distinct else out
 
 
+def conv_minhash(sh: DataFrame) -> DataFrame:
+    """``(conv_id, minhash)`` over ``conv_shingle_rows``: element i is
+    the plain ``min`` aggregate of ``linking.minhash_perm(i, h31)`` —
+    map-side combinable, O(N_HASHES) state, and duplicate shingle rows
+    cannot change a min, so no distinct pass is needed."""
+    h31 = F.col("h").bitwiseAND(F.lit(H31_MASK))
+    return sh.groupBy("conv_id").agg(
+        F.array(*[F.min(minhash_perm(i, h31)) for i in range(N_HASHES)]).alias(
+            "minhash"
+        )
+    )
+
+
 def conv_near_dup_pairs(
     transcripts: DataFrame,
     threshold: float = 0.5,
@@ -800,10 +793,9 @@ def conv_near_dup_pairs(
     Scale shape — the round-3 design fix: nothing materializes a
     conversation-sized buffer anywhere.  Shingles live as rows
     (``conv_shingle_rows``); the 12 signature minima are plain ``min``
-    aggregates over the per-shingle affine rehashes (map-side
-    combinable, O(n_hashes) state — duplicate shingles cannot change a
-    min, so no distinct pass is needed); band keys derive row-locally
-    from the 12-element signature; the band self-join carries ONLY
+    aggregates (``conv_minhash``); band keys derive row-locally from the
+    12-element signature; the band join is
+    ``linking.scored_candidate_pairs`` unscored, so it carries ONLY
     (band, conv_id); and the verify stage counts hash intersections as
     a (candidate-semi-joined) row join instead of intersecting two
     carried shingle arrays.  Jaccard over distinct 60-bit hashes equals
@@ -811,8 +803,6 @@ def conv_near_dup_pairs(
     the DuckDB oracle mirrors the hash-set form exactly, so the gate
     compares like with like.
     """
-    from ner_spark.operators.linking import H31_MASK, MERSENNE61, MINHASH_A, MINHASH_B
-
     # RAW gram stream — no corpus-wide dropDuplicates: the minhash minima
     # below are duplicate-insensitive, so the global distinct exchange
     # (the single biggest constant in the r04 profile) is pure waste for
@@ -822,29 +812,13 @@ def conv_near_dup_pairs(
     sh = register_persist(
         conv_shingle_rows(_ensure_parallel(transcripts), k, distinct=False)
     )
-
-    def perm(i: int):
-        h31 = F.col("h").bitwiseAND(F.lit(H31_MASK))
-        return (h31 * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(
-            MERSENNE61
-        )
-
-    n_hashes = len(MINHASH_A)
-    sigs = sh.groupBy("conv_id").agg(
-        F.array(
-            *[F.min(perm(i)).alias(f"m{i}") for i in range(n_hashes)]
-        ).alias("minhash")
+    sigs = conv_minhash(sh).select(
+        F.col("conv_id").alias("node_id"),
+        F.lit(True).alias("new"),
+        band_keys_col(F.col("minhash")).alias("bands"),
     )
-    b = sigs.select(
-        F.col("conv_id").alias("id"),
-        F.explode_outer(doc_band_keys(F.col("minhash"))).alias("band"),
-    )
-    cand = (
-        b.select("band", F.col("id").alias("id_a"))
-        .join(b.select("band", F.col("id").alias("id_b")), "band")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b")
+    cand = scored_candidate_pairs(sigs, score=None).withColumnsRenamed(
+        {"node_a": "id_a", "node_b": "id_b"}
     )
     # verify: |A ∩ B| via a row join over the candidate conversations'
     # shingle hashes (semi-joined first so only candidate rows shuffle)
@@ -923,8 +897,6 @@ def containment_pairs(
     input-byte coalescing acts); the per-pair intersection count and
     the two size joins are slim-keyed.
     """
-    from ner_spark.operators.linking import md5_hash60_col
-
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda x: x != ""
     )
@@ -1010,61 +982,24 @@ def incremental_dup_pairs(
     this over (base, delta) and keeping batch pairs with >= 1 delta
     side yields the identical pair set — asserted by test and by the
     oracle, which applies the same one-side-is-new filter to the shared
-    banding CTE. Delta-delta pairs meet in both orientations and
-    multi-band meetings repeat candidates; both collapse in the slim
-    (id_a, id_b) dedup. ``pair_kind`` is what downstream routing needs:
+    banding CTE. It is the batch band join with only the delta marked
+    new: multi-band meetings collapse in its slim (id_a, id_b) dedup.
+    ``pair_kind`` is what downstream routing needs:
     'new-old' drops the new doc (canonical already exists), 'new-new'
     feeds the survivor collapse.
     """
     sig_b = doc_minhash(base.select(F.col(id_col), F.col(text_col)), text_col, k=k)
     sig_d = doc_minhash(delta.select(F.col(id_col), F.col(text_col)), text_col, k=k)
-    sigs = (
-        sig_b.withColumn("is_new", F.lit(False))
-        .unionByName(sig_d.withColumn("is_new", F.lit(True)))
-        .withColumn("bands", doc_band_keys(F.col("minhash")))
+    sigs = sig_b.withColumn("new", F.lit(False)).unionByName(
+        sig_d.withColumn("new", F.lit(True))
     )
-    b = sigs.select(
-        F.col(id_col).alias("id"),
-        "shingles",
-        "is_new",
-        F.explode_outer("bands").alias("band"),
-    )
-    left = b.where(F.col("is_new")).select(
-        "band", F.col("id").alias("id_l"), F.col("shingles").alias("sh_l")
-    )
-    right = b.select(
-        "band",
-        F.col("id").alias("id_r"),
-        F.col("shingles").alias("sh_r"),
-        F.col("is_new").alias("new_r"),
-    )
-    from ner_spark.operators.linking import jaccard_col
-
-    ordered = (
-        left.join(right, "band")
-        .where(F.col("id_l") != F.col("id_r"))
-        .select(
-            F.least("id_l", "id_r").alias("id_a"),
-            F.greatest("id_l", "id_r").alias("id_b"),
-            # the left side is always new; the right side decides kind
-            F.when(F.col("new_r"), F.lit("new-new"))
-            .otherwise(F.lit("new-old"))
-            .alias("pair_kind"),
-            F.when(F.col("id_l") < F.col("id_r"), F.col("sh_l"))
-            .otherwise(F.col("sh_r"))
-            .alias("sh_a"),
-            F.when(F.col("id_l") < F.col("id_r"), F.col("sh_r"))
-            .otherwise(F.col("sh_l"))
-            .alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        ordered.withColumn(
-            "jaccard", F.round(jaccard_col(F.col("sh_a"), F.col("sh_b")), 6)
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard", "pair_kind")
+    return _doc_pairs(sigs, id_col, threshold, both_new=True).select(
+        "id_a",
+        "id_b",
+        "jaccard",
+        F.when(F.col("both_new"), F.lit("new-new"))
+        .otherwise(F.lit("new-old"))
+        .alias("pair_kind"),
     )
 
 
@@ -1162,7 +1097,6 @@ def chunk_dedup(
     flag join rides the uniform hash key.
     """
     from ner_spark.functions.pack import chunk_windows
-    from ner_spark.operators.linking import md5_hash60_col
 
     ch = chunk_windows(
         df, size=size, stride=size, id_col=id_col, text_col=text_col

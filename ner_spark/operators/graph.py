@@ -145,6 +145,18 @@ def _release(*frames) -> None:
             df.unpersist()
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """``_release`` a localCheckpointed frame together with every cached
+    frame built on it (Spark's cascading uncache; no job). Those frames
+    could not recompute once the checkpoint's blocks are gone, and their
+    builders may keep no handle to them: the band frame that
+    ``linking.scored_candidate_pairs`` persists over the linking node
+    checkpoint, for one."""
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cache.uncacheQuery(df._jdf, True, False)
+    _release(df)
+
+
 @contextmanager
 def checkpointed(df: DataFrame):
     """An eager ``localCheckpoint`` of ``df`` for the ``with`` block,

@@ -45,9 +45,10 @@ Why each piece of the merge is exact:
 
 Scale notes: every join here keys on node_id / norm-key
 (high-cardinality); star edges add ≤1 row per non-canonical node; the
-delta band join is the batch one (``linking.scored_candidate_pairs``)
-with only the new nodes marked ``new``, so it keeps the batch path's
-score-then-dedup slim-exchange ordering.
+delta band join is the codebase's one MinHash-LSH band join
+(``linking.scored_candidate_pairs``, which batch linking and the dedup
+near-dup generators also run) with only the new nodes marked ``new``,
+so it keeps the batch path's score-then-dedup slim-exchange ordering.
 """
 
 from __future__ import annotations

@@ -13,9 +13,11 @@ Scale design (the part the reference, a single-box repo, never had):
 * the only wide operation is the band-key join. Band keys are
   ``entity_type|band|h1-h2-h3`` — high cardinality; residual hot
   buckets are split by AQE skew-join handling from the session defaults;
-* one band join serves the batch and the incremental build
-  (``scored_candidate_pairs``): only ``new`` nodes probe the band index,
-  and a batch build is the case where every node is new;
+* ``scored_candidate_pairs`` is the codebase's one MinHash-LSH band
+  join: batch and incremental linking, and the document and
+  conversation near-dup generators of ``functions.dedup``. Only ``new``
+  rows probe the band index; a batch build is the case where every row
+  is new;
 * the verify score is computed INSIDE the band join (once per band
   collision, row-local and cheap) and the (node_a, node_b) dedup runs
   after it, so the dedup exchange carries slim scored rows — never the
@@ -24,6 +26,9 @@ Scale design (the part the reference, a single-box repo, never had):
 """
 
 from __future__ import annotations
+
+import functools
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -82,45 +87,50 @@ def shingle_hashes_col(shingles: Column) -> Column:
     )
 
 
-def minhash_sig_from_hashes(hashes: Column, n_hashes: int = N_HASHES) -> Column:
-    """array<long> length ``n_hashes``; element i =
-    min over shingle hashes h of (a_i*h + b_i) mod M61. Row-local, pure
-    64-bit arithmetic — no digest work beyond the one pass in
-    ``shingle_hashes_col``, which is let-bound so project collapse cannot
-    re-inline the md5 pass once per signature element."""
-    from ner_spark.functions.colutil import let
+def minhash_perm(i: int, h: Column) -> Column:
+    """Affine rehash ``i`` of a 31-bit shingle hash: ``(a_i*h + b_i) mod
+    M61`` (kg.minhash_signature). Signature element i is its minimum over
+    the shingles — ``array_min`` row-locally, ``min`` as an aggregate."""
+    return (h * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(MERSENNE61)
 
-    def perm(a: int, b: int):
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE61)
+
+def minhash_sig_from_hashes(hashes: Column) -> Column:
+    """array<long> of the N_HASHES ``minhash_perm`` minima over the
+    shingle hashes. Row-local, pure 64-bit arithmetic — no digest work
+    beyond the one pass in ``shingle_hashes_col``, which is let-bound so
+    project collapse cannot re-inline the md5 pass once per signature
+    element."""
+    from ner_spark.functions.colutil import let
 
     return let(
         hashes,
         lambda hs: F.array(
             *[
-                F.array_min(F.transform(hs, perm(MINHASH_A[i], MINHASH_B[i])))
-                for i in range(n_hashes)
+                F.array_min(F.transform(hs, functools.partial(minhash_perm, i)))
+                for i in range(N_HASHES)
             ]
         ),
     )
 
 
-def minhash_sig_col(shingles: Column, n_hashes: int = N_HASHES) -> Column:
-    return minhash_sig_from_hashes(shingle_hashes_col(shingles), n_hashes)
+def minhash_sig_col(shingles: Column) -> Column:
+    return minhash_sig_from_hashes(shingle_hashes_col(shingles))
 
 
-def band_keys_col(entity_type: Column, sig: Column) -> Column:
-    """array<string> of N_BANDS keys ``type|band|h-h-h`` (kg.band_keys).
-    ``sig`` is let-bound: each band slices the SAME evaluated signature,
-    so an inlined upstream signature expression is computed once."""
+def band_keys_col(sig: Column, entity_type: Column | None = None) -> Column:
+    """array<string> of N_BANDS keys ``band|h-h-h`` over a signature,
+    prefixed ``entity_type|`` when linking (kg.band_keys). ``sig`` is
+    let-bound: each band slices the SAME evaluated signature, so an
+    inlined upstream signature expression is computed once."""
     from ner_spark.functions.colutil import let
 
+    prefix = [] if entity_type is None else [entity_type, F.lit("|")]
     return let(
         sig,
         lambda s: F.transform(
             F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
             lambda b: F.concat(
-                entity_type,
-                F.lit("|"),
+                *prefix,
                 b.cast("string"),
                 F.lit("|"),
                 F.array_join(
@@ -175,68 +185,82 @@ def with_signatures(nodes_df: DataFrame) -> DataFrame:
         .withColumn("sh_hashes", shingle_hashes_col(F.col("shingles")))
         .withColumn("minhash", minhash_sig_from_hashes(F.col("sh_hashes")))
         .withColumn(
-            "bands", band_keys_col(F.col("entity_type"), F.col("minhash"))
+            "bands", band_keys_col(F.col("minhash"), F.col("entity_type"))
         )
         .drop("sh_hashes")
     )
 
 
-def scored_candidate_pairs(sigs: DataFrame) -> DataFrame:
-    """Linked pairs ``(node_a < node_b, score)`` with at least one ``new``
-    endpoint: band join → score → dedup → threshold, in that order.
+def scored_candidate_pairs(
+    sigs: DataFrame,
+    score: Callable[[Column, Column], Column] | None = jaccard_col,
+    threshold: float = JACCARD_THRESHOLD,
+    both_new: bool = False,
+) -> DataFrame:
+    """The MinHash-LSH band join: pairs ``(node_a < node_b, score)`` with
+    at least one ``new`` endpoint — band join → score → dedup →
+    threshold, in that order. Entity linking (batch and delta) and the
+    document and conversation near-dup generators all run this one join.
 
-    ``sigs`` holds ``with_signatures`` rows plus a boolean ``new``
-    column. Only new rows probe the band index (left = new rows, right
-    = all rows), so an incremental build scores just the pairs that can
-    change connectivity; a batch build passes ``new = true`` and the
-    join is the plain self-join over ``node_a < node_b``. A new-new pair
-    is kept once (``id_l < id_r``), a new-old pair once (``~new_r``).
+    ``sigs`` holds ``node_id``, ``bands`` (``band_keys_col``), a boolean
+    ``new`` column and, when scored, ``shingles``. Only new rows probe
+    the band index (left = new rows, right = all rows), so an
+    incremental build scores just the pairs that can change its output;
+    a batch build passes ``new = true`` and the join is the plain
+    self-join over ``node_a < node_b``. A new-new pair is kept once
+    (``id_l < id_r``), a new-old pair once (``~new_r``).
 
-    Each band collision is scored INSIDE the join's codegen span and
-    only then deduped, so the dropDuplicates exchange carries slim
-    (node_a, node_b, score) rows instead of two shingle arrays per row
-    (same ordering as ``similarity.ivf_cosine_dup_pairs`` — exchanges
-    never carry vectors). Jaccard is deterministic, so scoring before
-    dedup is value-identical to dedup-then-score; a pair sharing k bands
-    computes the (cheap, row-local) score k times instead of shuffling
-    its arrays once — the right trade at scale where the dedup exchange
-    dominates.
+    ``score(shingles_l, shingles_r)`` is computed INSIDE the join's
+    codegen span and only then deduped, so the dropDuplicates exchange
+    carries slim (node_a, node_b, score) rows instead of two shingle
+    arrays per row (same ordering as ``similarity.ivf_cosine_dup_pairs``
+    — exchanges never carry vectors). A deterministic score makes this
+    value-identical to dedup-then-score; a pair sharing k bands computes
+    the (cheap, row-local) score k times instead of shuffling its arrays
+    once — the right trade at scale where the dedup exchange dominates.
+    Pairs with ``score >= threshold`` are kept. ``score=None`` returns
+    the deduped candidates ``(node_a, node_b)``, and no shingles enter
+    the join. ``both_new`` adds that boolean column (the probed right
+    row is new; the left one always is).
     """
     from ner_spark.functions.dedup import register_persist
 
     # the exploded band frame feeds BOTH join sides; without a persist
     # each side re-runs the whole signature pass (md5 per shingle +
-    # minhash + band keys) over the node dimension — measured ~2x the
-    # band-join cost at sf0.1. Same bounded-LRU registry as the dedup
-    # pair generators.
+    # minhash + band keys) — measured ~2x the band-join cost at sf0.1.
+    # Same bounded-LRU registry as the dedup pair generators.
+    # explode_outer: bands always holds N_BANDS keys, but a non-outer
+    # Generate makes the optimizer infer a size()>0 filter that it pushes
+    # BELOW an adaptive repartition (dedup._ensure_parallel) carrying the
+    # whole hash pass. Outer generate ≡ same rows here, no inferred filter.
+    sh = ["shingles"] if score else []
     b = register_persist(
-        sigs.select(
-            "node_id", "shingles", "new", F.explode_outer("bands").alias("band")
-        )
+        sigs.select("node_id", *sh, "new", F.explode_outer("bands").alias("band"))
     )
     left = b.where(F.col("new")).select(
         F.col("band"),
         F.col("node_id").alias("id_l"),
-        F.col("shingles").alias("shingles_l"),
+        *[F.col(c).alias(f"{c}_l") for c in sh],
     )
     right = b.select(
         F.col("band"),
         F.col("node_id").alias("id_r"),
-        F.col("shingles").alias("shingles_r"),
+        *[F.col(c).alias(f"{c}_r") for c in sh],
         F.col("new").alias("new_r"),
     )
     matched = left.join(right, "band").where(
         (F.col("id_l") < F.col("id_r")) | ~F.col("new_r")
     )
-    return (
-        matched.select(
-            F.least("id_l", "id_r").alias("node_a"),
-            F.greatest("id_l", "id_r").alias("node_b"),
-            jaccard_col(F.col("shingles_l"), F.col("shingles_r")).alias("score"),
-        )
-        .dropDuplicates(["node_a", "node_b"])
-        .where(F.col("score") >= JACCARD_THRESHOLD)
-    )
+    cols = [
+        F.least("id_l", "id_r").alias("node_a"),
+        F.greatest("id_l", "id_r").alias("node_b"),
+    ]
+    if score:
+        cols.append(score(F.col("shingles_l"), F.col("shingles_r")).alias("score"))
+    if both_new:
+        cols.append(F.col("new_r").alias("both_new"))
+    pairs = matched.select(*cols).dropDuplicates(["node_a", "node_b"])
+    return pairs.where(F.col("score") >= threshold) if score else pairs
 
 
 def link_edges(mentions_exploded: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -38,7 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ner_spark.operators.components import canonicalize_triples, connected_components
 from ner_spark.operators.extraction import mentions_to_triples
-from ner_spark.operators.graph import materialize_edges, materialize_nodes
+from ner_spark.operators.graph import (
+    materialize_edges,
+    materialize_nodes,
+    release_checkpoint,
+)
 from ner_spark.operators.linking import link_edges
 from ner_spark.operators.manifest import manifest_rows, run_stage
 from ner_spark.operators.relate import explode_mentions, extract_relations
@@ -100,7 +104,9 @@ def build_mentions(transcripts: DataFrame) -> DataFrame:
 def kg_stages(transcripts: DataFrame, stage: Stage) -> dict[str, DataFrame]:
     """The batch KG stage graph over ``transcripts``: the nine ``STAGES``
     in order, each materialized by ``stage(name, compute)``. Returns the
-    materialized frames keyed by stage name."""
+    materialized frames keyed by stage name. A materialized frame must
+    not read its compute's lineage: the linking frames are released once
+    both linking stages are materialized."""
     out: dict[str, DataFrame] = {}
     mentions = out["mentions"] = stage(
         "mentions", lambda: build_mentions(transcripts)
@@ -115,6 +121,10 @@ def kg_stages(transcripts: DataFrame, stage: Stage) -> dict[str, DataFrame]:
     links = functools.cache(lambda: link_edges(explode_mentions(mentions)))
     surfaces = out["surface_nodes"] = stage("surface_nodes", lambda: links()[0])
     edges = out["link_edges"] = stage("link_edges", lambda: links()[1])
+    # no later stage reads the linking frames: drop the node checkpoint
+    # and the band frame persisted over it
+    if links.cache_info().currsize:
+        release_checkpoint(links()[0])
     assignment = out["assignment"] = stage(
         "assignment",
         lambda: connected_components(
@@ -252,5 +262,9 @@ def run_incremental(
     relations = out["relations"] = stage("relations", lambda: inc()["relations"])
     surfaces = out["surface_nodes"] = stage("surface_nodes", lambda: inc()["surfaces"])
     assignment = out["assignment"] = stage("assignment", lambda: inc()["assignment"])
+    # the tail reads the published stages: drop the merged surface
+    # checkpoint and the band frame persisted over it
+    if inc.cache_info().currsize:
+        release_checkpoint(inc()["surfaces"])
     out.update(kg_tail(surfaces, assignment, relations, stage))
     return out

@@ -223,3 +223,23 @@ def test_incremental_crash_resume(spark, incremental_base, tmp_path, monkeypatch
         spark, monkeypatch, lambda: run_incremental(spark, delta, cfg, "base"),
         out_dir, clean, "assignment", step,
     )
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_runs_leave_nothing_persisted(spark, transcripts, incremental_base, tmp_path):
+    """A run releases what it persisted once the last stage that reads it
+    is published (the linking node checkpoint and the band frame over
+    it): a long-lived driver keeps no blocks per run."""
+    before = _persistent_rdds(spark)
+    run_pipeline(spark, transcripts, PipelineConfig(str(tmp_path / "batch"), "r1"))
+    assert _persistent_rdds(spark) - before == set()
+
+    base_dir, delta, _ = incremental_base
+    out_dir = str(tmp_path / "kg")
+    shutil.copytree(base_dir, out_dir)
+    before = _persistent_rdds(spark)
+    run_incremental(spark, delta, PipelineConfig(out_dir, "day1"), "base")
+    assert _persistent_rdds(spark) - before == set()

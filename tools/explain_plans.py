@@ -39,15 +39,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from ner_spark.entry_queries import QUERIES, _fx  # noqa: E402
 from ner_spark.functions.bpe import _PAIRS_EXPR, word_histogram  # noqa: E402
 from ner_spark.functions.datasets import mention_contexts  # noqa: E402
-from ner_spark.functions.dedup import conv_shingle_rows  # noqa: E402
+from ner_spark.functions.dedup import conv_minhash, conv_shingle_rows  # noqa: E402
 from ner_spark.operators import graph  # noqa: E402
 from ner_spark.operators.alias import alias_pairs  # noqa: E402
-from ner_spark.operators.linking import (  # noqa: E402
-    H31_MASK,
-    MERSENNE61,
-    MINHASH_A,
-    MINHASH_B,
-)
 from ner_spark.operators.relate import extract_relations  # noqa: E402
 from ner_spark.operators.segments import tool_transitions, topic_segments  # noqa: E402
 from ner_spark.pipeline import build_mentions  # noqa: E402
@@ -106,21 +100,6 @@ def _lpa_round(edges):
     und = graph.weighted_undirected(edges)
     labels = und.select("x").distinct().withColumn("lbl", F.col("x"))
     return graph.lpa_round(und, labels)
-
-
-def _near_dup_sig(transcripts):
-    """The minhash signature stage: turn-local shingle rows + plain min
-    aggregates."""
-    sh = conv_shingle_rows(transcripts, include_tiny=False, distinct=False)
-    h31 = F.col("h").bitwiseAND(F.lit(H31_MASK))
-    return sh.groupBy("conv_id").agg(
-        F.array(
-            *[
-                F.min((h31 * F.lit(a) + F.lit(b)) % F.lit(MERSENNE61))
-                for a, b in zip(MINHASH_A, MINHASH_B)
-            ]
-        ).alias("minhash")
-    )
 
 
 def _bpe_round(spark, sf_dir):
@@ -217,7 +196,13 @@ FRAMES = {
     ),
     "kg_topic_segments": _on_goldens(topic_segments, "transcripts"),
     "tool_transitions": _on_goldens(tool_transitions, "transcripts"),
-    "conv_near_dup_sig": _on_goldens(_near_dup_sig, "transcripts"),
+    # the signature stage: turn-local shingle rows + plain min aggregates
+    "conv_near_dup_sig": _on_goldens(
+        lambda t: conv_minhash(
+            conv_shingle_rows(t, include_tiny=False, distinct=False)
+        ),
+        "transcripts",
+    ),
     "build_mentions": _on_goldens(build_mentions, "transcripts"),
     "extract_relations": _on_goldens(
         lambda t: extract_relations(build_mentions(t)), "transcripts"
@@ -289,6 +274,20 @@ CHECKS = {
             "SimHash is pure JVM-side higher-order aggregation: no "
             "Exchange, no Python worker — the whole operator rides the "
             "scan tasks."
+        ),
+    ),
+    "lsh_dup_pairs": dict(
+        requires=["InMemoryTableScan"],
+        forbids=["SortAggregate", "Python"],
+        note=(
+            "Document near-dup pairs: the one band join "
+            "(linking.scored_candidate_pairs) with every document new. "
+            "The exploded band frame is persisted once, so both join "
+            "sides read it (InMemoryTableScan) instead of re-running the "
+            "signature pass each; the Jaccard score is computed inside "
+            "the join and the dedup is a HashAggregate over slim scored "
+            "rows, never the two shingle arrays (SortAggregate asserted "
+            "absent)."
         ),
     ),
     "minhash_bands": dict(
@@ -1113,17 +1112,18 @@ CHECKS = {
         ),
     ),
     "dedup_incremental": dict(
-        requires=["SortAggregate", "BroadcastHashJoin"],
-        forbids=["Python", "CartesianProduct", "Window"],
+        requires=["HashAggregate", "BroadcastHashJoin"],
+        forbids=["Python", "CartesianProduct", "Window", "SortAggregate"],
         note=(
-            "Incremental near-dup ingest: the band join is BIPARTITE — "
-            "only delta-side rows enter the left input, so base×base "
+            "Incremental near-dup ingest: the one band join "
+            "(linking.scored_candidate_pairs) with only the delta marked "
+            "new, so only delta-side rows enter the left input, base×base "
             "candidates never enumerate, and a small daily delta rides "
             "a BroadcastHashJoin against the full-corpus band stream "
-            "(AQE falls back to a shuffle join for a big delta); "
-            "candidate dedup is one partial+final aggregate and the "
-            "exact-Jaccard verify is a row-local higher-order "
-            "intersect."
+            "(AQE falls back to a shuffle join for a big delta). The "
+            "exact-Jaccard score is computed inside the join, so the "
+            "candidate dedup is a HashAggregate over slim scored rows "
+            "(SortAggregate over carried shingle arrays asserted absent)."
         ),
     ),
     "kg_cloze_questions": dict(
@@ -1426,7 +1426,7 @@ CHECKS = {
         forbids=["Python"],
         note=(
             "Cross-split near-dup pairs: the proven blocked-LSH pair "
-            "generator (minhash_lsh_pairs: a plain band join) "
+            "generator (minhash_lsh_pairs: the one band join) "
             "plus two row-local md5-bucket split columns joined from "
             "the id dimension — no new shuffle surface."
         ),
